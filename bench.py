@@ -244,8 +244,8 @@ HEADLINE = [
     # for scale_ratio_large anyway.
     "minhash_pairs_md5_capped",
     "pq_topk_reranked",
-    # round-13 third wave: the sf-scaling new rows (the multimodal
-    # fixture queries — h264/mp4/exif — are HEADLINE-excluded by the
+    # round-13 third wave: the sf-scaling new rows (the image fixture
+    # queries, exif included, are HEADLINE-excluded by the
     # self-contained-fixture precedent)
     "subtitle_cues_parse",
     "ass_cues_parse",

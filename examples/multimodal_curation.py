@@ -1,19 +1,12 @@
-"""Multimodal curation tour (r12): real decode across all three
-modalities, then the curation ops a 100-TB multimodal corpus needs.
+"""Image curation tour (r12): real decode, then the curation ops a
+100-TB image corpus needs.
 
 Every decoder here is REAL (``is_stub=false``) and dependency-free —
-pure numpy + stdlib against the public format specs:
-
-1. IMAGES — a mixed-format corpus (BMP + PNG + GIF + PackBits-TIFF +
-   JPEG, 30 byte-distinct files hiding 6 distinct pictures) runs ONE
-   sniffing decode, gets exact integer pixel stats, and perceptual
-   pHash dedup recovers the 6 re-encode clusters that byte-digest
-   dedup cannot see;
-2. AUDIO — mixed WAV/AIFF/AU (incl. G.711 mu-law) payloads run one
-   sniffing decode into exact integer waveform stats;
-3. VIDEO — MJPEG AVI clips sample every 2nd frame at the container
-   walk (entropy decode is paid only for frames kept) through the real
-   baseline-JPEG decoder.
+pure numpy + stdlib against the public format specs. A mixed-format
+corpus (BMP + PNG + GIF + PackBits-TIFF + JPEG, 30 byte-distinct files
+hiding 6 distinct pictures) runs ONE sniffing decode, gets exact
+integer pixel stats, and perceptual pHash dedup recovers the 6
+re-encode clusters that byte-digest dedup cannot see.
 
 Usage: python examples/multimodal_curation.py
 (the fixtures are self-contained binary corpora — no sf_dir needed)
@@ -30,21 +23,16 @@ from pyspark.sql import functions as F
 
 
 def main() -> None:
+    from llm_training_data_pipeline_spark.operators.dedup import media_exact_dedup
     from llm_training_data_pipeline_spark.operators.multimodal import (
-        audio_sample_stats,
-        decode_audio_samples,
         decode_image_pixels,
         image_near_dup_pairs,
         image_pixel_stats,
-        media_exact_dedup,
-        sample_avi_frames,
         synthetic_cross_format_assets,
-        synthetic_mixed_audio_assets,
-        synthetic_mjpeg_avi_assets,
     )
     from llm_training_data_pipeline_spark.session import get_spark
 
-    spark = get_spark(app_name="multimodal-curation")
+    spark = get_spark(app_name="image-curation")
 
     # -- images: mixed containers, one decode, perceptual dedup --------
     images = synthetic_cross_format_assets(spark, n_base=6)
@@ -70,54 +58,6 @@ def main() -> None:
     print(f"byte-digest dedup sees {n_digests} distinct files; "
           f"perceptual pHash finds {pairs.count()} near-dup pairs "
           f"({clusters} re-encode clusters byte hashing missed)")
-
-    # -- audio: mixed containers, exact waveform stats ------------------
-    audio = synthetic_mixed_audio_assets(spark, n=10)
-    astats = audio_sample_stats(decode_audio_samples(audio))
-    print("audio: mixed WAV/AIFF/AU decode ->")
-    for r in astats.orderBy("asset_id").limit(5).collect():
-        print(f"  asset {r['asset_id']}: {r['sample_rate']} Hz "
-              f"{r['channels']}ch {r['n_frames']} frames, "
-              f"peak {r['peak_abs']}, rms {r['rms_milli']} milli")
-
-    # -- video: frame sampling pays decode only for kept frames --------
-    clips = synthetic_mjpeg_avi_assets(spark, n=4)
-    frames = sample_avi_frames(clips, every_n=2)
-    per_clip = (
-        frames.groupBy("asset_id")
-        .agg(F.count("*").alias("frames_kept"))
-        .orderBy("asset_id")
-    )
-    print("video: MJPEG AVI every-2nd-frame sampling ->")
-    for r in per_clip.collect():
-        print(f"  clip {r['asset_id']}: {r['frames_kept']} real frames decoded")
-
-    # -- video: H.264 intra in MP4 — route by codec, decode for real ----
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        decode_video_meta,
-        sample_mp4_frames,
-        synthetic_mp4_avc_assets,
-        synthetic_video_assets,
-    )
-
-    mp4s = synthetic_mp4_avc_assets(spark, n=4).unionByName(
-        synthetic_video_assets(spark, n=3).withColumn(
-            "asset_id", F.col("asset_id") + 100
-        )
-    )
-    meta = decode_video_meta(mp4s)
-    routed = meta.select(
-        "asset_id", "codec",
-        F.when(F.col("codec") == "avc1", F.lit("REAL decode"))
-        .otherwise(F.lit("honest stub")).alias("route"),
-    )
-    print("video: MP4 codec routing (stsd walk) ->")
-    for r in routed.orderBy("asset_id").collect():
-        print(f"  asset {r['asset_id']}: codec={r['codec']} -> {r['route']}")
-    avc_frames = sample_mp4_frames(mp4s, every_n=2)
-    n_real = avc_frames.count()
-    print(f"  {n_real} real H.264-intra frames decoded from the avc1 clips "
-          f"(CAVLC + intra prediction + deblocking, pure Python)")
 
     spark.stop()
 

@@ -9,6 +9,7 @@ tests and documented as the one deliberate semantic deviation.
 
 Variants:
 - ``exact_dedup``            D8: md5 of normalized text, windowed first-wins
+- ``media_exact_dedup``      D8 over opaque binary payloads (raw-byte md5)
 - ``minhash_dedup``          D1-D5: shingle → native MinHash → LSH band join
 - ``simhash_dedup``          engine extension: 64-bit SimHash + hamming bands
 - ``ngram_jaccard_pairs``    exact n-gram Jaccard verify over LSH-band
@@ -63,6 +64,23 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_h", "_rn")
+    )
+
+
+def media_exact_dedup(
+    df: DataFrame, payload_col: str = "payload", id_col: str = "asset_id"
+) -> DataFrame:
+    """Byte-identical asset dedup: ``exact_dedup``'s min-id winner per
+    md5 of a BINARY payload column (no text normalization). The shuffle
+    ships (digest, id), never the payload bytes. Appends ``digest`` and
+    ``n_bytes``."""
+    w = Window.partitionBy("digest").orderBy(id_col)
+    return (
+        df.withColumn("digest", F.md5(F.col(payload_col)))
+        .withColumn("n_bytes", F.length(F.col(payload_col)).cast("long"))
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
     )
 
 

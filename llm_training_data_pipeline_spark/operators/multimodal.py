@@ -1,31 +1,28 @@
-"""Multimodal asset columns (engine extension, BASELINE.json north star).
+"""Image asset columns (engine extension, BASELINE.json north star).
 
-Images/audio/video are opaque ``BINARY`` payload columns plus typed
-metadata (``MULTIMODAL_SCHEMA``). The Spark-side plumbing — schema,
+Images are opaque ``BINARY`` payload columns plus typed metadata
+(``MULTIMODAL_SCHEMA``). The Spark-side plumbing — schema,
 partition-friendly batch processing via ``mapInPandas``, Arrow batch shapes,
 deterministic synthetic fixtures — is real and tested, and so are the
 codecs: pure-Python/numpy decoders cover BMP, PNM, PNG (8/16-bit,
-Adam7), GIF (incl. disposal-composited animation), JPEG (baseline +
-progressive), TIFF (none/PackBits/LZW/deflate strips), WebP lossless
-(VP8L — operators/webp_lossless.py), WAV/AIFF/AU/FLAC/IMA-ADPCM/G.711
-audio, and MJPEG-AVI / animated-GIF / Y4M / H.264-intra
-(operators/h264.py, r13) frame sampling. Only formats we cannot
-decode honestly (H.264 inter/CABAC, VP9, lossy VP8, MP3, …) remain
-capability-gated stubs:
+Adam7), GIF (incl. disposal-composited animation frames), JPEG
+(baseline + progressive), TIFF (none/PackBits/LZW/deflate strips and
+tiles) and WebP lossless (VP8L — operators/webp_lossless.py). Formats
+we cannot decode honestly (lossy VP8, …) reject instead of guessing.
+Audio and video decoding are not part of this package.
 
 - ``decode_image_meta``   parses width/height from PNG/GIF/JPEG headers —
   real parsing, stdlib-only (struct), no pixel decode.
 - ``extract_features``    normalized 16-bin byte histogram per payload — a
   real content-derived feature (dependency-free); the UDF signature, batch
-  iteration, and output schema are exactly what a model-based CLIP/Wav2Vec
+  iteration, and output schema are exactly what a model-based CLIP
   extractor would use (only the inner loop would change).
-- ``resize_image`` / ``sample_frames``  raise ``NotImplementedError`` behind
-  a capability check, keeping the API surface honest. The r9
-  deterministic-fake path keeps their CONSUMERS testable:
-  ``decode_image_stub`` (md5-keystream pixels, ``is_stub``-marked) →
-  ``resize_pixels`` (REAL nearest-neighbor index arithmetic) and
-  ``sample_frames_stub`` (real MP4 frame counts, fake frame buffers).
-  REAL decoders (``is_stub=false``) now cover every header-parsed
+- ``resize_image`` raises ``NotImplementedError`` behind a capability
+  check, keeping the API surface honest. The r9 deterministic-fake path
+  keeps its CONSUMERS testable: ``decode_image_stub`` (md5-keystream
+  pixels, ``is_stub``-marked) → ``resize_pixels`` (REAL nearest-neighbor
+  index arithmetic).
+  REAL decoders (``is_stub=false``) cover every header-parsed
   format: ``decode_bmp_pixels`` (uncompressed 24bpp BMP, r11),
   ``decode_pnm_pixels`` (binary P5/P6, r12), ``decode_png_pixels``
   (stdlib-zlib inflate + scanline unfiltering, r12),
@@ -33,12 +30,11 @@ capability-gated stubs:
   r12), ``decode_jpeg_pixels`` (baseline T.81: Huffman entropy decode,
   dequantize, vectorized 8x8 IDCT, chroma upsample, YCbCr→RGB, r12),
   ``_tiff_pixels`` (baseline TIFF strips + tiles, none / PackBits /
-  LZW / deflate, r12-r13), and
-  ``decode_wav_samples`` (PCM audio, r12) — actual image/audio
-  content flows through the same PIXEL_SCHEMA consumers the stub
-  proved out. Each ships with an independent FORWARD-direction encoder
-  used only by fixtures/tests, so every decoder is proven to invert
-  its spec rather than mirror its own code.
+  LZW / deflate, r12-r13) — actual image content flows through the
+  same PIXEL_SCHEMA consumers the stub proved out. Each ships with an
+  independent FORWARD-direction encoder used only by fixtures/tests,
+  so every decoder is proven to invert its spec rather than mirror its
+  own code.
 
 At 100 TB: payloads stay in parquet binary columns; ``mapInPandas``
 processes whole Arrow batches per partition, so decode parallelism ==
@@ -272,387 +268,6 @@ def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     return df.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def _wav_meta(payload: bytes) -> tuple[int, int, int, float] | None:
-    """(sample_rate, channels, bits_per_sample, duration_s) from a RIFF/WAVE
-    header — real parsing, stdlib-only, no sample decode. Walks the chunk
-    list for 'fmt ' and 'data' (the fmt chunk is not guaranteed first)."""
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
-    i = 12
-    rate = channels = bits = byte_rate = None
-    data_len = None
-    while i + 8 <= len(payload):
-        cid = payload[i : i + 4]
-        (clen,) = _struct.unpack("<I", payload[i + 4 : i + 8])
-        if cid == b"fmt " and i + 24 <= len(payload):
-            channels, rate = _struct.unpack("<HI", payload[i + 10 : i + 16])
-            (byte_rate,) = _struct.unpack("<I", payload[i + 16 : i + 20])
-            (bits,) = _struct.unpack("<H", payload[i + 22 : i + 24])
-        elif cid == b"data":
-            data_len = clen
-        i += 8 + clen + (clen % 2)  # chunks are word-aligned
-    if rate is None:
-        return None
-    dur = (data_len / byte_rate) if (data_len is not None and byte_rate) else 0.0
-    return rate, channels or 0, bits or 0, round(dur, 6)
-
-
-def _flac_meta(payload: bytes) -> tuple[int, int, int, float] | None:
-    """(sample_rate, channels, bits_per_sample, duration_s) from a FLAC
-    STREAMINFO block — the first metadata block after the 'fLaC' magic
-    per spec. Bit layout of the packed 8 bytes: rate 20b, channels-1 3b,
-    bps-1 5b, total samples 36b. Header-only, stdlib-only."""
-    if len(payload) < 42 or payload[:4] != b"fLaC":
-        return None
-    if payload[4] & 0x7F != 0:  # first block must be STREAMINFO
-        return None
-    blen = int.from_bytes(payload[5:8], "big")
-    if blen < 34 or len(payload) < 8 + 34:
-        return None
-    si = payload[8 : 8 + 34]
-    packed = int.from_bytes(si[10:18], "big")
-    rate = packed >> 44
-    channels = ((packed >> 41) & 0x7) + 1
-    bps = ((packed >> 36) & 0x1F) + 1
-    total = packed & ((1 << 36) - 1)
-    dur = round(total / rate, 6) if rate else 0.0
-    return rate, channels, bps, dur
-
-
-def _ogg_opus_meta(payload: bytes) -> tuple[int, int, int, float] | None:
-    """(input_sample_rate, channels, 0, duration_s) from an Ogg/Opus
-    stream: OpusHead on the first page (version, channels, pre-skip,
-    input rate), duration from the LAST page's granule position (Opus
-    granules are always 48 kHz regardless of input rate)."""
-    if len(payload) < 47 or payload[:4] != b"OggS":
-        return None
-    nsegs = payload[26]
-    head_off = 27 + nsegs
-    # OpusHead needs 19 bytes (magic 8 + version 1 + channels 1 +
-    # pre-skip 2 + rate 4 + gain 2 + mapping 1); a truncated payload must
-    # yield None, not an exception that fails the whole decode task
-    if head_off + 19 > len(payload):
-        return None
-    if payload[head_off : head_off + 8] != b"OpusHead":
-        return None
-    channels = payload[head_off + 9]
-    (rate,) = _struct.unpack("<I", payload[head_off + 12 : head_off + 16])
-    (pre_skip,) = _struct.unpack("<H", payload[head_off + 10 : head_off + 12])
-    last = payload.rfind(b"OggS")
-    dur = 0.0
-    if last > 0 and last + 14 <= len(payload):
-        (granule,) = _struct.unpack("<q", payload[last + 6 : last + 14])
-        if granule > 0:
-            dur = round(max(granule - pre_skip, 0) / 48_000.0, 6)
-    return rate, channels, 0, dur
-
-
-# MPEG audio (MP3) tables — Layer III bitrate rows (kbps) and sample
-# rates per version bits (3=MPEG1, 2=MPEG2, 0=MPEG2.5).
-_MP3_BITRATES_V1_L3 = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320]
-_MP3_BITRATES_V2_L3 = [0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160]
-_MP3_RATES = {3: (44100, 48000, 32000), 2: (22050, 24000, 16000), 0: (11025, 12000, 8000)}
-
-
-def _mp3_meta(payload: bytes) -> tuple[int, int, int, float] | None:
-    """(sample_rate, channels, 0, duration_s) from the first MPEG Layer
-    III frame header (optionally behind an ID3v2 tag, whose syncsafe
-    size is skipped). bits_per_sample is 0 — lossy streams have none.
-    Duration is the CBR estimate payload_bits/bitrate; VBR files with a
-    Xing header report the first frame's nominal rate (documented
-    approximation, not an error)."""
-    b = payload
-    if len(b) < 14:
-        return None
-    off = 0
-    if b[:3] == b"ID3":
-        size = (
-            ((b[6] & 0x7F) << 21)
-            | ((b[7] & 0x7F) << 14)
-            | ((b[8] & 0x7F) << 7)
-            | (b[9] & 0x7F)
-        )
-        off = 10 + size
-    if off + 4 > len(b):
-        return None
-    h = b[off : off + 4]
-    if h[0] != 0xFF or (h[1] & 0xE0) != 0xE0:
-        return None
-    version = (h[1] >> 3) & 0x3  # 3=MPEG1, 2=MPEG2, 0=MPEG2.5, 1=reserved
-    layer = (h[1] >> 1) & 0x3  # 1=Layer III
-    if version == 1 or layer != 1:
-        return None
-    br_idx = (h[2] >> 4) & 0xF
-    sr_idx = (h[2] >> 2) & 0x3
-    if br_idx in (0, 15) or sr_idx == 3:
-        return None
-    table = _MP3_BITRATES_V1_L3 if version == 3 else _MP3_BITRATES_V2_L3
-    bitrate = table[br_idx] * 1000
-    rate = _MP3_RATES[version][sr_idx]
-    channels = 1 if ((h[3] >> 6) & 0x3) == 3 else 2
-    dur = round((len(b) - off) * 8 / bitrate, 6) if bitrate else 0.0
-    return rate, channels, 0, dur
-
-
-AUDIO_META_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("modality", StringType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("bits_per_sample", IntegerType()),
-        StructField("duration_s", FloatType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
-
-
-def decode_audio_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Header-only audio metadata (RIFF/WAVE chunk walk, FLAC
-    STREAMINFO, MPEG Layer III frame header) over Arrow batches — the
-    audio counterpart of ``decode_image_meta``; unrecognized payloads
-    yield NULL fields. Same 100 TB shape: payloads never leave the
-    executors."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "asset_id": pdf["asset_id"],
-                "modality": pdf["modality"],
-                "sample_rate": [],
-                "channels": [],
-                "bits_per_sample": [],
-                "duration_s": [],
-                "n_bytes": [],
-            }
-            for payload in pdf[payload_col]:
-                b = bytes(payload) if payload is not None else b""
-                meta = _wav_meta(b) or _flac_meta(b) or _mp3_meta(b) or _ogg_opus_meta(b)
-                out["sample_rate"].append(meta[0] if meta else None)
-                out["channels"].append(meta[1] if meta else None)
-                out["bits_per_sample"].append(meta[2] if meta else None)
-                out["duration_s"].append(meta[3] if meta else None)
-                out["n_bytes"].append(len(b))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=AUDIO_META_SCHEMA)
-
-
-def _iter_boxes(buf: bytes, start: int, end: int):
-    """Yield (type, payload_start, payload_end) for ISO-BMFF boxes in
-    buf[start:end] — handles 64-bit largesize and size==0 (to end)."""
-    i = start
-    while i + 8 <= end:
-        (size,) = _struct.unpack(">I", buf[i : i + 4])
-        btype = buf[i + 4 : i + 8]
-        header = 8
-        if size == 1:
-            if i + 16 > end:
-                return
-            (size,) = _struct.unpack(">Q", buf[i + 8 : i + 16])
-            header = 16
-        elif size == 0:
-            size = end - i
-        if size < header or i + size > end:
-            return  # malformed/truncated box — stop walking
-        yield btype, i + header, i + size
-        i += size
-
-
-def _mp4_meta(payload: bytes) -> tuple[str, int, float, int] | None:
-    """(major_brand, timescale, duration_s, n_tracks) from an ISO-BMFF
-    (MP4/MOV) container — real box-walk parsing, stdlib-only, no codec
-    work: ftyp major brand, moov/mvhd timescale+duration (version 0 and
-    1 layouts), trak count inside moov."""
-    if len(payload) < 12 or payload[4:8] != b"ftyp":
-        return None
-    brand = payload[8:12].decode("ascii", "replace")
-    timescale = duration = None
-    n_tracks = 0
-    for btype, ps, pe in _iter_boxes(payload, 0, len(payload)):
-        if btype != b"moov":
-            continue
-        for ctype, cs, ce in _iter_boxes(payload, ps, pe):
-            if ctype == b"mvhd" and ce - cs >= 4:
-                version = payload[cs]
-                if version == 0 and ce - cs >= 20:
-                    timescale, duration = _struct.unpack(
-                        ">II", payload[cs + 12 : cs + 20]
-                    )
-                elif version == 1 and ce - cs >= 32:
-                    (timescale,) = _struct.unpack(">I", payload[cs + 20 : cs + 24])
-                    (duration,) = _struct.unpack(">Q", payload[cs + 24 : cs + 32])
-            elif ctype == b"trak":
-                n_tracks += 1
-    if timescale is None:
-        return brand, 0, 0.0, n_tracks
-    dur_s = round(duration / timescale, 6) if timescale else 0.0
-    return brand, timescale, dur_s, n_tracks
-
-
-def _mp4_frame_count(payload: bytes) -> int:
-    """REAL frame count: sample_count of the first ``stsz`` box (the
-    sample-size table every playable MP4 video track carries), found by
-    a recursive box walk — stdlib-only, no codec work. 0 when absent."""
-    def walk(start: int, end: int) -> int:
-        for btype, ps, pe in _iter_boxes(payload, start, end):
-            if btype == b"stsz" and pe - ps >= 12:
-                (count,) = _struct.unpack(">I", payload[ps + 8 : ps + 12])
-                return count
-            if btype in (b"moov", b"trak", b"mdia", b"minf", b"stbl"):
-                got = walk(ps, pe)
-                if got:
-                    return got
-        return 0
-
-    if len(payload) < 12 or payload[4:8] != b"ftyp":
-        return 0
-    return walk(0, len(payload))
-
-
-_VIDEO_FOURCCS = frozenset(
-    (b"avc1", b"avc3", b"hvc1", b"hev1", b"mp4v", b"vp08", b"vp09",
-     b"av01", b"s263", b"mjpa", b"jpeg")
-)
-
-
-def _mp4_video_codec(payload: bytes):
-    """(codec fourcc, width, height) of the first video sample entry
-    (stsd walk; VisualSampleEntry fixed layout) or None — real box
-    parsing, no codec work (r13)."""
-    def walk(start: int, end: int):
-        for btype, ps, pe in _iter_boxes(payload, start, end):
-            if btype == b"stsd" and pe - ps >= 8:
-                for etype, es, ee in _iter_boxes(payload, ps + 8, pe):
-                    if etype in _VIDEO_FOURCCS and ee - es >= 28:
-                        w, h = _struct.unpack(">HH", payload[es + 24 : es + 28])
-                        return etype.decode("ascii"), w, h
-            elif btype in (b"moov", b"trak", b"mdia", b"minf", b"stbl"):
-                got = walk(ps, pe)
-                if got:
-                    return got
-        return None
-
-    if len(payload) < 12 or payload[4:8] != b"ftyp":
-        return None
-    return walk(0, len(payload))
-
-
-VIDEO_META_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("modality", StringType()),
-        StructField("brand", StringType()),
-        StructField("timescale", IntegerType()),
-        StructField("duration_s", FloatType()),
-        StructField("n_tracks", IntegerType()),
-        StructField("codec", StringType()),
-        StructField("track_width", IntegerType()),
-        StructField("track_height", IntegerType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
-
-
-def decode_video_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Header-only video container metadata (ISO-BMFF / MP4) over Arrow
-    batches — the video counterpart of ``decode_image_meta`` /
-    ``decode_audio_meta``: ftyp brand, mvhd timescale + duration, track
-    count, plus the first video track's sample-entry codec fourcc and
-    coded dims (stsd walk, r13 — this is how a 100-TB video corpus
-    routes payloads: avc1-intra to the REAL sample_mp4_frames path,
-    everything else to the honest stub). Non-MP4 payloads yield NULL
-    fields; frame/pixel work lives in sample_mp4_frames /
-    sample_frames_stub. Same 100 TB shape: payloads never leave the
-    executors."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "asset_id": pdf["asset_id"],
-                "modality": pdf["modality"],
-                "brand": [],
-                "timescale": [],
-                "duration_s": [],
-                "n_tracks": [],
-                "codec": [],
-                "track_width": [],
-                "track_height": [],
-                "n_bytes": [],
-            }
-            for payload in pdf[payload_col]:
-                b = bytes(payload) if payload is not None else b""
-                meta = _mp4_meta(b)
-                try:
-                    codec = _mp4_video_codec(b)
-                except Exception:
-                    codec = None
-                out["brand"].append(meta[0] if meta else None)
-                out["timescale"].append(meta[1] if meta else None)
-                out["duration_s"].append(meta[2] if meta else None)
-                out["n_tracks"].append(meta[3] if meta else None)
-                out["codec"].append(codec[0] if codec else None)
-                out["track_width"].append(codec[1] if codec else None)
-                out["track_height"].append(codec[2] if codec else None)
-                out["n_bytes"].append(len(b))
-            out = pd.DataFrame(out)
-            for c in ("track_width", "track_height"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return df.mapInPandas(run, schema=VIDEO_META_SCHEMA)
-
-
-def synthetic_video_assets(spark, n: int = 64) -> DataFrame:
-    """Deterministic fixture: minimal valid ISO-BMFF containers (ftyp +
-    moov[mvhd + trak...]), alternating mvhd version 0/1 layouts."""
-
-    def box(btype: bytes, payload: bytes) -> bytes:
-        return _struct.pack(">I", 8 + len(payload)) + btype + payload
-
-    rows = []
-    for i in range(n):
-        timescale = (600, 1000, 90000)[i % 3]
-        dur_s = 1 + (i % 5)
-        n_tracks = 1 + (i % 3)
-        if i % 2 == 0:
-            mvhd = box(
-                b"mvhd",
-                b"\x00\x00\x00\x00"  # version 0 + flags
-                + _struct.pack(">II", 0, 0)  # creation/modification
-                + _struct.pack(">II", timescale, timescale * dur_s),
-            )
-        else:
-            mvhd = box(
-                b"mvhd",
-                b"\x01\x00\x00\x00"  # version 1 + flags
-                + _struct.pack(">QQ", 0, 0)
-                + _struct.pack(">IQ", timescale, timescale * dur_s),
-            )
-        # first trak carries a REAL sample-size table (20 + 3i frames of
-        # 256 bytes each) so the stsz frame count is parseable; the other
-        # traks stay opaque, keeping the trak count unchanged
-        n_frames = 20 + 3 * i
-        stsz = box(
-            b"stsz",
-            b"\x00\x00\x00\x00" + _struct.pack(">II", 0, n_frames)
-            + _struct.pack(">I", 256) * n_frames,
-        )
-        first_trak = box(
-            b"trak", box(b"mdia", box(b"minf", box(b"stbl", stsz)))
-        )
-        traks = first_trak + b"".join(
-            box(b"trak", b"\x00" * 8) for _ in range(n_tracks - 1)
-        )
-        payload = box(b"ftyp", b"isom\x00\x00\x02\x00mp41") + box(
-            b"moov", mvhd + traks
-        )
-        rows.append((i, "video", payload, "video/mp4", {"idx": str(i)}))
-    from llm_training_data_pipeline_spark.schemas import MULTIMODAL_SCHEMA
-
-    return spark.createDataFrame(rows, MULTIMODAL_SCHEMA)
-
-
 def resize_image(df: DataFrame, width: int, height: int) -> DataFrame:
     """Pixel-level resize requires an imaging library (absent here)."""
     if not HAVE_PIL:
@@ -662,15 +277,6 @@ def resize_image(df: DataFrame, width: int, height: int) -> DataFrame:
             "plumbing (resize_pixels IS the real resize once pixels exist)"
         )
     raise NotImplementedError("real resize intentionally not implemented")
-
-
-def sample_frames(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame sampling requires a codec library (absent here)."""
-    raise NotImplementedError(
-        "sample_frames needs a video codec library not present in this "
-        "environment; sample_frames_stub carries the tested dataflow "
-        "(real MP4 frame counts, deterministic fake frame buffers)"
-    )
 
 
 def synthetic_assets(spark, n: int = 64) -> DataFrame:
@@ -698,1404 +304,6 @@ def synthetic_assets(spark, n: int = 64) -> DataFrame:
             )
             mime = "image/tiff"
         rows.append((i, "image", payload, mime, {"idx": str(i)}))
-    from llm_training_data_pipeline_spark.schemas import MULTIMODAL_SCHEMA
-
-    return spark.createDataFrame(rows, MULTIMODAL_SCHEMA)
-
-
-def synthetic_audio_assets(spark, n: int = 64) -> DataFrame:
-    """Deterministic fixture cycling the whole decode battery: minimal
-    valid RIFF/WAVE files, FLAC STREAMINFO headers, and MPEG Layer III
-    frames (every third row each), so one driver-executed row proves all
-    three parsers still run."""
-    rows = []
-    for i in range(n):
-        rate = (8000, 16000, 44100, 48000)[i % 4]
-        channels = 1 + (i % 2)
-        bits = 16
-        kind = i % 3
-        if kind == 0:  # WAV
-            byte_rate = rate * channels * bits // 8
-            data_len = byte_rate // 10 * (1 + i % 3)  # 0.1-0.3 s of silence
-            fmt = b"fmt " + _struct.pack(
-                "<IHHIIHH", 16, 1, channels, rate, byte_rate, channels * bits // 8, bits
-            )
-            data = b"data" + _struct.pack("<I", data_len) + b"\x00" * data_len
-            body = b"WAVE" + fmt + data
-            payload = b"RIFF" + _struct.pack("<I", len(body)) + body
-            mime = "audio/wav"
-        elif kind == 1:  # FLAC: fLaC magic + last-block STREAMINFO
-            total_samples = rate * (1 + i % 3) // 10
-            packed = (rate << 44) | ((channels - 1) << 41) | ((bits - 1) << 36) | total_samples
-            si = b"\x00" * 10 + packed.to_bytes(8, "big") + b"\x00" * 16
-            payload = b"fLaC" + b"\x80" + len(si).to_bytes(3, "big") + si
-            mime = "audio/flac"
-        else:  # MP3: MPEG1 Layer III 128 kbps 44100 Hz frame header
-            payload = bytes([0xFF, 0xFB, 0x90, 0x00]) + b"\x00" * (1600 * (1 + i % 3) - 4)
-            mime = "audio/mpeg"
-        rows.append((i, "audio", payload, mime, {"idx": str(i)}))
-    from llm_training_data_pipeline_spark.schemas import MULTIMODAL_SCHEMA
-
-    return spark.createDataFrame(rows, MULTIMODAL_SCHEMA)
-
-
-def synthetic_flac_assets(spark, n: int = 32) -> DataFrame:
-    """Deterministic REAL FLAC fixture sweeping the decode surface:
-    subframe kinds (constant via flat runs, verbatim, fixed 0-2,
-    order-1 LPC), stereo decorrelations, 8/16-bit, rice partitions and
-    the escape-to-raw path — formula samples, so every decoded int32
-    is derivable by the pinning test (FLAC is lossless)."""
-    import numpy as np
-
-    rows = []
-    for i in range(n):
-        rate = (8000, 16000, 44100, 48000)[i % 4]
-        channels = 1 + (i % 2)
-        bps = 8 if i % 5 == 0 else 16
-        lim = 100 if bps == 8 else 20000
-        n_frames = 48 + (i % 7) * 8
-        mat = np.array(
-            [
-                [((k * 37 + c * 11 + i * 7) % (2 * lim)) - lim
-                 for c in range(channels)]
-                for k in range(n_frames)
-            ],
-            np.int64,
-        )
-        kw: dict = {}
-        if i % 4 == 3:
-            kw["partition_order"] = 2  # every block size here is 8k
-        if i % 8 == 5:
-            kw["escape_raw"] = 18
-        payload = _flac_build(
-            mat,
-            rate=rate,
-            bps=bps,
-            block_size=(8, 16, 32)[i % 3],
-            subframe=("verbatim", "fixed0", "fixed1", "fixed2", "lpc1")[i % 5],
-            stereo=(
-                ("independent", "left_side", "right_side", "mid_side")[i % 4]
-                if channels == 2
-                else "independent"
-            ),
-            **kw,
-        )
-        rows.append((i, "audio", payload, "audio/flac", {"idx": str(i)}))
-    from llm_training_data_pipeline_spark.schemas import MULTIMODAL_SCHEMA
-
-    return spark.createDataFrame(rows, MULTIMODAL_SCHEMA)
-
-
-AUDIO_SAMPLES_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("n_frames", LongType()),
-        StructField("samples", BinaryType()),  # int32 LE, interleaved
-        StructField("is_stub", BooleanType()),
-    ]
-)
-
-
-def _wav_pcm_samples(payload: bytes):
-    """REAL WAV sample decode (r12 — the audio analog of ``_bmp_pixels``):
-    (sample_rate, channels, n_frames, int32-LE interleaved sample bytes)
-    for uncompressed PCM (format tag 1; 8/16/24/32 bits per sample —
-    24/32 added r13), IEEE float PCM (tag 3, 32/64-bit, r14 — scaled to
-    int32 via the pinned ``_float_to_int32`` rule), G.711 (6/7), IMA
-    ADPCM (0x11); honest None for anything else (truncated chunks,
-    WAVE_FORMAT_EXTENSIBLE). Same RIFF chunk walk as ``_wav_meta``; 8-bit
-    samples are unsigned per the WAV spec and are centered (-128) so
-    every width lands on a signed zero-DC scale; wider samples are
-    signed little-endian (24-bit sign-extended vectorized). Widening to
-    int32 keeps downstream arithmetic exact."""
-    import numpy as np
-
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
-    i = 12
-    fmt_tag = rate = channels = bits = block_align = None
-    data_off = data_len = None
-    while i + 8 <= len(payload):
-        cid = payload[i : i + 4]
-        (clen,) = _struct.unpack("<I", payload[i + 4 : i + 8])
-        if cid == b"fmt " and i + 24 <= len(payload):
-            fmt_tag, channels, rate = _struct.unpack(
-                "<HHI", payload[i + 8 : i + 16]
-            )
-            block_align, bits = _struct.unpack(
-                "<HH", payload[i + 20 : i + 24]
-            )
-        elif cid == b"data":
-            data_off, data_len = i + 8, clen
-        i += 8 + clen + (clen % 2)
-    if fmt_tag in (6, 7):  # G.711 A-law / mu-law in WAV (r13)
-        if (
-            not rate
-            or rate >= (1 << 31)
-            or not channels
-            or bits != 8
-            or data_off is None
-            or len(payload) < data_off + data_len
-        ):
-            return None
-        count = data_len // channels * channels
-        if count == 0:
-            return None
-        codes = np.frombuffer(payload, np.uint8, count=count, offset=data_off)
-        table = _alaw_expand_table() if fmt_tag == 6 else _ulaw_expand_table()
-        return (
-            int(rate),
-            int(channels),
-            count // channels,
-            table[codes].astype("<i4").tobytes(),
-        )
-    if fmt_tag == 3:  # IEEE float PCM (r14, VERDICT r13 #10)
-        if (
-            not rate
-            or rate >= (1 << 31)
-            or not channels
-            or bits not in (32, 64)
-            or data_off is None
-            or len(payload) < data_off + data_len
-        ):
-            return None
-        width = bits // 8
-        n_samples = data_len // (width * channels) * channels
-        if n_samples == 0:
-            return None
-        arr = np.frombuffer(
-            payload, "<f4" if bits == 32 else "<f8",
-            count=n_samples, offset=data_off,
-        )
-        return (
-            int(rate),
-            int(channels),
-            n_samples // channels,
-            _float_to_int32(arr).astype("<i4").tobytes(),
-        )
-    if fmt_tag == 0x11:  # IMA/DVI ADPCM (r13)
-        if (
-            not rate
-            or rate >= (1 << 31)
-            or not channels
-            or bits != 4
-            or data_off is None
-            or not block_align
-            or len(payload) < data_off + data_len
-        ):
-            return None
-        return _wav_ima_adpcm_samples(
-            payload, None, channels, rate, block_align,
-            payload[data_off : data_off + data_len],
-        )
-    if (
-        fmt_tag != 1
-        or not rate
-        or rate >= (1 << 31)  # int32 schema bound; larger = corrupt
-        or not channels
-        or bits not in (8, 16, 24, 32)
-        or data_off is None
-        or len(payload) < data_off + data_len
-    ):
-        return None
-    width = bits // 8
-    n_samples = data_len // (width * channels) * channels
-    if n_samples == 0:
-        return None
-    if bits == 8:
-        arr = (
-            np.frombuffer(payload, np.uint8, count=n_samples, offset=data_off)
-            .astype(np.int32)
-            - 128
-        )
-    elif bits == 16:
-        arr = np.frombuffer(
-            payload, "<i2", count=n_samples, offset=data_off
-        ).astype(np.int32)
-    elif bits == 24:  # r13: 3-byte little-endian signed — studio PCM
-        arr = _pcm24_to_int32(
-            payload[data_off : data_off + n_samples * 3], "<"
-        )
-    else:  # 32-bit integer PCM (format tag 1; float32 is tag 3 → None)
-        arr = np.frombuffer(
-            payload, "<i4", count=n_samples, offset=data_off
-        ).astype(np.int32)
-    return (
-        int(rate),
-        int(channels),
-        n_samples // channels,
-        arr.astype("<i4").tobytes(),
-    )
-
-
-def _float_to_int32(arr):
-    """Float PCM → the int32 sample contract (r14, VERDICT r13 #10):
-    sanitize (NaN→0, ±inf→±1), clip to [-1, 1], scale by 2^31 - 1 and
-    round-half-even (numpy rint). The scale choice is pinned in tests —
-    any change breaks the byte-exact audio stats downstream."""
-    import numpy as np
-
-    x = np.nan_to_num(arr.astype(np.float64), nan=0.0, posinf=1.0, neginf=-1.0)
-    x = np.clip(x, -1.0, 1.0)
-    return np.rint(x * 2147483647.0).astype(np.int32)
-
-
-def _pcm24_to_int32(raw: bytes, byte_order: str):
-    """Vectorized 3-byte signed PCM → int32 (``byte_order`` '<' or
-    '>'): widen each triple into a 4-byte lane, then an arithmetic
-    shift restores the sign — no per-sample Python."""
-    import numpy as np
-
-    b = np.frombuffer(raw, np.uint8).reshape(-1, 3)
-    if byte_order == "<":
-        v = (
-            b[:, 0].astype(np.uint32)
-            | (b[:, 1].astype(np.uint32) << 8)
-            | (b[:, 2].astype(np.uint32) << 16)
-        )
-    else:
-        v = (
-            b[:, 2].astype(np.uint32)
-            | (b[:, 1].astype(np.uint32) << 8)
-            | (b[:, 0].astype(np.uint32) << 16)
-        )
-    return (v.astype(np.int32) << 8) >> 8  # sign-extend bit 23
-
-
-def _ieee754_extended_to_int(b: bytes):
-    """Decode an 80-bit IEEE 754 extended float (AIFF's sampleRate
-    field) to a non-negative int, or None — audio rates are exact
-    integers in practice; fractional or negative values reject."""
-    if len(b) != 10:
-        return None
-    exp = int.from_bytes(b[:2], "big")
-    mant = int.from_bytes(b[2:], "big")
-    if exp & 0x8000 or (exp == 0 and mant == 0):
-        return 0 if exp == 0 and mant == 0 else None
-    if (exp & 0x7FFF) == 0x7FFF:
-        return None  # inf / NaN
-    shift = (exp & 0x7FFF) - 16383 - 63
-    if shift >= 0:
-        v = mant << shift if shift < 64 else None
-    elif mant & ((1 << -shift) - 1):
-        return None  # fractional rate
-    else:
-        v = mant >> -shift
-    # int32-representable rates only (the samples schema is int32, and
-    # no real audio rate is near 2^31 — headers beyond it are corrupt)
-    return v if v is not None and v < (1 << 31) else None
-
-
-def _aiff_pcm_samples(payload: bytes):
-    """REAL AIFF/AIFC sample decode — the big-endian sibling of
-    ``_wav_pcm_samples``: FORM/AIFF chunk walk, COMM (channels, frame
-    count, sample size, 80-bit extended-float rate), SSND (offset +
-    blocksize header, then big-endian signed PCM). 8/16/24/32-bit PCM
-    ``AIFF`` decodes (24/32 added r13). ``AIFC`` (r14, VERDICT r13 #10)
-    adds the compression-typed COMM: NONE (BE PCM), sowt (LE PCM — the
-    classic Mac byte-swap type), fl32/FL32 + fl64/FL64 (BE IEEE float,
-    scaled by the pinned ``_float_to_int32`` rule), ulaw/ULAW +
-    alaw/ALAW (G.711 codes, 1 byte per sample regardless of the
-    nominal bits field). Unknown compression types and truncated
-    chunks return an honest None. AIFF 8-bit is SIGNED (unlike WAV's
-    unsigned) per the spec."""
-    import numpy as np
-
-    if (
-        len(payload) < 12
-        or payload[:4] != b"FORM"
-        or payload[8:12] not in (b"AIFF", b"AIFC")
-    ):
-        return None
-    is_aifc = payload[8:12] == b"AIFC"
-    i = 12
-    channels = n_frames = bits = rate = None
-    comp = b"NONE"
-    snd_off = snd_len = None
-    while i + 8 <= len(payload):
-        cid = payload[i : i + 4]
-        (clen,) = _struct.unpack(">I", payload[i + 4 : i + 8])
-        if cid == b"COMM" and clen >= 18 and i + 26 <= len(payload):
-            channels, n_frames, bits = _struct.unpack(
-                ">hIh", payload[i + 8 : i + 16]
-            )
-            rate = _ieee754_extended_to_int(payload[i + 16 : i + 26])
-            if is_aifc:
-                if clen < 22 or i + 30 > len(payload):
-                    return None
-                comp = payload[i + 26 : i + 30]
-        elif cid == b"SSND" and i + 16 <= len(payload):
-            (off,) = _struct.unpack(">I", payload[i + 8 : i + 12])
-            snd_off = i + 16 + off
-            snd_len = clen - 8 - off
-        i += 8 + clen + (clen % 2)
-    comp_u = comp.upper()
-    if comp_u == b"NONE" or comp == b"sowt":
-        if bits not in (8, 16, 24, 32):
-            return None
-        bps = bits // 8
-    elif comp_u == b"FL32":
-        if bits != 32:
-            return None
-        bps = 4
-    elif comp_u == b"FL64":
-        if bits != 64:
-            return None
-        bps = 8
-    elif comp_u in (b"ULAW", b"ALAW"):
-        bps = 1  # G.711 code bytes; the nominal bits field says 16
-    else:
-        return None  # honest rejection: unknown AIFC compression
-    if (
-        not rate
-        or not channels
-        or channels < 1
-        or not n_frames
-        or snd_off is None
-        or snd_len < n_frames * channels * bps
-        or len(payload) < snd_off + n_frames * channels * bps
-    ):
-        return None
-    count = n_frames * channels
-    le = comp == b"sowt"
-    if comp_u in (b"ULAW", b"ALAW"):
-        codes = np.frombuffer(payload, np.uint8, count=count, offset=snd_off)
-        table = _ulaw_expand_table() if comp_u == b"ULAW" else _alaw_expand_table()
-        arr = table[codes]
-    elif comp_u == b"FL32":
-        arr = _float_to_int32(
-            np.frombuffer(payload, ">f4", count=count, offset=snd_off)
-        )
-    elif comp_u == b"FL64":
-        arr = _float_to_int32(
-            np.frombuffer(payload, ">f8", count=count, offset=snd_off)
-        )
-    elif bits == 8:
-        arr = np.frombuffer(
-            payload, np.int8, count=count, offset=snd_off
-        ).astype(np.int32)
-    elif bits == 16:
-        arr = np.frombuffer(
-            payload, "<i2" if le else ">i2", count=count, offset=snd_off
-        ).astype(np.int32)
-    elif bits == 24:
-        arr = _pcm24_to_int32(
-            payload[snd_off : snd_off + count * 3], "<" if le else ">"
-        )
-    else:
-        arr = np.frombuffer(
-            payload, "<i4" if le else ">i4", count=count, offset=snd_off
-        ).astype(np.int32)
-    return int(rate), int(channels), int(n_frames), arr.astype("<i4").tobytes()
-
-
-@_functools.lru_cache(maxsize=1)
-def _ulaw_expand_table():
-    """G.711 mu-law expansion (CCITT reference formula) for all 256
-    code bytes, 16-bit-scaled linear values. lru_cached — built once
-    per executor, reused across rows; treat as read-only."""
-    import numpy as np
-
-    out = np.zeros(256, np.int32)
-    for byte in range(256):
-        u = ~byte & 0xFF
-        exp = (u >> 4) & 0x07
-        mant = u & 0x0F
-        mag = (((mant << 3) + 0x84) << exp) - 0x84
-        out[byte] = -mag if u & 0x80 else mag
-    return out
-
-
-@_functools.lru_cache(maxsize=1)
-def _alaw_expand_table():
-    """G.711 A-law expansion (ITU G.711 / CCITT reference) for all 256
-    code bytes, 16-bit-scaled linear values (r13 — the telephony
-    sibling of ``_ulaw_expand_table``). lru_cached per executor."""
-    import numpy as np
-
-    out = np.zeros(256, np.int32)
-    for byte in range(256):
-        a = byte ^ 0x55  # even-bit inversion per spec
-        seg = (a >> 4) & 0x07
-        mant = a & 0x0F
-        if seg == 0:
-            mag = (mant << 4) + 8
-        else:
-            mag = ((mant << 4) + 0x108) << (seg - 1)
-        out[byte] = mag if a & 0x80 else -mag
-    return out
-
-
-def _au_samples(payload: bytes):
-    """REAL Sun/NeXT .au sample decode: '.snd' header (big-endian data
-    offset/size/encoding/rate/channels), encodings 1 (G.711 mu-law,
-    expanded to 16-bit-scaled linear), 2 (8-bit signed linear PCM),
-    3 (16-bit), 4 (24-bit, r13), 5 (32-bit) signed big-endian PCM and
-    27 (G.711 A-law, r13). Float encodings return an honest None.
-    data_size of 0xFFFFFFFF means 'until EOF' per the spec."""
-    import numpy as np
-
-    if len(payload) < 28 or payload[:4] != b".snd":
-        return None
-    off, size, enc, rate, channels = _struct.unpack(
-        ">IIIII", payload[4:24]
-    )
-    # rate/channels bounds: the samples schema is int32, and u32 header
-    # fields past these are corrupt files, not real audio — without the
-    # check a 28-byte crafted .au kills the Arrow batch, not the row
-    if (
-        off < 24
-        or enc not in (1, 2, 3, 4, 5, 27)
-        or not 0 < rate < (1 << 31)
-        or not 0 < channels <= 32768
-    ):
-        return None
-    if size == 0xFFFFFFFF:
-        size = len(payload) - off
-    if len(payload) < off + size:
-        return None
-    width = {1: 1, 2: 1, 3: 2, 4: 3, 5: 4, 27: 1}[enc]
-    count = size // (width * channels) * channels
-    if count == 0:
-        return None
-    if enc in (1, 27):
-        codes = np.frombuffer(payload, np.uint8, count=count, offset=off)
-        table = _ulaw_expand_table() if enc == 1 else _alaw_expand_table()
-        arr = table[codes]
-    elif enc == 2:
-        arr = np.frombuffer(
-            payload, np.int8, count=count, offset=off
-        ).astype(np.int32)
-    elif enc == 3:
-        arr = np.frombuffer(
-            payload, ">i2", count=count, offset=off
-        ).astype(np.int32)
-    elif enc == 4:
-        arr = _pcm24_to_int32(payload[off : off + count * 3], ">")
-    else:
-        arr = np.frombuffer(
-            payload, ">i4", count=count, offset=off
-        ).astype(np.int32)
-    return int(rate), int(channels), count // channels, arr.astype("<i4").tobytes()
-
-
-_IMA_STEP_TABLE = (
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-)
-_IMA_INDEX_TABLE = (-1, -1, -1, -1, 2, 4, 6, 8)
-
-
-def _ima_decode_nibbles(nibbles, pred: int, index: int):
-    """IMA/DVI ADPCM core (public spec, IMA ADPCM Reference Algorithm):
-    one int16 sample per 4-bit code, shared by the WAV block decoder
-    and the forward encoder's reconstruction loop."""
-    out = []
-    step_table, index_table = _IMA_STEP_TABLE, _IMA_INDEX_TABLE
-    for b in nibbles:
-        step = step_table[index]
-        delta = step >> 3
-        if b & 1:
-            delta += step >> 2
-        if b & 2:
-            delta += step >> 1
-        if b & 4:
-            delta += step
-        pred = pred - delta if b & 8 else pred + delta
-        pred = -32768 if pred < -32768 else (32767 if pred > 32767 else pred)
-        index += index_table[b & 7]
-        index = 0 if index < 0 else (88 if index > 88 else index)
-        out.append(pred)
-    return out, pred, index
-
-
-def _wav_ima_adpcm_samples(payload: bytes, fmt_extra, channels, rate,
-                           block_align, data):
-    """WAV format tag 0x11 (IMA ADPCM) block decode: per-block 4-byte
-    channel headers (int16 predictor, step index, reserved), then
-    nibble data — mono low-nibble-first, stereo interleaved in 4-byte
-    words per channel. The header predictor IS the block's first
-    sample (samples_per_block = 1 + data nibbles per channel)."""
-    import numpy as np
-
-    if channels not in (1, 2) or block_align < 4 * channels + 4:
-        return None
-    chans: list[list[int]] = [[] for _ in range(channels)]
-    for boff in range(0, len(data) - (len(data) % block_align), block_align):
-        block = data[boff : boff + block_align]
-        preds, idxs = [], []
-        for c in range(channels):
-            p = int.from_bytes(
-                block[4 * c : 4 * c + 2], "little", signed=True
-            )
-            ix = block[4 * c + 2]
-            if ix > 88 or block[4 * c + 3] != 0:
-                return None
-            preds.append(p)
-            idxs.append(ix)
-            chans[c].append(p)  # first sample = header predictor
-        body = block[4 * channels :]
-        if channels == 1:
-            nibbles = []
-            for byte in body:
-                nibbles.append(byte & 0xF)
-                nibbles.append(byte >> 4)
-            dec, _p, _i = _ima_decode_nibbles(nibbles, preds[0], idxs[0])
-            chans[0].extend(dec)
-        else:
-            # alternating 4-byte (8-nibble) words: ch0 word, ch1 word
-            if len(body) % 8:
-                return None
-            for w0 in range(0, len(body), 8):
-                for c in range(2):
-                    word = body[w0 + 4 * c : w0 + 4 * c + 4]
-                    nib = []
-                    for byte in word:
-                        nib.append(byte & 0xF)
-                        nib.append(byte >> 4)
-                    dec, preds[c], idxs[c] = _ima_decode_nibbles(
-                        nib, preds[c], idxs[c]
-                    )
-                    chans[c].extend(dec)
-    n_frames = min(len(ch) for ch in chans)
-    if n_frames == 0:
-        return None
-    arr = np.empty((n_frames, channels), np.int32)
-    for c in range(channels):
-        arr[:, c] = chans[c][:n_frames]
-    return (
-        int(rate),
-        int(channels),
-        n_frames,
-        np.ascontiguousarray(arr.reshape(-1).astype("<i4")).tobytes(),
-    )
-
-
-def _ima_encode_block(samples, pred: int, index: int):
-    """Forward IMA quantizer for one channel's block body (the spec's
-    encoder direction): picks each nibble by the standard magnitude
-    comparison, tracking the decoder's reconstruction so the stream is
-    self-consistent. Returns (nibbles, final pred, final index)."""
-    nibbles = []
-    for s in samples:
-        step = _IMA_STEP_TABLE[index]
-        diff = int(s) - pred
-        b = 0
-        if diff < 0:
-            b = 8
-            diff = -diff
-        if diff >= step:
-            b |= 4
-            diff -= step
-        if diff >= step >> 1:
-            b |= 2
-            diff -= step >> 1
-        if diff >= step >> 2:
-            b |= 1
-        nibbles.append(b)
-        dec, pred, index = _ima_decode_nibbles([b], pred, index)
-    return nibbles, pred, index
-
-
-def _wav_ima_build(samples, rate: int = 8000, block_frames: int = 505) -> bytes:
-    """Forward IMA-ADPCM WAV builder for fixtures/tests: format tag
-    0x11, per-block channel headers carrying the true running
-    predictor/index, mono nibble stream or stereo 4-byte interleave.
-    ``block_frames`` = samples per block per channel INCLUDING the
-    header sample; (block_frames - 1) must be a multiple of 8 for
-    stereo. Not exported API."""
-    import numpy as np
-
-    arr = np.asarray(samples, dtype=np.int64)
-    if arr.ndim == 1:
-        arr = arr[:, None]
-    n, channels = arr.shape
-    assert channels in (1, 2)
-    nib_per_block = block_frames - 1
-    if channels == 2:
-        assert nib_per_block % 8 == 0
-    block_align = 4 * channels + nib_per_block * channels // 2
-    preds = [int(arr[0, c]) for c in range(channels)]
-    idxs = [0] * channels
-    body = bytearray()
-    pos = 0
-    while pos < n:
-        take = min(block_frames, n - pos)
-        blk = arr[pos : pos + take]
-        # header sample per channel = current predictor state, which we
-        # pin to the block's first actual sample
-        for c in range(channels):
-            preds[c] = int(blk[0, c])
-            body += int(preds[c]).to_bytes(2, "little", signed=True)
-            body += bytes((idxs[c], 0))
-        rest = blk[1:]
-        # pad the tail block so every block is full-size (decoder
-        # emits the padding; callers trim by frame count)
-        if rest.shape[0] < nib_per_block:
-            pad = np.repeat(rest[-1:] if rest.shape[0] else blk[-1:],
-                            nib_per_block - rest.shape[0], axis=0)
-            rest = np.vstack([rest, pad]) if rest.shape[0] else pad
-        ch_nibbles = []
-        for c in range(channels):
-            nib, preds[c], idxs[c] = _ima_encode_block(
-                rest[:, c], preds[c], idxs[c]
-            )
-            ch_nibbles.append(nib)
-
-        def pack(nibs):
-            out = bytearray()
-            for i in range(0, len(nibs), 2):
-                out.append(nibs[i] | (nibs[i + 1] << 4))
-            return bytes(out)
-
-        if channels == 1:
-            body += pack(ch_nibbles[0])
-        else:
-            b0, b1 = pack(ch_nibbles[0]), pack(ch_nibbles[1])
-            for w0 in range(0, len(b0), 4):
-                body += b0[w0 : w0 + 4]
-                body += b1[w0 : w0 + 4]
-        pos += take
-    byte_rate = rate * block_align // block_frames
-    fmt = b"fmt " + _struct.pack(
-        "<IHHIIHHHH", 20, 0x11, channels, rate, byte_rate, block_align,
-        4, 2, block_frames,
-    )
-    data = b"data" + _struct.pack("<I", len(body)) + bytes(body)
-    wav_body = b"WAVE" + fmt + data
-    return b"RIFF" + _struct.pack("<I", len(wav_body)) + wav_body
-
-
-def _sniff_audio_samples(payload: bytes):
-    """Container-sniffing dispatch: RIFF/WAVE → WAV, FORM/AIFF → AIFF,
-    .snd → AU, fLaC → FLAC (r13); anything else None."""
-    if len(payload) >= 4:
-        head = payload[:4]
-        if head == b"RIFF":
-            return _wav_pcm_samples(payload)
-        if head == b"FORM":
-            return _aiff_pcm_samples(payload)
-        if head == b".snd":
-            return _au_samples(payload)
-        if head == b"fLaC":
-            return _flac_samples(payload)
-    return None
-
-
-def _crc8_flac(data: bytes) -> int:
-    """CRC-8 poly 0x07, init 0 — the FLAC frame-header CRC."""
-    crc = 0
-    for b in data:
-        crc ^= b
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x07) & 0xFF if crc & 0x80 else (crc << 1) & 0xFF
-    return crc
-
-
-def _crc16_flac(data: bytes) -> int:
-    """CRC-16 poly 0x8005, init 0 (MSB-first) — the FLAC frame CRC."""
-    crc = 0
-    for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = (
-                ((crc << 1) ^ 0x8005) & 0xFFFF
-                if crc & 0x8000
-                else (crc << 1) & 0xFFFF
-            )
-    return crc
-
-
-_FLAC_BLOCK_SIZES = {
-    1: 192, 2: 576, 3: 1152, 4: 2304, 5: 4608,
-    8: 256, 9: 512, 10: 1024, 11: 2048, 12: 4096,
-    13: 8192, 14: 16384, 15: 32768,
-}
-_FLAC_RATES = {
-    1: 88200, 2: 176400, 3: 192000, 4: 8000, 5: 16000, 6: 22050,
-    7: 24000, 8: 32000, 9: 44100, 10: 48000, 11: 96000,
-}
-_FLAC_BPS = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
-_FIXED_COEFS = {
-    0: [], 1: [1], 2: [2, -1], 3: [3, -3, 1], 4: [4, -6, 4, -1],
-}
-
-
-class _FlacBits:
-    """MSB-first bit reader for FLAC frames: multi-bit get, signed get,
-    unary (zero-run) — raises EOFError past the end. Tracks the byte
-    position so frame CRC16 can be verified over the exact span."""
-
-    __slots__ = ("buf", "pos", "acc", "n", "nbuf")
-
-    def __init__(self, buf: bytes, pos: int):
-        self.buf, self.pos, self.acc, self.n = buf, pos, 0, 0
-        self.nbuf = len(buf)
-
-    def get(self, k: int) -> int:
-        acc, n = self.acc, self.n
-        while n < k:
-            if self.pos >= self.nbuf:
-                raise EOFError
-            acc = (acc << 8) | self.buf[self.pos]
-            self.pos += 1
-            n += 8
-        n -= k
-        self.acc = acc & ((1 << n) - 1)
-        self.n = n
-        return (acc >> n) & ((1 << k) - 1)
-
-    def sget(self, k: int) -> int:
-        v = self.get(k)
-        return v - (1 << k) if v & (1 << (k - 1)) else v
-
-    def unary(self) -> int:
-        q = 0
-        while self.get(1) == 0:
-            q += 1
-            if q > 1 << 20:
-                raise EOFError  # corrupt: runaway quotient
-        return q
-
-    def align(self) -> None:
-        self.acc = self.n = 0
-
-    def byte_pos(self) -> int:
-        """Current position rounded down to the consumed byte."""
-        return self.pos
-
-
-def _flac_residual(bits: "_FlacBits", blocksize: int, order: int):
-    """Rice-coded residual (FLAC spec: RESIDUAL): 2-bit method (rice /
-    rice2), 4-bit partition order, per-partition parameter with the
-    all-ones escape to raw n-bit samples. Returns list[int] of
-    blocksize - order values."""
-    method = bits.get(2)
-    if method > 1:
-        return None
-    plen_bits = 4 if method == 0 else 5
-    escape = (1 << plen_bits) - 1
-    po = bits.get(4)
-    nparts = 1 << po
-    if blocksize % nparts:
-        return None  # partitions must divide the block evenly
-    out = []
-    for p in range(nparts):
-        n = (blocksize >> po) - (order if p == 0 else 0)
-        if n < 0:
-            return None
-        param = bits.get(plen_bits)
-        if param == escape:
-            raw = bits.get(5)
-            if raw:
-                out.extend(bits.sget(raw) for _ in range(n))
-            else:
-                out.extend([0] * n)
-        else:
-            for _ in range(n):
-                q = bits.unary()
-                v = (q << param) | bits.get(param)
-                out.append((v >> 1) ^ -(v & 1))  # zigzag
-    return out
-
-
-def _flac_subframe(bits: "_FlacBits", blocksize: int, bps: int):
-    """One subframe (FLAC spec: SUBFRAME): constant / verbatim /
-    fixed 0-4 / LPC 1-32, wasted-bits unpacking. Returns list[int]."""
-    if bits.get(1) != 0:
-        return None  # padding bit must be 0
-    ftype = bits.get(6)
-    wasted = 0
-    if bits.get(1):
-        wasted = 1
-        while bits.get(1) == 0:
-            wasted += 1
-            if wasted > bps:
-                return None
-    ebps = bps - wasted
-    if ebps <= 0 or ebps > 32:
-        return None
-    if ftype == 0:  # CONSTANT
-        out = [bits.sget(ebps)] * blocksize
-    elif ftype == 1:  # VERBATIM
-        out = [bits.sget(ebps) for _ in range(blocksize)]
-    elif 8 <= ftype <= 12:  # FIXED, order 0-4
-        order = ftype - 8
-        if order > blocksize:
-            return None
-        out = [bits.sget(ebps) for _ in range(order)]
-        res = _flac_residual(bits, blocksize, order)
-        if res is None:
-            return None
-        coefs = _FIXED_COEFS[order]
-        for r in res:
-            pred = sum(c * out[-1 - j] for j, c in enumerate(coefs))
-            out.append(pred + r)
-    elif ftype >= 32:  # LPC, order 1-32
-        order = (ftype & 31) + 1
-        if order > blocksize:
-            return None
-        out = [bits.sget(ebps) for _ in range(order)]
-        prec = bits.get(4)
-        if prec == 15:
-            return None
-        prec += 1
-        shift = bits.sget(5)
-        if shift < 0:
-            return None
-        qlp = [bits.sget(prec) for _ in range(order)]
-        res = _flac_residual(bits, blocksize, order)
-        if res is None:
-            return None
-        for r in res:
-            pred = sum(c * out[-1 - j] for j, c in enumerate(qlp)) >> shift
-            out.append(pred + r)
-    else:
-        return None  # reserved subframe types
-    if wasted:
-        out = [v << wasted for v in out]
-    return out
-
-
-def _flac_utf8_number(bits: "_FlacBits"):
-    """The UTF-8-style coded frame/sample number (FLAC borrows the
-    encoding, extended to 36 bits / 7 bytes)."""
-    b0 = bits.get(8)
-    if b0 < 0x80:
-        return b0
-    nbytes = 0
-    mask = 0x40
-    while b0 & mask:
-        nbytes += 1
-        mask >>= 1
-    if nbytes < 1 or nbytes > 6:
-        return None
-    v = b0 & (mask - 1)
-    for _ in range(nbytes):
-        c = bits.get(8)
-        if c & 0xC0 != 0x80:
-            return None
-        v = (v << 6) | (c & 0x3F)
-    return v
-
-
-def _flac_samples(payload: bytes):
-    """REAL FLAC decode → (rate, channels, n_frames, int32-LE bytes) or
-    None — the audio family's first COMPRESSED codec (r13), pure
-    Python, no codec library (the FLAC format is a public spec /
-    RFC 9639): STREAMINFO walk, frame sync with CRC-8-verified headers
-    and CRC-16-verified frames, constant / verbatim / fixed(0-4) /
-    LPC(1-32) subframes, rice + rice2 residuals with escape partitions,
-    wasted bits, and left-side / right-side / mid-side stereo
-    decorrelation. Corrupt streams (bad sync, CRC mismatch, reserved
-    codes, truncation) return an honest None."""
-    import numpy as np
-
-    meta = _flac_meta(payload)
-    if meta is None:
-        return None
-    rate0, channels0, bps0, _dur = meta
-    if not rate0 or rate0 >= (1 << 31) or channels0 < 1 or channels0 > 8:
-        return None
-    # walk metadata blocks to the first frame
-    pos = 4
-    while pos + 4 <= len(payload):
-        hdr = payload[pos]
-        blen = int.from_bytes(payload[pos + 1 : pos + 4], "big")
-        pos += 4 + blen
-        if hdr & 0x80:
-            break
-    if pos >= len(payload):
-        return None
-    total_limit = _MAX_DECODE_PIXELS  # decode-bomb guard: samples cap
-    chans: list[list[int]] = [[] for _ in range(channels0)]
-    try:
-        while pos < len(payload):
-            frame_start = pos
-            bits = _FlacBits(payload, pos)
-            sync = bits.get(14)
-            if sync != 0x3FFE:
-                return None
-            if bits.get(1) != 0:
-                return None  # reserved bit
-            bits.get(1)  # blocking strategy
-            bs_code = bits.get(4)
-            sr_code = bits.get(4)
-            ca = bits.get(4)
-            ss_code = bits.get(3)
-            if bits.get(1) != 0:
-                return None  # reserved bit
-            if _flac_utf8_number(bits) is None:
-                return None
-            if bs_code == 0:
-                return None  # reserved
-            elif bs_code == 6:
-                blocksize = bits.get(8) + 1
-            elif bs_code == 7:
-                blocksize = bits.get(16) + 1
-            else:
-                blocksize = _FLAC_BLOCK_SIZES[bs_code]
-            if sr_code == 0:
-                pass  # from STREAMINFO
-            elif sr_code in _FLAC_RATES:
-                if _FLAC_RATES[sr_code] != rate0:
-                    return None
-            elif sr_code == 12:
-                if bits.get(8) * 1000 != rate0:
-                    return None
-            elif sr_code == 13:
-                if bits.get(16) != rate0:
-                    return None
-            elif sr_code == 14:
-                if bits.get(16) * 10 != rate0:
-                    return None
-            else:
-                return None  # 15 is invalid
-            if ss_code == 0:
-                bps = bps0
-            elif ss_code in _FLAC_BPS:
-                if _FLAC_BPS[ss_code] != bps0:
-                    return None
-                bps = bps0
-            else:
-                return None
-            # CRC-8 over the header bytes read so far
-            hdr_end = bits.byte_pos()
-            if bits.get(8) != _crc8_flac(payload[frame_start:hdr_end]):
-                return None
-            if ca <= 7:
-                nch = ca + 1
-                if nch != channels0:
-                    return None
-                sub = [
-                    _flac_subframe(bits, blocksize, bps) for _ in range(nch)
-                ]
-                if any(s is None for s in sub):
-                    return None
-            elif ca in (8, 9, 10):
-                if channels0 != 2:
-                    return None
-                # the SIDE channel carries one extra bit
-                b0 = bps + (1 if ca == 9 else 0)
-                b1 = bps + (1 if ca in (8, 10) else 0)
-                s0 = _flac_subframe(bits, blocksize, b0)
-                s1 = _flac_subframe(bits, blocksize, b1)
-                if s0 is None or s1 is None:
-                    return None
-                if ca == 8:  # left/side: right = left - side
-                    sub = [s0, [a - b for a, b in zip(s0, s1)]]
-                elif ca == 9:  # right/side: left = right + side
-                    sub = [[a + b for a, b in zip(s0, s1)], s1]
-                else:  # mid/side
-                    left, right = [], []
-                    for m, s in zip(s0, s1):
-                        m = (m << 1) | (s & 1)
-                        left.append((m + s) >> 1)
-                        right.append((m - s) >> 1)
-                    sub = [left, right]
-            else:
-                return None  # reserved channel assignments
-            bits.align()
-            crc_end = bits.byte_pos()
-            crc16 = bits.get(16)
-            if crc16 != _crc16_flac(payload[frame_start:crc_end]):
-                return None
-            for ci in range(channels0):
-                chans[ci].extend(sub[ci])
-            if len(chans[0]) > total_limit:
-                return None  # decode bomb
-            pos = bits.byte_pos()
-    except (EOFError, IndexError, KeyError):
-        return None
-    n_frames = len(chans[0])
-    if n_frames == 0:
-        return None
-    arr = np.empty((n_frames, channels0), np.int32)
-    for ci in range(channels0):
-        arr[:, ci] = np.asarray(chans[ci], dtype=np.int64).astype(np.int32)
-    return (
-        rate0,
-        channels0,
-        n_frames,
-        np.ascontiguousarray(arr.reshape(-1).astype("<i4")).tobytes(),
-    )
-
-
-class _FlacBitWriter:
-    __slots__ = ("buf", "acc", "n")
-
-    def __init__(self):
-        self.buf, self.acc, self.n = bytearray(), 0, 0
-
-    def put(self, value: int, nbits: int) -> None:
-        self.acc = (self.acc << nbits) | (value & ((1 << nbits) - 1))
-        self.n += nbits
-        while self.n >= 8:
-            self.n -= 8
-            self.buf.append((self.acc >> self.n) & 0xFF)
-        self.acc &= (1 << self.n) - 1
-
-    def align(self) -> None:
-        if self.n:
-            self.put(0, 8 - self.n)  # zero padding per spec
-
-
-def _flac_build(
-    samples,
-    rate: int = 8000,
-    bps: int = 16,
-    block_size: int = 256,
-    subframe: str = "fixed2",
-    stereo: str = "independent",
-    rice_param: int | None = None,
-    partition_order: int = 0,
-    escape_raw: int | None = None,
-) -> bytes:
-    """Forward FLAC encoder for fixtures/tests — the spec's forward
-    direction (STREAMINFO, CRC-8 frame headers, CRC-16 frame trailers,
-    rice-zigzag residuals), so decode-equals-original proves
-    ``_flac_samples`` inverts RFC 9639 rather than its own code.
-    ``samples`` is an (n_frames, channels) int array within the bps
-    range. ``subframe``: constant-where-possible is automatic;
-    'verbatim', 'fixed0'..'fixed2', or 'lpc1' (order-1 LPC with unit
-    coefficient — exercises the LPC path deterministically).
-    ``stereo``: 'independent' / 'left_side' / 'right_side' /
-    'mid_side'. ``escape_raw`` forces escape partitions with that raw
-    bit width. Not an optimizing encoder; not exported API."""
-    import numpy as np
-
-    arr = np.asarray(samples, dtype=np.int64)
-    if arr.ndim == 1:
-        arr = arr[:, None]
-    n, channels = arr.shape
-    assert 1 <= channels <= 8 and bps in (8, 16)
-    out = bytearray(b"fLaC")
-    si = bytearray()
-    si += block_size.to_bytes(2, "big") * 2  # min/max block size
-    si += bytes(6)  # min/max frame size unknown
-    packed = (rate << 44) | ((channels - 1) << 41) | ((bps - 1) << 36) | n
-    si += packed.to_bytes(8, "big")
-    si += bytes(16)  # md5 unset
-    out += bytes((0x80,)) + len(si).to_bytes(3, "big") + bytes(si)
-
-    def write_residual(w, res, order_param):
-        w.put(0, 2)  # rice method 0 (4-bit params)
-        w.put(partition_order, 4)
-        nparts = 1 << partition_order
-        per = len(res) + order_param  # == blocksize
-        assert per % nparts == 0
-        idx = 0
-        for p in range(nparts):
-            cnt = per // nparts - (order_param if p == 0 else 0)
-            part = res[idx : idx + cnt]
-            idx += cnt
-            if escape_raw is not None:
-                w.put(15, 4)  # escape
-                w.put(escape_raw, 5)
-                for v in part:
-                    w.put(int(v), escape_raw)
-                continue
-            if rice_param is not None:
-                param = rice_param
-            else:
-                m = int(np.abs(part).mean()) if len(part) else 0
-                param = max(0, min(14, m.bit_length()))
-            w.put(param, 4)
-            for v in part:
-                u = (int(v) << 1) ^ (int(v) >> 63)  # zigzag
-                q, r = u >> param, u & ((1 << param) - 1)
-                w.put(0, q)
-                w.put(1, 1)
-                w.put(r, param)
-
-    def write_subframe(w, vals, ebps):
-        vals = [int(v) for v in vals]
-        if len(set(vals)) == 1 and subframe != "verbatim":
-            w.put(0, 1)
-            w.put(0, 6)  # CONSTANT
-            w.put(0, 1)  # no wasted bits
-            w.put(vals[0], ebps)
-            return
-        if subframe == "verbatim":
-            w.put(0, 1)
-            w.put(1, 6)
-            w.put(0, 1)
-            for v in vals:
-                w.put(v, ebps)
-            return
-        if subframe == "lpc1":
-            # order-1 LPC, unit coefficient, shift 0 — deterministic
-            # exercise of the LPC header/coefficient/residual path
-            order = 1
-            w.put(0, 1)
-            w.put(32 + (order - 1), 6)
-            w.put(0, 1)
-            for v in vals[:order]:
-                w.put(v, ebps)
-            w.put(3, 4)  # precision-1 = 3 → 4-bit coefficients
-            w.put(0, 5)  # shift 0
-            w.put(1, 4)  # qlp coefficient = 1
-            res = [vals[i] - vals[i - 1] for i in range(1, len(vals))]
-            write_residual(w, res, order)
-            return
-        if subframe.startswith("fixed"):
-            order = int(subframe[5:])
-            coefs = _FIXED_COEFS[order]
-            w.put(0, 1)
-            w.put(8 + order, 6)
-            w.put(0, 1)
-            for v in vals[:order]:
-                w.put(v, ebps)
-            res = []
-            for i in range(order, len(vals)):
-                pred = sum(c * vals[i - 1 - j] for j, c in enumerate(coefs))
-                res.append(vals[i] - pred)
-            write_residual(w, res, order)
-            return
-        raise AssertionError(f"unknown subframe kind {subframe}")
-
-    frame_no = 0
-    for start in range(0, n, block_size):
-        blk = arr[start : start + block_size]
-        bsz = blk.shape[0]
-        hdr = _FlacBitWriter()
-        hdr.put(0x3FFE, 14)
-        hdr.put(0, 1)
-        hdr.put(0, 1)  # fixed blocking strategy
-        hdr.put(7, 4)  # explicit 16-bit block size
-        hdr.put(0, 4)  # sample rate from STREAMINFO
-        if stereo == "independent":
-            hdr.put(channels - 1, 4)
-        else:
-            assert channels == 2
-            hdr.put({"left_side": 8, "right_side": 9, "mid_side": 10}[stereo], 4)
-        hdr.put({8: 1, 16: 4}[bps], 3)
-        hdr.put(0, 1)
-        assert frame_no < 128  # single-byte UTF-8 number in fixtures
-        hdr.put(frame_no, 8)
-        hdr.put(bsz - 1, 16)
-        hdr.align()
-        hdr_bytes = bytes(hdr.buf)
-        body = _FlacBitWriter()
-        body.buf += hdr_bytes
-        body.put(_crc8_flac(hdr_bytes), 8)
-        if stereo == "independent":
-            for ci in range(channels):
-                write_subframe(body, blk[:, ci], bps)
-        else:
-            left = blk[:, 0].astype(np.int64)
-            right = blk[:, 1].astype(np.int64)
-            side = left - right
-            if stereo == "left_side":
-                write_subframe(body, left, bps)
-                write_subframe(body, side, bps + 1)
-            elif stereo == "right_side":
-                write_subframe(body, side, bps + 1)
-                write_subframe(body, right, bps)
-            else:  # mid_side
-                mid = (left + right) >> 1
-                write_subframe(body, mid, bps)
-                write_subframe(body, side, bps + 1)
-        body.align()
-        frame_bytes = bytes(body.buf)
-        out += frame_bytes
-        out += _crc16_flac(frame_bytes).to_bytes(2, "big")
-        frame_no += 1
-    return bytes(out)
-
-
-def _audio_samples_op(
-    df: DataFrame, decode_fn, payload_col: str, id_col: str
-) -> DataFrame:
-    """Shared mapInPandas plumbing for REAL audio decoders (``is_stub``
-    = FALSE): ``decode_fn(payload) -> (rate, channels, n_frames,
-    int32-LE bytes) | None``; undecodable rows are OMITTED — the audio
-    analog of ``_real_pixel_decode_op``."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rates, chans, frames, smps = [], [], [], [], []
-            for aid, p in zip(pdf[id_col], pdf[payload_col]):
-                # same corrupt-file policy as _real_pixel_decode_op
-                try:
-                    got = decode_fn(bytes(p) if p is not None else b"")
-                except Exception:
-                    got = None
-                if got is None:
-                    continue
-                rate, ch, nf, raw = got
-                ids.append(int(aid))
-                rates.append(rate)
-                chans.append(ch)
-                frames.append(nf)
-                smps.append(raw)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "sample_rate": pd.Series(rates, dtype="int32"),
-                    "channels": pd.Series(chans, dtype="int32"),
-                    "n_frames": pd.Series(frames, dtype="int64"),
-                    "samples": pd.Series(smps, dtype="object"),
-                    "is_stub": pd.Series([False] * len(ids), dtype="bool"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=AUDIO_SAMPLES_SCHEMA
-    )
-
-
-def decode_wav_samples(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "asset_id",
-) -> DataFrame:
-    """REAL audio decode to the AUDIO_SAMPLES_SCHEMA contract
-    (``is_stub`` = FALSE): PCM WAV via ``_wav_pcm_samples``; rows whose
-    payload is not decodable PCM are OMITTED. Same mapInPandas/Arrow
-    plumbing discipline as the pixel decoders."""
-    return _audio_samples_op(df, _wav_pcm_samples, payload_col, id_col)
-
-
-def decode_audio_samples(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "asset_id",
-) -> DataFrame:
-    """REAL audio decode across containers (``is_stub`` = FALSE):
-    sniffs each payload's magic and dispatches to the WAV (RIFF,
-    little-endian), AIFF (FORM, big-endian + 80-bit extended-float
-    rate), AU (.snd — PCM and G.711 mu-law) or FLAC (r13 — the first
-    COMPRESSED audio codec) decoder — one operator a mixed 100-TB
-    audio corpus can run without pre-sorting by format. Undecodable
-    rows are OMITTED."""
-    return _audio_samples_op(df, _sniff_audio_samples, payload_col, id_col)
-
-
-def decode_flac_samples(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "asset_id",
-) -> DataFrame:
-    """REAL FLAC decode to the AUDIO_SAMPLES_SCHEMA contract
-    (``is_stub`` = FALSE) via ``_flac_samples`` — rice-coded
-    fixed/LPC-predicted subframes, stereo decorrelation, CRC-verified
-    frames; FLAC is LOSSLESS, so tests pin byte-exact sample equality
-    (unlike the tolerance-pinned lossy JPEG). Same mapInPandas/Arrow
-    plumbing as ``decode_wav_samples``."""
-    return _audio_samples_op(df, _flac_samples, payload_col, id_col)
-
-
-AUDIO_STATS_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("n_frames", LongType()),
-        StructField("n_samples", LongType()),
-        StructField("peak_abs", LongType()),
-        StructField("mean_milli", LongType()),
-        StructField("rms_milli", LongType()),
-        StructField("is_stub", BooleanType()),
-    ]
-)
-
-
-def audio_sample_stats(samples: DataFrame) -> DataFrame:
-    """Per-asset waveform statistics over an AUDIO_SAMPLES_SCHEMA frame
-    in EXACT integers: peak |sample|, DC offset in milli-units
-    (floor-div toward -inf, Python's //), and RMS in milli-units via
-    integer isqrt(1e6 * sum(x^2) // n) — int32 samples keep every sum
-    inside exact int64/arbitrary-precision arithmetic, so the numbers
-    are deterministic under any partitioning. Pure row-wise transform
-    (mapInPandas), no shuffle; ``is_stub`` rides through."""
-    import math
-
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, rate, ch, nf, raw, stub in zip(
-                pdf["asset_id"], pdf["sample_rate"], pdf["channels"],
-                pdf["n_frames"], pdf["samples"], pdf["is_stub"],
-            ):
-                arr = np.frombuffer(bytes(raw), dtype="<i4")
-                n = int(arr.size)
-                total = int(arr.sum(dtype=np.int64))
-                # exact energy: full-scale float-PCM samples square to
-                # ~4.6e18 — an int64 SUM of those overflows (r14). Each
-                # square fits int64; sum hi/lo 32-bit halves separately
-                # in exact Python ints (vectorized, arbitrary precision)
-                sq = arr.astype(np.int64)
-                sq *= sq
-                energy = (int((sq >> 32).sum(dtype=np.int64)) << 32) + int(
-                    (sq & 0xFFFFFFFF).sum(dtype=np.int64)
-                )
-                rows.append(
-                    (
-                        int(aid), int(rate), int(ch), int(nf), n,
-                        # widen before abs: np.abs(int32 min) overflows
-                        int(np.abs(arr.astype(np.int64)).max()) if n else 0,
-                        total * 1000 // n,
-                        math.isqrt(1_000_000 * energy // n),
-                        bool(stub),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "sample_rate", "channels", "n_frames",
-                    "n_samples", "peak_abs", "mean_milli", "rms_milli",
-                    "is_stub",
-                ],
-            )
-
-    return samples.mapInPandas(run, schema=AUDIO_STATS_SCHEMA)
-
-
-def synthetic_pcm_wav_assets(spark, n: int = 32) -> DataFrame:
-    """Deterministic REAL PCM WAV fixture: alternating 16-bit/8-bit,
-    mono/stereo, varied rates, sample values computed from (k, i) so
-    every decoded int32 is derivable by the pinning test; every third
-    file carries a trailing junk chunk (the chunk-walk path)."""
-    rows = []
-    for i in range(n):
-        rate = (8000, 16000, 22050, 44100)[i % 4]
-        channels = 1 + (i % 2)
-        bits = 16 if i % 2 == 0 else 8
-        n_frames = 20 + (i % 5)
-        count = n_frames * channels
-        if bits == 16:
-            pcm = b"".join(
-                _struct.pack("<h", ((k * 31 + i * 7) % 65536) - 32768)
-                for k in range(count)
-            )
-        else:
-            pcm = bytes(((k * 13 + i * 3) % 256) for k in range(count))
-        byte_rate = rate * channels * bits // 8
-        fmt = b"fmt " + _struct.pack(
-            "<IHHIIHH", 16, 1, channels, rate, byte_rate,
-            channels * bits // 8, bits,
-        )
-        data = b"data" + _struct.pack("<I", len(pcm)) + pcm
-        if len(pcm) % 2:
-            data += b"\x00"  # chunk word alignment
-        junk = (
-            b"JUNK" + _struct.pack("<I", 4) + b"\x00\x00\x00\x00"
-            if i % 3 == 0
-            else b""
-        )
-        body = b"WAVE" + junk + fmt + data
-        payload = b"RIFF" + _struct.pack("<I", len(body)) + body
-        rows.append((i, "audio", payload, "audio/wav", {"idx": str(i)}))
     from llm_training_data_pipeline_spark.schemas import MULTIMODAL_SCHEMA
 
     return spark.createDataFrame(rows, MULTIMODAL_SCHEMA)
@@ -2809,8 +1017,8 @@ def decode_image_pixels(
     """REAL image decode across containers (``is_stub`` = FALSE):
     sniffs each payload's magic and dispatches to the BMP / PNM / PNG /
     GIF / JPEG / TIFF decoder — one operator a mixed 100-TB image
-    corpus can run without pre-sorting by format (the image analog of
-    ``decode_audio_samples``). Undecodable rows are OMITTED."""
+    corpus can run without pre-sorting by format. Undecodable rows
+    are OMITTED."""
     return _real_pixel_decode_op(df, _sniff_image_pixels, payload_col, id_col)
 
 
@@ -2893,7 +1101,7 @@ def image_perceptual_hash(
     frame (``_perceptual_hash_bits``): robust to container re-encoding
     (the same pixels saved as BMP/PNG/GIF hash IDENTICALLY; a JPEG
     re-encode lands within a few bits) — the signal byte-level
-    ``media_exact_dedup`` cannot see. Pure row-wise mapInPandas, no
+    ``dedup.media_exact_dedup`` cannot see. Pure row-wise mapInPandas, no
     shuffle; ``is_stub`` rides through so fake-decode rows can't
     masquerade as real fingerprints."""
     if method not in ("ahash", "dhash", "phash"):
@@ -2951,153 +1159,6 @@ def image_near_dup_pairs(
         hashes, "hash", id_col,
         max_hamming=max_hamming, num_bands=num_bands,
     )
-
-
-def _ieee754_extended_from_int(v: int) -> bytes:
-    """Encode a positive int as an 80-bit IEEE 754 extended float (the
-    forward direction of ``_ieee754_extended_to_int``, fixture use)."""
-    assert v > 0
-    msb = v.bit_length() - 1
-    return (16383 + msb).to_bytes(2, "big") + (v << (63 - msb)).to_bytes(
-        8, "big"
-    )
-
-
-def _aiff_build(
-    rate: int, channels: int, bits: int, pcm_be: bytes, junk: bool = False,
-    compression: bytes | None = None,
-) -> bytes:
-    """Forward AIFF/AIFC container builder for fixtures/tests:
-    FORM/AIFF with COMM (80-bit extended rate) and SSND (zero
-    offset/blocksize); ``pcm_be`` is the big-endian (or signed 8-bit)
-    sample plane. ``compression`` (r14) switches to FORM/AIFC with the
-    typed COMM (NONE/sowt/fl32/fl64/ulaw/alaw + empty pstring name);
-    bytes-per-sample then follows the compression type (1 for G.711,
-    4/8 for floats). Not exported API."""
-    if compression is None:
-        bps = bits // 8
-        comm = (
-            b"COMM"
-            + _struct.pack(">I", 18)
-            + _struct.pack(">hIh", channels, n_frames := len(pcm_be) // (channels * bps), bits)
-            + _ieee754_extended_from_int(rate)
-        )
-        form_type = b"AIFF"
-    else:
-        cu = compression.upper()
-        bps = {b"NONE": bits // 8, b"SOWT": bits // 8, b"FL32": 4,
-               b"FL64": 8, b"ULAW": 1, b"ALAW": 1}.get(cu, bits // 8)
-        n_frames = len(pcm_be) // (channels * bps)
-        # compression name: empty pstring (count byte 0 + pad to even)
-        comm_body = (
-            _struct.pack(">hIh", channels, n_frames, bits)
-            + _ieee754_extended_from_int(rate)
-            + compression
-            + b"\x00\x00"
-        )
-        comm = b"COMM" + _struct.pack(">I", len(comm_body)) + comm_body
-        form_type = b"AIFC"
-    ssnd = b"SSND" + _struct.pack(">I", 8 + len(pcm_be)) + bytes(8) + pcm_be
-    if len(pcm_be) % 2:
-        ssnd += b"\x00"
-    extra = b"ANNO" + _struct.pack(">I", 4) + b"test" if junk else b""
-    body = form_type + extra + comm + ssnd
-    return b"FORM" + _struct.pack(">I", len(body)) + body
-
-
-def _au_build(
-    rate: int, channels: int, encoding: int, data: bytes,
-    annotation: bytes = b"",
-) -> bytes:
-    """Forward Sun .au builder for fixtures/tests: '.snd' magic,
-    big-endian header, optional annotation field before the data
-    (its length folds into the data offset per the spec)."""
-    off = 24 + len(annotation)
-    return (
-        b".snd"
-        + _struct.pack(">IIIII", off, len(data), encoding, rate, channels)
-        + annotation
-        + data
-    )
-
-
-def synthetic_mixed_audio_assets(spark, n: int = 32) -> DataFrame:
-    """Deterministic REAL mixed-container audio fixture for the
-    sniffing decoder: cycles WAV 16-bit LE / AIFF 16-bit BE / AIFF
-    8-bit signed / AU 16-bit BE PCM / AU G.711 mu-law / FLAC (r13 —
-    fixed-predictor rice frames, stereo decorrelation cycling) /
-    float32 WAV (tag 3) / AIFC sowt (both r14),
-    mono/stereo, varied rates, formula samples — every decoded int32
-    derivable by the pinning test (mu-law via the canonical expansion
-    of the stored code bytes; FLAC is lossless so samples are exact)."""
-    rows = []
-    for i in range(n):
-        kind = i % 8
-        rate = (8000, 16000, 22050, 44100, 48000)[i % 5]
-        channels = 1 + (i % 2)
-        n_frames = 16 + (i % 5)
-        count = n_frames * channels
-        vals16 = [((k * 31 + i * 7) % 65536) - 32768 for k in range(count)]
-        vals8 = [((k * 13 + i * 5) % 256) - 128 for k in range(count)]
-        if kind == 0:
-            pcm = b"".join(_struct.pack("<h", v) for v in vals16)
-            fmt = b"fmt " + _struct.pack(
-                "<IHHIIHH", 16, 1, channels, rate, rate * channels * 2,
-                channels * 2, 16,
-            )
-            data = b"data" + _struct.pack("<I", len(pcm)) + pcm
-            body = b"WAVE" + fmt + data
-            payload = b"RIFF" + _struct.pack("<I", len(body)) + body
-            mime = "audio/wav"
-        elif kind == 1:
-            pcm = b"".join(_struct.pack(">h", v) for v in vals16)
-            payload = _aiff_build(rate, channels, 16, pcm, junk=i % 3 == 0)
-            mime = "audio/aiff"
-        elif kind == 2:
-            pcm = b"".join(_struct.pack("b", v) for v in vals8)
-            payload = _aiff_build(rate, channels, 8, pcm)
-            mime = "audio/aiff"
-        elif kind == 3:
-            pcm = b"".join(_struct.pack(">h", v) for v in vals16)
-            payload = _au_build(rate, channels, 3, pcm, b"note")
-            mime = "audio/basic"
-        elif kind == 4:
-            codes = bytes((k * 17 + i * 3) % 256 for k in range(count))
-            payload = _au_build(rate, channels, 1, codes)
-            mime = "audio/basic"
-        elif kind == 6:  # float32 WAV (format tag 3, r14)
-            floats = [v / 32768.0 for v in vals16]
-            pcm = b"".join(_struct.pack("<f", v) for v in floats)
-            fmt = b"fmt " + _struct.pack(
-                "<IHHIIHH", 16, 3, channels, rate, rate * channels * 4,
-                channels * 4, 32,
-            )
-            data = b"data" + _struct.pack("<I", len(pcm)) + pcm
-            body = b"WAVE" + fmt + data
-            payload = b"RIFF" + _struct.pack("<I", len(body)) + body
-            mime = "audio/wav"
-        elif kind == 7:  # AIFC sowt (little-endian PCM in FORM/AIFC, r14)
-            pcm = b"".join(_struct.pack("<h", v) for v in vals16)
-            payload = _aiff_build(rate, channels, 16, pcm, compression=b"sowt")
-            mime = "audio/aiff"
-        else:  # FLAC: lossless fixed-predictor frames, varied stereo
-            import numpy as np
-
-            mat = np.array(vals16, np.int64).reshape(n_frames, channels)
-            stereo = (
-                ("independent", "left_side", "mid_side")[i % 3]
-                if channels == 2
-                else "independent"
-            )
-            payload = _flac_build(
-                mat, rate=rate, bps=16, block_size=8,
-                subframe=("fixed1", "fixed2", "lpc1")[i % 3], stereo=stereo,
-            )
-            mime = "audio/flac"
-        rows.append((i, "audio", payload, mime, {"idx": str(i)}))
-    from llm_training_data_pipeline_spark.schemas import MULTIMODAL_SCHEMA
-
-    return spark.createDataFrame(rows, MULTIMODAL_SCHEMA)
 
 
 def _bmp_build(img) -> bytes:
@@ -3234,7 +1295,7 @@ def sample_gif_frames(
     rendered: bool = True,
 ) -> DataFrame:
     """REAL animated-GIF frame sampling (``is_stub`` = FALSE) into the
-    same FRAME_SCHEMA contract as ``sample_avi_frames``: every
+    FRAME_SCHEMA contract (one row per sampled frame): every
     ``every_n``-th frame (always including frame 0). Default
     ``rendered=True`` (r13): frames are COMPOSITED onto the logical
     screen per the GIF89a animation model — placement, transparency,
@@ -3281,8 +1342,7 @@ def synthetic_animated_gif_assets(spark, n: int = 8) -> DataFrame:
     """Deterministic REAL animated-GIF fixture: each asset is a clip
     whose frame f shows pattern (i + f) % 6 from the cross-format
     battery, every third frame interlaced — formula-derivable frame
-    content with temporal variation (the GIF analog of
-    ``synthetic_mjpeg_avi_assets``)."""
+    content with temporal variation."""
     rows = []
     for i in range(n):
         n_frames = 3 + (i % 4)
@@ -3357,30 +1417,8 @@ def synthetic_cross_format_assets(spark, n_base: int = 6) -> DataFrame:
     return spark.createDataFrame(rows, MULTIMODAL_SCHEMA)
 
 
-def media_exact_dedup(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "asset_id"
-) -> DataFrame:
-    """Byte-identical asset dedup: min-id winner per md5(payload) — the
-    text exact-dedup convention (deduplicator.py:61-88) applied to
-    opaque binary columns. The shuffle ships (digest, id), never the
-    payload bytes: at 100 TB of media the digest column is the only
-    thing the exchange ever sees, and survivors re-join nothing (the
-    window runs over the projected pair). Appends ``digest`` and
-    ``n_bytes``."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("digest").orderBy(id_col)
-    return (
-        df.withColumn("digest", F.md5(F.col(payload_col)))
-        .withColumn("n_bytes", F.length(F.col(payload_col)).cast("long"))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 # ---------------------------------------------------------------------
-# Deterministic-fake decode + REAL resize/frame plumbing (r9)
+# Deterministic-fake decode + REAL resize plumbing (r9)
 # ---------------------------------------------------------------------
 
 PIXEL_SCHEMA = StructType(
@@ -4650,7 +2688,7 @@ def _jpeg_planes_to_rgb(planes, comps, w, h, max_h, max_v):
 
 def _ycbcr_to_rgb(y, cb, cr):
     """Full-range (JFIF) YCbCr → RGB on float planes → (h, w, 3) uint8.
-    Shared by the JPEG tail and the Y4M frame decoder."""
+    The JPEG decoder's colour tail."""
     import numpy as np
 
     r = y + 1.402 * (cr - 128.0)
@@ -6086,578 +4124,6 @@ FRAME_SCHEMA = StructType(
         StructField("is_stub", BooleanType()),
     ]
 )
-
-
-def _avi_mjpeg_frames(payload: bytes):
-    """REAL AVI container walk → (width, height, fps_milli, [jpeg
-    frame payloads]) or None: RIFF/'AVI ' chunk tree, 'avih' header
-    (frame period, dims), '##dc'/'##db' movi chunks whose data starts
-    with a JPEG SOI. The frame payloads decode with ``_jpeg_pixels`` —
-    MJPEG is the one mainstream video codec that needs no codec
-    library, so the video family's frame path goes real for it (other
-    codecs stay honestly stubbed)."""
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        return None
-    width = height = usec = None
-    frames = []
-
-    def walk(start: int, end: int) -> None:
-        nonlocal width, height, usec
-        i = start
-        while i + 8 <= end:
-            fourcc = payload[i : i + 4]
-            (clen,) = _struct.unpack("<I", payload[i + 4 : i + 8])
-            data_start = i + 8
-            data_end = min(data_start + clen, end)
-            if fourcc == b"LIST" and clen >= 4:
-                walk(data_start + 4, data_end)
-            elif fourcc == b"avih" and clen >= 40 and data_start + 40 <= end:
-                (usec,) = _struct.unpack(
-                    "<I", payload[data_start : data_start + 4]
-                )
-                width, height = _struct.unpack(
-                    "<II", payload[data_start + 32 : data_start + 40]
-                )
-            elif (
-                len(fourcc) == 4
-                and fourcc[2:4] in (b"dc", b"db")
-                and fourcc[:2].isdigit()
-                and payload[data_start : data_start + 2] == b"\xff\xd8"
-            ):
-                frames.append(payload[data_start:data_end])
-            i = data_start + clen + (clen % 2)
-
-    walk(12, len(payload))
-    if not frames or not width or not height or not usec:
-        return None
-    return int(width), int(height), 10**9 // int(usec), frames
-
-
-def sample_avi_frames(
-    df: DataFrame,
-    every_n: int = 30,
-    payload_col: str = "payload",
-    id_col: str = "asset_id",
-) -> DataFrame:
-    """REAL video frame sampling (``is_stub`` = FALSE) for MJPEG AVI:
-    container walk (``_avi_mjpeg_frames``), every ``every_n``-th frame
-    (always including frame 0) decoded through the real JPEG decoder
-    into the same FRAME_SCHEMA contract ``sample_frames_stub`` proved
-    out. Only the SAMPLED frames are entropy-decoded — skipping is a
-    container-level chunk walk, so cost scales with frames kept, not
-    frames stored. Undecodable payloads/frames are OMITTED."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, ws, hs, px = [], [], [], [], []
-            for aid, p in zip(pdf[id_col], pdf[payload_col]):
-                # same corrupt-file policy as _real_pixel_decode_op
-                try:
-                    got = _avi_mjpeg_frames(
-                        bytes(p) if p is not None else b""
-                    )
-                except Exception:
-                    got = None
-                if got is None:
-                    continue
-                _w, _h, _fps, frames = got
-                for i in range(0, len(frames), max(1, int(every_n))):
-                    try:
-                        dec = _jpeg_pixels(frames[i])
-                    except Exception:
-                        dec = None
-                    if dec is None:
-                        continue
-                    fw, fh, rgb = dec
-                    ids.append(int(aid))
-                    fidx.append(i)
-                    ws.append(fw)
-                    hs.append(fh)
-                    px.append(rgb)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "frame_index": pd.Series(fidx, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "channels": pd.Series([3] * len(ids), dtype="int32"),
-                    "pixels": pd.Series(px, dtype="object"),
-                    "is_stub": pd.Series([False] * len(ids), dtype="bool"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def _avi_build(frames_rgb, fps: int = 25) -> bytes:
-    """Forward MJPEG-AVI builder for fixtures/tests: RIFF/'AVI ' with
-    hdrl (avih + vids strl, handler MJPG), movi '00dc' chunks (each a
-    ``_jpeg_build`` JPEG), and an idx1 index. ``frames_rgb`` is a list
-    of (h, w, 3) uint8 arrays sharing one dimension. Not exported
-    API."""
-    h, w, _ = frames_rgb[0].shape
-
-    def chunk(fourcc: bytes, data: bytes) -> bytes:
-        out = fourcc + _struct.pack("<I", len(data)) + data
-        return out + (b"\x00" if len(data) % 2 else b"")
-
-    def lst(list_type: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", list_type + body)
-
-    jpegs = [_jpeg_build(w, h, f.tobytes()) for f in frames_rgb]
-    avih = _struct.pack(
-        "<10I", 10**6 // fps, 0, 0, 0, len(jpegs), 0, 1, 0, w, h
-    ) + bytes(16)
-    strh = (
-        b"vidsMJPG"
-        + _struct.pack("<IHHIIIIIIIII", 0, 0, 0, 0, 1, fps, 0, len(jpegs), 0, 0, 0, 0)
-        + bytes(8)
-    )
-    strf = _struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0x47504A4D, w * h * 3, 0, 0, 0, 0
-    )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi_body = b"".join(chunk(b"00dc", j) for j in jpegs)
-    movi = lst(b"movi", movi_body)
-    idx, off = bytearray(), 4
-    for j in jpegs:
-        idx += b"00dc" + _struct.pack("<III", 0x10, off, len(j))
-        off += 8 + len(j) + (len(j) % 2)
-    body = b"AVI " + hdrl + movi + chunk(b"idx1", bytes(idx))
-    return b"RIFF" + _struct.pack("<I", len(body)) + body
-
-
-def synthetic_mjpeg_avi_assets(spark, n: int = 8) -> DataFrame:
-    """Deterministic REAL MJPEG-AVI fixture: each asset is a short
-    clip whose frame f shows pattern (i + f) % 6 from the cross-format
-    battery — frame content is formula-derivable and varies over time,
-    so temporal stats have real signal."""
-    rows = []
-    for i in range(n):
-        n_frames = 4 + (i % 4)
-        frames = [
-            _cross_format_base_pixels((i + f) % 6) for f in range(n_frames)
-        ]
-        payload = _avi_build(frames, fps=(12, 24, 25, 30)[i % 4])
-        rows.append((i, "video", payload, "video/x-msvideo", {"idx": str(i)}))
-    from llm_training_data_pipeline_spark.schemas import MULTIMODAL_SCHEMA
-
-    return spark.createDataFrame(rows, MULTIMODAL_SCHEMA)
-
-
-def _y4m_frames(payload: bytes, max_frames: int = -1):
-    """REAL YUV4MPEG2 (Y4M) decode → list of (w, h, rgb bytes) or None
-    — the second real video path beside MJPEG-AVI (r13, VERDICT r12
-    #9): uncompressed planar YUV with a trivial public framing (the
-    `YUV4MPEG2 W.. H.. ..` header line, then `FRAME\\n` + raw planes
-    per frame). Colorspaces C420* (I420: 2x2-subsampled chroma,
-    replicate-upsampled; even dims required), C422 (horizontal-only),
-    C444 (full-res) and Cmono (gray). YCbCr→RGB uses the full-range
-    JFIF matrix (documented convention — limited-range studio swing is
-    not detectable from the container; fixtures pin this choice).
-    Corrupt headers, short frames and unknown colorspaces return an
-    honest None. ``max_frames`` >= 0 stops the walk early — skipping
-    is pointer arithmetic, so sampling cost scales with frames KEPT."""
-    import numpy as np
-
-    if not payload.startswith(b"YUV4MPEG2"):
-        return None
-    nl = payload.find(b"\n", 0, 512)
-    if nl < 0:
-        return None
-    w = h = None
-    cs = "420jpeg"  # the Y4M default when C is absent
-    try:
-        toks = payload[:nl].decode("ascii").split(" ")
-    except UnicodeDecodeError:
-        return None
-    for tok in toks[1:]:
-        if not tok:
-            continue
-        k, v = tok[0], tok[1:]
-        if k == "W":
-            w = int(v) if v.isdigit() else None
-        elif k == "H":
-            h = int(v) if v.isdigit() else None
-        elif k == "C":
-            cs = v
-        # F (rate), I (interlace), A (aspect), X (comment) don't affect
-        # pixel layout for progressive content; interlaced content is
-        # stored as full frames in Y4M either way
-    if not w or not h or w * h > _MAX_DECODE_PIXELS:
-        return None
-    if cs.startswith("420"):
-        if w % 2 or h % 2:
-            return None
-        cw, ch_ = w // 2, h // 2
-    elif cs.startswith("422"):
-        if w % 2:
-            return None
-        cw, ch_ = w // 2, h
-    elif cs.startswith("444"):
-        cw, ch_ = w, h
-    elif cs == "mono":
-        cw = ch_ = 0
-    else:
-        return None
-    ysz, csz = w * h, cw * ch_
-    total = ysz + 2 * csz
-    frames = []
-    pos, n = nl + 1, len(payload)
-    while pos < n:
-        if 0 <= max_frames <= len(frames):
-            break
-        fe = payload.find(b"\n", pos, pos + 256)
-        if fe < 0 or payload[pos : pos + 5] != b"FRAME":
-            return None
-        pos = fe + 1
-        if pos + total > n:
-            return None
-        y = np.frombuffer(payload, np.uint8, ysz, pos).reshape(h, w)
-        if csz:
-            cb = np.frombuffer(
-                payload, np.uint8, csz, pos + ysz
-            ).reshape(ch_, cw)
-            cr = np.frombuffer(
-                payload, np.uint8, csz, pos + ysz + csz
-            ).reshape(ch_, cw)
-            cb = np.repeat(np.repeat(cb, h // ch_, axis=0), w // cw, axis=1)
-            cr = np.repeat(np.repeat(cr, h // ch_, axis=0), w // cw, axis=1)
-            rgb = _ycbcr_to_rgb(
-                y.astype(np.float64),
-                cb.astype(np.float64),
-                cr.astype(np.float64),
-            )
-        else:
-            rgb = np.repeat(y[..., None], 3, axis=2)
-        frames.append((w, h, np.ascontiguousarray(rgb).tobytes()))
-        pos += total
-    return frames or None
-
-
-def _y4m_build(frames_rgb, colorspace: str = "420jpeg", fps=(25, 1)) -> bytes:
-    """Forward Y4M builder for fixtures/tests: RGB→YCbCr (full-range
-    JFIF matrix), chroma subsampling by block average (2x2 for 420,
-    2x1 for 422), the `YUV4MPEG2` header line and per-frame `FRAME`
-    sections. ``frames_rgb`` = (h, w, 3) uint8 arrays sharing one
-    dimension, or (h, w) gray for mono. Not exported API."""
-    import numpy as np
-
-    f0 = frames_rgb[0]
-    h, w = f0.shape[:2]
-    out = bytearray(
-        f"YUV4MPEG2 W{w} H{h} F{fps[0]}:{fps[1]} Ip A1:1 C{colorspace}\n"
-        .encode("ascii")
-    )
-    for img in frames_rgb:
-        out += b"FRAME\n"
-        if colorspace == "mono":
-            out += np.ascontiguousarray(img.astype(np.uint8)).tobytes()
-            continue
-        rgb = img.astype(np.float64)
-        r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-        cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-        out += np.clip(np.rint(y), 0, 255).astype(np.uint8).tobytes()
-        for p in (cb, cr):
-            if colorspace.startswith("420"):
-                p = p.reshape(h // 2, 2, w // 2, 2).mean(axis=(1, 3))
-            elif colorspace.startswith("422"):
-                p = p.reshape(h, w // 2, 2).mean(axis=2)
-            out += np.clip(np.rint(p), 0, 255).astype(np.uint8).tobytes()
-    return bytes(out)
-
-
-def sample_y4m_frames(
-    df: DataFrame,
-    every_n: int = 1,
-    payload_col: str = "payload",
-    id_col: str = "asset_id",
-) -> DataFrame:
-    """REAL uncompressed-video frame sampling (``is_stub`` = FALSE)
-    for YUV4MPEG2 into the same FRAME_SCHEMA contract as
-    ``sample_avi_frames``: every ``every_n``-th frame (always
-    including frame 0) through ``_y4m_frames``. Undecodable payloads
-    are OMITTED. At 100 TB the payloads stay in parquet binary
-    columns; decode parallelism == partition count (mapInPandas)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, ws, hs, px = [], [], [], [], []
-            for aid, p in zip(pdf[id_col], pdf[payload_col]):
-                # same corrupt-file policy as _real_pixel_decode_op
-                try:
-                    frames = _y4m_frames(bytes(p) if p is not None else b"")
-                except Exception:
-                    frames = None
-                if not frames:
-                    continue
-                for i in range(0, len(frames), max(1, int(every_n))):
-                    fw, fh, rgb = frames[i]
-                    ids.append(int(aid))
-                    fidx.append(i)
-                    ws.append(fw)
-                    hs.append(fh)
-                    px.append(rgb)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "frame_index": pd.Series(fidx, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "channels": pd.Series([3] * len(ids), dtype="int32"),
-                    "pixels": pd.Series(px, dtype="object"),
-                    "is_stub": pd.Series([False] * len(ids), dtype="bool"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def synthetic_y4m_assets(spark, n: int = 8) -> DataFrame:
-    """Deterministic REAL Y4M fixture: each asset is a clip whose
-    frame f shows pattern (i + f) % 6 from the cross-format battery,
-    cycling colorspaces 420jpeg/422/444/mono — formula-derivable frame
-    content with temporal variation (the uncompressed-video analog of
-    ``synthetic_mjpeg_avi_assets``)."""
-    rows = []
-    for i in range(n):
-        n_frames = 3 + (i % 4)
-        cs = ("420jpeg", "422", "444", "mono")[i % 4]
-        frames = []
-        for f in range(n_frames):
-            img = _cross_format_base_pixels((i + f) % 6)
-            frames.append(img[..., 0] if cs == "mono" else img)
-        payload = _y4m_build(frames, colorspace=cs, fps=(24 + i, 1))
-        rows.append((i, "video", payload, "video/x-yuv4mpeg", {"idx": str(i)}))
-    from llm_training_data_pipeline_spark.schemas import MULTIMODAL_SCHEMA
-
-    return spark.createDataFrame(rows, MULTIMODAL_SCHEMA)
-
-
-def sample_h264_frames(
-    df: DataFrame,
-    every_n: int = 1,
-    payload_col: str = "payload",
-    id_col: str = "asset_id",
-) -> DataFrame:
-    """REAL H.264 frame sampling (``is_stub`` = FALSE) — the third
-    real video path (r13): Annex B elementary streams through the
-    pure-Python Baseline decoder in ``operators/h264.py`` (CAVLC, all
-    intra prediction modes, the 4x4 integer transform stack, and —
-    r14 — the single-reference P-slice subset: quarter-pel MC,
-    P_Skip, 16x8/8x16 partitions), into the same FRAME_SCHEMA
-    contract as ``sample_avi_frames``. In an all-IDR stream every
-    ``every_n``-th frame decodes and the rest cost one NAL scan; with
-    P frames present every picture decodes as a potential reference
-    and sampling bounds the RGB conversion + output (the honest
-    inter-GOP cost model). The in-loop deblocking filter is applied
-    when the stream enables it; pictures may span multiple slices.
-    Streams this subset cannot decode honestly (B slices, CABAC,
-    multi-reference, High profile) are OMITTED, never faked. At 100 TB
-    the payloads stay in parquet binary columns; decode parallelism ==
-    partition count (mapInPandas)."""
-    from llm_training_data_pipeline_spark.operators.h264 import _h264_frames
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, ws, hs, px = [], [], [], [], []
-            for aid, p in zip(pdf[id_col], pdf[payload_col]):
-                # same corrupt-file policy as _real_pixel_decode_op
-                try:
-                    frames = _h264_frames(
-                        bytes(p) if p is not None else b"",
-                        every_n=max(1, int(every_n)),
-                    )
-                except Exception:
-                    frames = None
-                if not frames:
-                    continue
-                for i, fw, fh, rgb in frames:
-                    ids.append(int(aid))
-                    fidx.append(i)
-                    ws.append(fw)
-                    hs.append(fh)
-                    px.append(rgb)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "frame_index": pd.Series(fidx, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "channels": pd.Series([3] * len(ids), dtype="int32"),
-                    "pixels": pd.Series(px, dtype="object"),
-                    "is_stub": pd.Series([False] * len(ids), dtype="bool"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def synthetic_h264_assets(spark, n: int = 6) -> DataFrame:
-    """Deterministic REAL H.264 fixture: each asset is an all-IDR
-    Annex B clip whose frame f shows pattern (i + f) % 6 from the
-    cross-format battery, QP varying per clip (14..39) so fixtures
-    span sparse and dense CAVLC — the compressed-video analog of
-    ``synthetic_y4m_assets``. The forward encoder's per-macroblock
-    plan cycles I_PCM / I_16x16 / I_4x4, so every clip exercises all
-    three macroblock families; odd clips enable the in-loop
-    deblocking filter, clips cycle 1-3 slices per picture (idc 2 on
-    every 6th). Clips with i % 3 != 0 are IDR+P GOPs (r14, VERDICT
-    r13 #7): the P frames reference the previous reconstruction and
-    cycle P_Skip / quarter-pel MC / 16x8 / 8x16 / intra-in-P
-    macroblocks."""
-    from llm_training_data_pipeline_spark.operators.h264 import _h264_build
-
-    rows = []
-    for i in range(n):
-        n_frames = 2 + (i % 3)
-        frames = [
-            _cross_format_base_pixels((i + f) % 6) for f in range(n_frames)
-        ]
-        payload = _h264_build(
-            frames, qp=14 + (i * 5) % 26, deblock=bool(i % 2),
-            deblock_offsets=((1, -1) if i % 4 == 3 else (0, 0)),
-            slices=1 + (i % 3), idc2=(i % 6 == 5),
-            gop=n_frames if i % 3 else 1,
-        )
-        rows.append((i, "video", payload, "video/h264", {"idx": str(i)}))
-    from llm_training_data_pipeline_spark.schemas import MULTIMODAL_SCHEMA
-
-    return spark.createDataFrame(rows, MULTIMODAL_SCHEMA)
-
-
-def sample_mp4_frames(
-    df: DataFrame,
-    every_n: int = 1,
-    payload_col: str = "payload",
-    id_col: str = "asset_id",
-) -> DataFrame:
-    """REAL MP4 frame sampling (``is_stub`` = FALSE) for H.264 'avc1'
-    tracks — the container most real-world H.264 travels in: ISO-BMFF
-    demux (avcC parameter sets, stsz/stsc/stco sample tables,
-    length-prefixed NALs) feeding the same decoder as
-    ``sample_h264_frames`` — IDR/I pictures and (r14) single-reference
-    P GOPs. This is the REAL path next to ``sample_frames_stub``'s
-    honest fake: MP4s whose samples this subset cannot decode
-    (B slices, CABAC, multi-reference, non-AVC codecs) are OMITTED,
-    never faked. In all-intra tracks skipped samples cost a
-    sample-table walk only; with P samples present every picture
-    decodes as a potential reference. At 100 TB the payloads stay in
-    parquet binary columns; decode parallelism == partition count."""
-    from llm_training_data_pipeline_spark.operators.h264 import (
-        _mp4_h264_frames,
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, ws, hs, px = [], [], [], [], []
-            for aid, p in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    frames = _mp4_h264_frames(
-                        bytes(p) if p is not None else b"",
-                        every_n=max(1, int(every_n)),
-                    )
-                except Exception:
-                    frames = None
-                if not frames:
-                    continue
-                for i, fw, fh, rgb in frames:
-                    ids.append(int(aid))
-                    fidx.append(i)
-                    ws.append(fw)
-                    hs.append(fh)
-                    px.append(rgb)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "frame_index": pd.Series(fidx, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "channels": pd.Series([3] * len(ids), dtype="int32"),
-                    "pixels": pd.Series(px, dtype="object"),
-                    "is_stub": pd.Series([False] * len(ids), dtype="bool"),
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def synthetic_mp4_avc_assets(spark, n: int = 6) -> DataFrame:
-    """Deterministic REAL MP4 fixture: each asset is an isom/avc1
-    container muxing the H.264 forward encoder's all-IDR output
-    (length-prefixed samples, real stsd/stsz/stsc/stco tables), frame
-    f showing pattern (i + f) % 6 — the containerised sibling of
-    ``synthetic_h264_assets``; odd clips run the loop filter, clips
-    with i % 3 != 0 are IDR+P GOPs (r14)."""
-    from llm_training_data_pipeline_spark.operators.h264 import _mp4_avc_build
-
-    rows = []
-    for i in range(n):
-        n_frames = 2 + (i % 3)
-        frames = [
-            _cross_format_base_pixels((i + f) % 6) for f in range(n_frames)
-        ]
-        payload = _mp4_avc_build(
-            frames, qp=16 + (i * 7) % 24, fps=24 + i, deblock=bool(i % 2),
-            slices=1 + (i % 2), gop=n_frames if i % 3 else 1,
-        )
-        rows.append((i, "video", payload, "video/mp4", {"idx": str(i)}))
-    from llm_training_data_pipeline_spark.schemas import MULTIMODAL_SCHEMA
-
-    return spark.createDataFrame(rows, MULTIMODAL_SCHEMA)
-
-
-def sample_frames_stub(
-    df: DataFrame,
-    every_n: int = 30,
-    width: int = 8,
-    height: int = 8,
-    payload_col: str = "payload",
-    id_col: str = "asset_id",
-) -> DataFrame:
-    """Frame sampling with REAL container parsing and FAKE frame
-    content: the frame count comes from the actual MP4 stbl/stsz box
-    walk (``_mp4_meta`` — the same parse ``decode_video_meta`` ships),
-    sampled indices are every ``every_n``-th frame (always including
-    frame 0), and each emitted frame's pixel buffer is the md5
-    keystream of (payload, frame_index) — deterministic and
-    ``is_stub``-marked. The REAL path for H.264-intra avc1 tracks is
-    ``sample_mp4_frames`` (r13); this stub remains the honest-fake
-    contract for codecs we cannot decode (inter GOPs, H.265, VP9…).
-    """
-    n = width * height * 3
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, px = [], [], []
-            for aid, p in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(p) if p is not None else b""
-                n_frames = _mp4_frame_count(payload)
-                for i in range(0, int(n_frames), max(1, int(every_n))):
-                    ids.append(int(aid))
-                    fidx.append(i)
-                    px.append(
-                        _md5_keystream(payload + i.to_bytes(8, "big"), n)
-                    )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pd.Series(ids, dtype="int64"),
-                    "frame_index": pd.Series(fidx, dtype="int64"),
-                    "width": width,
-                    "height": height,
-                    "channels": 3,
-                    "pixels": px,
-                    "is_stub": True,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema=FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -892,6 +892,12 @@ def pq_encode_rows(
     Row form is the registry/oracle surface (the driver's canonicalizer
     rejects ARRAY cells); ``pq_codes`` collects rows to the compact
     ``codes`` array for the scoring path.
+
+    Codebook contract: each sub's codes must be exactly ``0..k-1`` with
+    no gaps. The emitted code is the centroid's index in the code-sorted
+    array, not the stored ``code`` value, so a gap or offset would
+    silently shift every code after it. ``pq_codebook`` always emits
+    contiguous codes.
     """
     cb = codebook if codebook is not None else pq_codebook(corpus, m, ks, vec_col, id_col)
     # m rows: the sub's centroids as ONE array ordered by code, so the

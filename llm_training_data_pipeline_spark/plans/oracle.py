@@ -4746,7 +4746,7 @@ def dsir_sample_sql(
 
 
 def media_exact_dedup_sql(prefix_chars: int = 40) -> str:
-    """Mirror of multimodal.media_exact_dedup over payloads derived from
+    """Mirror of dedup.media_exact_dedup over payloads derived from
     the documents table (utf-8 bytes of a text prefix — the oracle-
     visible stand-in for opaque media blobs; md5 over the same bytes)."""
     return f"""

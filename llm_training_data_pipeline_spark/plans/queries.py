@@ -105,9 +105,6 @@ _CHANGED_IN_ROUND: dict[str, int] = {
     "ann_lsh_topk": 6,
     # r6: BMP/WebP added to the image header battery
     "multimodal_image_meta": 6,
-    # r6: FLAC STREAMINFO added to the audio header battery; second wave
-    # added MP3 + Ogg/Opus and made the fixtures cycle formats
-    "multimodal_audio_meta": 6,
     # r6 second wave: TIFF in the image battery + format-cycling fixture
     # (also shifts the byte-histogram features off the same fixture)
     "multimodal_features": 6,
@@ -265,23 +262,17 @@ _CHANGED_IN_ROUND.update(
 # r13: pq_topk's ADC scan extracted into the shared _adc_scored (plan
 # identical, code moved — re-execute the rerank consumer); GIF frame
 # sampling defaults to disposal-composited RENDERED frames (row values
-# change: logical-screen dims; row count unchanged, rows-only check);
-# the mixed-audio fixture now cycles 6 container kinds (FLAC added) so
-# audio_decode_stats row values shift (count unchanged, rows-only)
+# change: logical-screen dims; row count unchanged, rows-only check)
 _CHANGED_IN_ROUND.update(
     {
         "pq_topk_reranked": 13,
         "gif_frame_stats": 13,
-        "audio_decode_stats": 13,
         # r13 third wave: the cross-format battery's TIFF leg now
         # alternates PackBits strips / LZW+predictor 16x16 tiles, so
         # tiff_pixel_stats values and image_near_dup payload digests
         # shift (row counts unchanged, rows-only checks)
         "tiff_pixel_stats": 13,
         "image_near_dup": 13,
-        # r13 third wave: multimodal_video_meta gains codec/dims
-        # columns + 4 real avc1 rows (schema and count both change)
-        "multimodal_video_meta": 13,
     }
 )
 # r14: new capped embedding-pair row + its recall audit (VERDICT r13
@@ -291,15 +282,8 @@ _CHANGED_IN_ROUND.update(
     {
         "embedding_ann_pairs_capped": 14,
         "embedding_cap_recall": 14,
-        # r14: the mixed-audio fixture cycles 8 kinds (float32 WAV +
-        # AIFC sowt added) — row values shift, count unchanged
-        "audio_decode_stats": 14,
         # r14: TTML/DFXP joins the caption family
         "ttml_cues_parse": 14,
-        # r14: the H.264/MP4 fixtures now include IDR+P GOP clips
-        # (P-slice decode, VERDICT r13 #7) — row values shift
-        "h264_frame_stats": 14,
-        "mp4_frame_stats": 14,
     }
 )
 # r14 OPTIMIZATION round: result-preserving plan restructures (values
@@ -1999,8 +1983,8 @@ def q_gif_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     RENDERED per the GIF89a animation model (r13 — placement,
     transparency, disposal compositing onto the logical screen;
     VERDICT r12 #5), each through the real GIF decoder, then
-    per-(clip, frame) exact integer pixel stats via the same
-    composite-id trick as mjpeg_frame_stats. Rows-only check (binary
+    per-(clip, frame) exact integer pixel stats via a composite id
+    (asset_id * 1000 + frame_index). Rows-only check (binary
     self-contained fixture); compositing pinned against an independent
     in-test compositor in tests/test_multimodal.py
     (multimodal.sample_gif_frames + image_pixel_stats)."""
@@ -2013,144 +1997,6 @@ def q_gif_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames = sample_gif_frames(
         synthetic_animated_gif_assets(spark, n=8), every_n=2
     )
-    composite = frames.select(
-        (F.col("asset_id") * 1000 + F.col("frame_index")).alias("asset_id"),
-        "width", "height", "channels", "pixels", "is_stub",
-    )
-    stats = image_pixel_stats(composite)
-    return stats.select(
-        (F.col("asset_id") / 1000).cast("long").alias("clip_id"),
-        F.pmod("asset_id", F.lit(1000)).cast("long").alias("frame_index"),
-        "width", "height", "n_pixels",
-        "mean_r_milli", "mean_g_milli", "mean_b_milli",
-        "luminance_milli", "is_stub",
-    ).orderBy("clip_id", "frame_index")
-
-
-@register("mjpeg_frame_stats", None)
-def q_mjpeg_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The VIDEO family's first REAL frame path (r12): MJPEG AVI —
-    RIFF container walk to the '00dc' chunks, every-2nd-frame sampling
-    (only sampled frames pay entropy decode), each through the real
-    JPEG decoder, then per-(asset, frame) exact integer pixel stats
-    via a composite id (asset_id * 1000 + frame_index — fixture clips
-    are < 1000 frames). Rows-only check (binary self-contained
-    fixture); frame content pinned against the cross-format pattern
-    battery in tests/test_multimodal.py (multimodal.sample_avi_frames
-    + image_pixel_stats)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        image_pixel_stats,
-        sample_avi_frames,
-        synthetic_mjpeg_avi_assets,
-    )
-
-    frames = sample_avi_frames(
-        synthetic_mjpeg_avi_assets(spark, n=8), every_n=2
-    )
-    composite = frames.select(
-        (F.col("asset_id") * 1000 + F.col("frame_index")).alias("asset_id"),
-        "width", "height", "channels", "pixels", "is_stub",
-    )
-    stats = image_pixel_stats(composite)
-    return stats.select(
-        (F.col("asset_id") / 1000).cast("long").alias("clip_id"),
-        F.pmod("asset_id", F.lit(1000)).cast("long").alias("frame_index"),
-        "width", "height", "n_pixels",
-        "mean_r_milli", "mean_g_milli", "mean_b_milli",
-        "luminance_milli", "is_stub",
-    ).orderBy("clip_id", "frame_index")
-
-
-@register("y4m_frame_stats", None)
-def q_y4m_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The VIDEO family's second REAL frame path (r13, VERDICT r12
-    #9): uncompressed YUV4MPEG2 — header + FRAME framing, planar
-    I420/422/444/mono decode with replicate chroma upsample
-    (full-range JFIF matrix, pinned in tests), every-2nd-frame
-    sampling (skipping is pointer arithmetic), then per-(clip, frame)
-    exact integer pixel stats via the composite-id trick shared with
-    mjpeg_frame_stats. Rows-only check (binary self-contained
-    fixture); decode pinned against the forward _y4m_build in
-    tests/test_multimodal.py (multimodal.sample_y4m_frames +
-    image_pixel_stats)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        image_pixel_stats,
-        sample_y4m_frames,
-        synthetic_y4m_assets,
-    )
-
-    frames = sample_y4m_frames(synthetic_y4m_assets(spark, n=8), every_n=2)
-    composite = frames.select(
-        (F.col("asset_id") * 1000 + F.col("frame_index")).alias("asset_id"),
-        "width", "height", "channels", "pixels", "is_stub",
-    )
-    stats = image_pixel_stats(composite)
-    return stats.select(
-        (F.col("asset_id") / 1000).cast("long").alias("clip_id"),
-        F.pmod("asset_id", F.lit(1000)).cast("long").alias("frame_index"),
-        "width", "height", "n_pixels",
-        "mean_r_milli", "mean_g_milli", "mean_b_milli",
-        "luminance_milli", "is_stub",
-    ).orderBy("clip_id", "frame_index")
-
-
-@register("h264_frame_stats", None)
-def q_h264_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The VIDEO family's third REAL frame path and first COMPRESSED
-    codec (r13; r14 adds P slices, VERDICT r13 #7): H.264 Annex B
-    streams — NAL framing, exp-Golomb parameter sets, CAVLC entropy
-    decode, all intra prediction modes, quarter-pel motion
-    compensation with P_Skip/16x8/8x16 partitions, the 4x4 integer
-    transform stack (operators/h264.py) — every-2nd-frame sampling
-    (all-IDR clips skip decode entirely; IDR+P GOP clips decode every
-    picture as a reference and sample the output — the honest
-    inter-GOP cost model), then per-(clip, frame) exact integer pixel
-    stats via the composite-id trick shared with mjpeg_frame_stats.
-    Rows-only check (binary self-contained fixture); decoder pinned
-    BIT-EXACT against the independent forward _h264_build in
-    tests/test_h264.py (multimodal.sample_h264_frames +
-    image_pixel_stats)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        image_pixel_stats,
-        sample_h264_frames,
-        synthetic_h264_assets,
-    )
-
-    frames = sample_h264_frames(synthetic_h264_assets(spark, n=6), every_n=2)
-    composite = frames.select(
-        (F.col("asset_id") * 1000 + F.col("frame_index")).alias("asset_id"),
-        "width", "height", "channels", "pixels", "is_stub",
-    )
-    stats = image_pixel_stats(composite)
-    return stats.select(
-        (F.col("asset_id") / 1000).cast("long").alias("clip_id"),
-        F.pmod("asset_id", F.lit(1000)).cast("long").alias("frame_index"),
-        "width", "height", "n_pixels",
-        "mean_r_milli", "mean_g_milli", "mean_b_milli",
-        "luminance_milli", "is_stub",
-    ).orderBy("clip_id", "frame_index")
-
-
-@register("mp4_frame_stats", None)
-def q_mp4_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """H.264-in-MP4 — the container most real-world H.264 travels in
-    (r13; r14 adds IDR+P GOP samples): ISO-BMFF avc1 demux (avcC
-    parameter sets, stsz/stsc/stco sample tables, length-prefixed
-    NALs) feeding the same decoder as h264_frame_stats,
-    every-2nd-sample sampling, then per-(clip, frame) exact integer
-    pixel stats. This is the REAL path that retires
-    sample_frames_stub's md5 buffers for intra and single-reference-P
-    AVC tracks. Rows-only check (binary self-contained fixture); demux +
-    decode pinned against the independent forward _mp4_avc_build /
-    _h264_build in tests/test_h264.py (multimodal.sample_mp4_frames +
-    image_pixel_stats)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        image_pixel_stats,
-        sample_mp4_frames,
-        synthetic_mp4_avc_assets,
-    )
-
-    frames = sample_mp4_frames(synthetic_mp4_avc_assets(spark, n=6), every_n=2)
     composite = frames.select(
         (F.col("asset_id") * 1000 + F.col("frame_index")).alias("asset_id"),
         "width", "height", "channels", "pixels", "is_stub",
@@ -2301,27 +2147,6 @@ def q_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return image_pixel_stats(px).orderBy("asset_id")
 
 
-@register("audio_decode_stats", None)
-def q_audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixed-container audio decode (r12): one sniffing operator over
-    WAV (RIFF LE) / AIFF (FORM BE, 80-bit extended-float rate, signed
-    8-bit) / AU (.snd — BE PCM and G.711 mu-law expansion) payloads —
-    what a 100-TB audio corpus needs without pre-sorting by format —
-    then the exact integer waveform stats. Rows-only check (binary
-    self-contained fixture); every decoded int32 pinned against
-    per-sample formulas and the canonical G.711 table in
-    tests/test_multimodal.py (multimodal.decode_audio_samples +
-    audio_sample_stats)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        audio_sample_stats,
-        decode_audio_samples,
-        synthetic_mixed_audio_assets,
-    )
-
-    samples = decode_audio_samples(synthetic_mixed_audio_assets(spark, n=32))
-    return audio_sample_stats(samples).orderBy("asset_id")
-
-
 @register("webp_pixel_stats", None)
 def q_webp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The seventh real image decoder (r13): WebP lossless (VP8L) —
@@ -2341,46 +2166,6 @@ def q_webp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     px = decode_webp_pixels(synthetic_webp_assets(spark, n=12))
     return image_pixel_stats(px).orderBy("asset_id")
-
-
-@register("flac_sample_stats", None)
-def q_flac_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The audio family's first COMPRESSED codec (r13): FLAC frames —
-    CRC-verified headers/trailers, rice/rice2 residuals, constant /
-    verbatim / fixed(0-4) / LPC subframes, wasted bits, left-side /
-    right-side / mid-side stereo decorrelation — decoded to exact
-    int32 samples, then the integer waveform stats. Rows-only check
-    (binary self-contained fixture); FLAC is lossless, so every sample
-    is pinned byte-exact against the forward _flac_build in
-    tests/test_multimodal.py (multimodal.decode_flac_samples +
-    audio_sample_stats)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        audio_sample_stats,
-        decode_flac_samples,
-        synthetic_flac_assets,
-    )
-
-    samples = decode_flac_samples(synthetic_flac_assets(spark, n=32))
-    return audio_sample_stats(samples).orderBy("asset_id")
-
-
-@register("wav_sample_stats", None)
-def q_wav_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The audio family's first REAL decode (r12): PCM WAV samples
-    (RIFF chunk walk, 16-bit signed / 8-bit centered, junk chunks)
-    widened to int32, then exact integer waveform stats — peak |x|,
-    floor-div DC milli-offset, integer-isqrt RMS. Rows-only check
-    (binary self-contained fixture); every decoded sample pinned against
-    an independent formula in tests/test_multimodal.py
-    (multimodal.decode_wav_samples + audio_sample_stats)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        audio_sample_stats,
-        decode_wav_samples,
-        synthetic_pcm_wav_assets,
-    )
-
-    samples = decode_wav_samples(synthetic_pcm_wav_assets(spark, n=32))
-    return audio_sample_stats(samples).orderBy("asset_id")
 
 
 @register("multimodal_features", None)
@@ -2407,9 +2192,7 @@ def q_media_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     for opaque blobs so the digest math is oracle-checkable; 24 dup
     payloads at sf0.01). The exchange ships (digest, id) only — at
     100 TB of media the payload bytes never cross a shuffle."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        media_exact_dedup,
-    )
+    from llm_training_data_pipeline_spark.operators.dedup import media_exact_dedup
 
     assets = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("asset_id"),
@@ -2961,43 +2744,6 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "session_value",
         )
     )
-
-
-@register("multimodal_audio_meta", None)
-def q_multimodal_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio counterpart of multimodal_image_meta: RIFF/WAVE header
-    parsing (sample rate/channels/bits/duration) over Arrow batches —
-    real stdlib parsing, deterministic fixture, rows-only check."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        decode_audio_meta,
-        synthetic_audio_assets,
-    )
-
-    return decode_audio_meta(synthetic_audio_assets(spark, 64))
-
-
-@register("multimodal_video_meta", None)
-def q_multimodal_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video counterpart: ISO-BMFF/MP4 container box-walk (ftyp brand,
-    mvhd timescale + duration in both version layouts, trak count,
-    plus the stsd codec fourcc + coded dims, r13) over Arrow batches —
-    real stdlib parsing over the header-only fixture (NULL codec) AND
-    real muxed avc1 clips (codec='avc1', dims from the sample entry);
-    rows-only check (binary payloads are not SQL-expressible)."""
-    import pyspark.sql.functions as _F
-
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        decode_video_meta,
-        synthetic_mp4_avc_assets,
-        synthetic_video_assets,
-    )
-
-    assets = synthetic_video_assets(spark, 64).unionByName(
-        synthetic_mp4_avc_assets(spark, n=4).withColumn(
-            "asset_id", _F.col("asset_id") + 100
-        )
-    )
-    return decode_video_meta(assets).orderBy("asset_id")
 
 
 @register("vocab_stats", oracle.vocab_stats_sql())
@@ -5664,29 +5410,6 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return ivfpq_topk(emb, queries, k=5, n_clusters=16, n_probe=3, m=8, ks=16)
-
-
-@register("video_frame_sample_plan", None)
-def q_video_frame_sample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling work plan: per video asset, the REAL stsz frame
-    count (recursive ISO-BMFF box walk) and how many frames an
-    every-30th schedule decodes — the row a pipeline sizes its decode
-    fan-out from. Rows-only (binary payloads); the stub frame buffers
-    themselves are pinned in tests (multimodal.sample_frames_stub)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        sample_frames_stub,
-        synthetic_video_assets,
-    )
-
-    frames = sample_frames_stub(synthetic_video_assets(spark, 64), every_n=30)
-    return (
-        frames.groupBy("asset_id")
-        .agg(
-            (F.max("frame_index") + F.lit(1)).cast("long").alias("max_index_p1"),
-            F.count(F.lit(1)).cast("long").alias("n_sampled"),
-        )
-        .orderBy("asset_id")
-    )
 
 
 @register(

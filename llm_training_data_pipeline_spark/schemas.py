@@ -289,12 +289,12 @@ TOKENIZED_SCHEMA = StructType(
     ]
 )
 
-# Multimodal asset row (engine extension; decode paths are stubbed — the
-# image/audio libraries are not in this container, the Spark plumbing is real)
+# Image asset row (engine extension; the decoders in operators/multimodal.py
+# are pure Python/numpy, no imaging library needed)
 MULTIMODAL_SCHEMA = StructType(
     [
         StructField("asset_id", LongType()),
-        StructField("modality", StringType()),  # image | audio | video
+        StructField("modality", StringType()),  # "image"
         StructField("payload", BinaryType()),
         StructField("mime_type", StringType()),
         StructField("meta", MapType(StringType(), StringType())),

@@ -16,7 +16,9 @@ is scale-motivated:
 from __future__ import annotations
 
 import os
+import sys
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 
@@ -48,14 +50,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
     )
-    # A/B knob (r15, guide §3.1): when set, let the planner pick shuffled
-    # hash join over sort-merge ("false" enables SHJ when its size
-    # conditions fit). Unset = Spark default (prefer sort-merge). Kept as
-    # an env knob so the suite-wide A/B is reproducible; see
-    # OPTIMIZATION_r15.md for the measured verdict.
-    psm = os.environ.get("SPARK_GRAFT_PREFER_SMJ")
-    if psm is not None:
-        builder = builder.config("spark.sql.join.preferSortMergeJoin", psm)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
@@ -65,7 +59,9 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally provided session.
 
     The driver harness hands us its own SparkSession; this applies the subset
-    of our tuning that is legal post-startup.
+    of our tuning that is legal post-startup. A conf the host has locked
+    raises ``AnalysisException``; that key is reported on stderr and
+    skipped. Any other error propagates.
     """
     runtime_confs = {
         "spark.sql.adaptive.enabled": "true",
@@ -77,6 +73,6 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
     for k, v in runtime_confs.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # conf locked by the hosting harness — keep going
+        except AnalysisException as e:
+            print(f"tune_for_session: {k} is locked ({e})", file=sys.stderr)
     return spark

@@ -22,7 +22,7 @@ rate) and sinks compose freely.
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -297,10 +297,10 @@ def _banded_stream(
     HOF-path minhash signature, explode to (id, sig, band bucket).
 
     Contract: the id column is ALWAYS emitted as ``doc_id`` regardless of
-    ``id_col`` — the stateful processors downstream (GroupState and
-    transformWithState variants) key on that fixed name, and the public
-    acceptance schema is ``(bucket, doc_id)`` (ADVICE r13: a custom
-    ``id_col`` used to KeyError inside the processor)."""
+    ``id_col`` — the GroupState processors downstream key on that fixed
+    name, and the public acceptance schema is ``(bucket, doc_id)``
+    (ADVICE r13: a custom ``id_col`` used to KeyError inside the
+    processor)."""
     from llm_training_data_pipeline_spark.functions.hashing import lsh_bands, minhash_signature
     from llm_training_data_pipeline_spark.functions.text import char_shingles
 
@@ -683,187 +683,4 @@ def session_window_counts(
             "n_events",
             "total_value",
         )
-    )
-
-
-def streaming_exact_dedup_tws(
-    stream: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """D6 exact variant on the Spark 4 ``transformWithStateInPandas`` API.
-
-    Keyed by content digest; a ValueState flag marks digests already seen,
-    so only the first arrival per digest is emitted. Functionally equivalent
-    to ``streaming_exact_dedup`` but on the modern StatefulProcessor API
-    (explicit state variables, TTL support, richer timers); kept alongside
-    the watermark-based variant as the forward-looking implementation.
-
-    Capability-gated: the transformWithState protocol needs
-    ``google.protobuf`` (absent in this container); use
-    ``streaming_exact_dedup`` / ``streaming_minhash_dedup``
-    (applyInPandasWithState) where it is unavailable.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf, which is "
-            "not installed here; use streaming_exact_dedup instead"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = StructType(
-        [StructField("h", StringType()), StructField(id_col, LongType())]
-    )
-
-    class FirstSeenProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState(
-                "seen", StructType([StructField("flag", LongType())])
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> "Iterator[pd.DataFrame]":
-            if self._seen.exists():
-                return iter(())
-            first_id = None
-            for pdf in rows:
-                if len(pdf):
-                    cand = int(pdf[id_col].min())
-                    first_id = cand if first_id is None else min(first_id, cand)
-            if first_id is None:
-                return iter(())
-            self._seen.update((1,))
-            return iter([pd.DataFrame({"h": [key[0]], id_col: [first_id]})])
-
-        def close(self) -> None:
-            pass
-
-    hashed = stream.withColumn("_h", exact_hash(F.col(text_col))).select(
-        F.col("_h"), F.col(id_col)
-    )
-    return hashed.groupBy("_h").transformWithStateInPandas(
-        statefulProcessor=FirstSeenProcessor(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-def _make_tws_neardup_processor(
-    threshold: float, num_perm: int, state_ttl_ms: int | None
-):
-    """StatefulProcessor class for the transformWithState near-dup
-    variant (r13, VERDICT r12 #10). Factory (not inline in the
-    operator) so the processor LOGIC is unit-testable with a fake
-    handle in containers where the transformWithState protocol itself
-    cannot run — the accept/reject semantics are the shared
-    ``_accept_greedy`` kernel, identical to the applyInPandasWithState
-    paths (pinned stream==batch in tests/test_streaming.py)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class NearDupProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # per-state TTL — the SURVEY §7 risk-list ask the old
-            # GroupState API only approximated with manual timeouts:
-            # idle bucket state evicts automatically after
-            # state_ttl_ms without a timer round-trip
-            self._sigs = handle.getValueState(
-                "sigs",
-                StructType([StructField("seen", BinaryType())]),
-                ttlDurationMs=state_ttl_ms,
-            )
-
-        def handleInputRows(
-            self, key, rows, timerValues
-        ) -> "Iterator[pd.DataFrame]":
-            import numpy as np
-
-            seen = self._sigs.get()[0] if self._sigs.exists() else b""
-            seen_mat = np.frombuffer(seen or b"", dtype="<i8").reshape(
-                -1, num_perm
-            )
-            out_ids: list[int] = []
-            for pdf in rows:
-                if not len(pdf):
-                    continue
-                sig_mat = np.array(
-                    [list(s) for s in pdf["minhash_sig"]], dtype=np.int64
-                ).reshape(-1, num_perm)
-                ids = pdf["doc_id"].to_numpy()
-                accepted, seen_mat = _accept_greedy(
-                    seen_mat, sig_mat, ids, threshold
-                )
-                out_ids.extend(accepted)
-            self._sigs.update(
-                (np.ascontiguousarray(seen_mat, dtype="<i8").tobytes(),)
-            )
-            if not out_ids:
-                return iter(())
-            return iter(
-                [
-                    pd.DataFrame(
-                        {
-                            "bucket": [key[0]] * len(out_ids),
-                            "doc_id": out_ids,
-                        }
-                    )
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return NearDupProcessor
-
-
-def streaming_minhash_dedup_tws(
-    stream: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    cfg: MinHashConfig = MinHashConfig(num_perm=32, num_bands=8),
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
-    """D6 near-dup variant on the Spark 4 ``transformWithStateInPandas``
-    API (r13, VERDICT r12 #10): same banded-signature prep and
-    first-seen-per-bucket greedy semantics as
-    ``streaming_minhash_dedup`` (the shared ``_accept_greedy`` kernel),
-    but state rides an explicit ValueState with NATIVE per-state TTL
-    (``ttlDurationMs``) — idle bucket state evicts without the
-    processing-time-timer round-trips the GroupState API needs, and
-    ``processAllAvailable`` still quiesces (the old API's TTL kept the
-    microbatch engine busy forever, the documented test gotcha).
-
-    Emits (bucket, doc_id) acceptances; combine with
-    ``accepted_in_all_bands`` exactly like the GroupState variant.
-
-    Capability-gated: the transformWithState protocol needs
-    ``google.protobuf`` (absent in this container); the processor LOGIC
-    is still pinned against the batch analog via a fake handle in
-    tests. Use ``streaming_minhash_dedup`` where protobuf is
-    unavailable."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires google.protobuf, which is "
-            "not installed here; use streaming_minhash_dedup instead"
-        ) from e
-    banded = _banded_stream(stream, text_col, id_col, cfg)
-    out_schema = StructType(
-        [StructField("bucket", LongType()), StructField("doc_id", LongType())]
-    )
-    return banded.groupBy("bucket").transformWithStateInPandas(
-        statefulProcessor=_make_tws_neardup_processor(
-            cfg.threshold, cfg.num_perm, state_ttl_ms
-        )(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="none",
     )

@@ -10,6 +10,7 @@ from llm_training_data_pipeline_spark.operators.dedup import (
     embedding_near_dup_pairs,
     exact_dedup,
     exact_dedup_stats,
+    media_exact_dedup,
     minhash_dedup,
     minhash_candidate_pairs,
     ngram_jaccard_pairs,
@@ -50,6 +51,22 @@ def test_exact_dedup_stats(spark):
     assert row["unique_documents"] == 3
     assert row["duplicate_documents"] == 1
     assert row["duplicate_clusters"] == 1
+
+
+def test_media_exact_dedup_min_id_winner(spark):
+    assets = spark.createDataFrame(
+        [
+            (3, bytearray(b"\x00\x01\x02")),
+            (1, bytearray(b"\x00\x01\x02")),  # dup bytes — lower id wins
+            (2, bytearray(b"\xff")),
+            (4, bytearray(b"")),
+        ],
+        "asset_id long, payload binary",
+    )
+    got = {r["asset_id"]: (r["digest"], r["n_bytes"])
+           for r in media_exact_dedup(assets).collect()}
+    assert set(got) == {1, 2, 4}
+    assert got[1][1] == 3 and got[4][1] == 0
 
 
 def test_semi_join_keep(spark):

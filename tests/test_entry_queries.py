@@ -26,6 +26,37 @@ def test_contract_shape():
     assert set(osql) <= set(qs)
 
 
+def test_tune_for_session_skips_only_locked_confs(capsys):
+    """A conf the host locked (AnalysisException) is reported on stderr
+    and skipped; any other error from ``conf.set`` propagates."""
+    from pyspark.errors import AnalysisException
+
+    from llm_training_data_pipeline_spark.session import tune_for_session
+
+    locked = "spark.sql.session.timeZone"
+    broken = "spark.sql.execution.arrow.pyspark.enabled"
+
+    class StubConf:
+        def __init__(self):
+            self.applied = {}
+
+        def set(self, k, v):
+            if k == locked:
+                raise AnalysisException(f"Cannot modify the value of {k}")
+            if k == broken:
+                raise RuntimeError("conf service down")
+            self.applied[k] = v
+
+    class StubSession:
+        conf = StubConf()
+
+    with pytest.raises(RuntimeError, match="conf service down"):
+        tune_for_session(StubSession())
+    assert locked in capsys.readouterr().err
+    assert "spark.sql.adaptive.enabled" in StubSession.conf.applied
+    assert locked not in StubSession.conf.applied
+
+
 def test_scorecard_rotation_policy():
     """The driver scores only the first ~50 registry slots, so ordering IS
     the rotation policy: red rows first, deep-stale greens next (oldest

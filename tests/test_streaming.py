@@ -277,35 +277,6 @@ def test_windowed_counts_drop_late_data(spark, tmp_path):
     assert rows.get((10, "click")) == 1
 
 
-def test_streaming_exact_dedup_transform_with_state(spark, tmp_path, doc_rows):
-    from llm_training_data_pipeline_spark.streaming.dedup_stream import (
-        streaming_exact_dedup_tws,
-    )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        stream = spark.readStream.schema(DOC_SCHEMA).parquet(str(tmp_path))
-        with pytest.raises(NotImplementedError):
-            streaming_exact_dedup_tws(stream)
-        return
-
-    src = str(tmp_path / "tws_src")
-    _write_docs(spark, src, doc_rows)
-    stream = spark.readStream.schema(DOC_SCHEMA).parquet(src)
-    out = streaming_exact_dedup_tws(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("t_tws_dedup")
-        .outputMode("append")
-        .start()
-    )
-    _run_to_completion(q)
-    got = {r["doc_id"] for r in spark.sql("SELECT doc_id FROM t_tws_dedup").collect()}
-    # min-id winner per digest: docs 1/2/4 collapse (case-insensitive hash)
-    assert got == {1, 3}
-
-
 def test_batch_operators_run_unchanged_on_streams(spark, tmp_path):
     """The unified Dataset API in practice: the SAME clean_documents /
     with_quality / with_lang_id transforms used in batch apply verbatim
@@ -1102,132 +1073,3 @@ def test_streaming_cms_epoch_replay_idempotent(spark, tmp_path):
         map(tuple, expected.collect())
     )
 
-
-def test_tws_neardup_gate_and_logic_pinned(spark, tmp_path):
-    """r13 (VERDICT r12 #10) — the transformWithState NEAR-DUP variant:
-    (a) capability gate: without google.protobuf the operator raises
-    NotImplementedError naming the fallback; (b) with a fake handle the
-    processor class is driven directly against the applyInPandasWithState
-    function on identical per-bucket batches — the two paths share
-    _accept_greedy, and this pins that the TWS layer preserves the
-    statefulness across micro-batches and emits the same acceptances;
-    (c) the per-state TTL is passed as ttlDurationMs (the native
-    eviction the GroupState API only approximated with timers)."""
-    import numpy as np
-    import pandas as pd
-
-    from llm_training_data_pipeline_spark.streaming.dedup_stream import (
-        _make_neardup_fn,
-        _make_tws_neardup_processor,
-        streaming_minhash_dedup_tws,
-    )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        have_protobuf = True
-    except ImportError:
-        have_protobuf = False
-
-    if not have_protobuf:
-        stream = spark.readStream.schema(DOC_SCHEMA).parquet(str(tmp_path))
-        with pytest.raises(NotImplementedError, match="streaming_minhash_dedup"):
-            streaming_minhash_dedup_tws(stream)
-
-    # ---- fake-handle logic pin ----
-    class FakeValueState:
-        def __init__(self):
-            self.value = None
-
-        def exists(self):
-            return self.value is not None
-
-        def get(self):
-            return self.value
-
-        def update(self, v):
-            self.value = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-            self.ttls = {}
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            self.ttls[name] = ttlDurationMs
-            return self.states.setdefault(name, FakeValueState())
-
-    class FakeGroupState:
-        def __init__(self):
-            self.value = None
-            self.hasTimedOut = False
-
-        @property
-        def exists(self):
-            return self.value is not None
-
-        @property
-        def get(self):
-            return self.value
-
-        def update(self, v):
-            self.value = v
-
-        def setTimeoutDuration(self, ms):
-            pass
-
-    num_perm, threshold = 8, 0.5
-    rng = np.random.RandomState(0)
-    base = rng.randint(0, 50, num_perm).astype(np.int64)
-
-    def sig(mutations):
-        s = base.copy()
-        for pos, val in mutations:
-            s[pos] = val
-        return list(s)
-
-    # two micro-batches for ONE bucket: batch 2 contains a near-dup of a
-    # batch-1 acceptance (cross-batch state) and a within-batch pair
-    batch1 = pd.DataFrame(
-        {
-            "doc_id": [1, 2, 3],
-            "minhash_sig": [
-                sig([]),                      # accepted
-                sig([(0, 99), (1, 98), (2, 97), (3, 96), (4, 95)]),  # far → accepted
-                sig([(0, 99)]),               # near-dup of doc 1 → reject
-            ],
-        }
-    )
-    batch2 = pd.DataFrame(
-        {
-            "doc_id": [4, 5, 6],
-            "minhash_sig": [
-                sig([(1, 98)]),               # near-dup of doc 1 → reject
-                sig([(i, 60 + i) for i in range(6)]),  # far → accepted
-                sig([(i, 60 + i) for i in range(6)]),  # dup of 5 → reject
-            ],
-        }
-    )
-
-    # TWS path with the fake handle
-    ttl_ms = 123_456
-    proc = _make_tws_neardup_processor(threshold, num_perm, ttl_ms)()
-    handle = FakeHandle()
-    proc.init(handle)
-    assert handle.ttls == {"sigs": ttl_ms}  # native per-state TTL wired
-    tws_out = []
-    for batch in (batch1, batch2):
-        for pdf in proc.handleInputRows((77,), iter([batch]), None):
-            tws_out.extend(pdf["doc_id"].tolist())
-
-    # GroupState path on the same batches
-    fn = _make_neardup_fn(threshold, num_perm, None)
-    gs = FakeGroupState()
-    gs_out = []
-    for batch in (batch1, batch2):
-        for pdf in fn((77,), iter([batch]), gs):
-            gs_out.extend(pdf["doc_id"].tolist())
-
-    assert tws_out == gs_out == [1, 2, 5]
-    # identical serialized state afterwards (same flat <i8 buffer layout)
-    assert proc._sigs.get()[0] == gs.get[0]
