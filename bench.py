@@ -244,9 +244,7 @@ HEADLINE = [
     # for scale_ratio_large anyway.
     "minhash_pairs_md5_capped",
     "pq_topk_reranked",
-    # round-13 third wave: the sf-scaling new rows (the image fixture
-    # queries, exif included, are HEADLINE-excluded by the
-    # self-contained-fixture precedent)
+    # round-13 third wave: the sf-scaling caption rows
     "subtitle_cues_parse",
     "ass_cues_parse",
     "ttml_cues_parse",

@@ -11,7 +11,7 @@ Layout
 - ``session``    SparkSession factory tuned for the pipeline workload
 - ``schemas``    explicit StructTypes + loaders for the test tables
 - ``operators``  cleaning / quality / dedup / tokenize / textstats /
-                 similarity / multimodal DataFrame->DataFrame transforms
+                 similarity DataFrame->DataFrame transforms
 - ``sources``    wiki-XML ingestion, markup stripping, sinks
 - ``functions``  reusable Column-expression helpers
 - ``plans``      end-to-end pipeline composition + metrics

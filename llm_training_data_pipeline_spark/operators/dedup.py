@@ -774,56 +774,6 @@ def with_simhash(
     return df.join(sh, on=id_col, how="left")
 
 
-def hamming_band_pairs(
-    df: DataFrame,
-    hash_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    num_bands: int = 4,
-) -> DataFrame:
-    """Near-dup pairs over ANY precomputed 64-bit fingerprint column:
-    band the fingerprint into ``num_bands`` chunks (any equal chunk →
-    candidate — pigeonhole-complete for hamming <= num_bands-1), verify
-    exact hamming distance. The shuffle ships (band chunk, id, hash)
-    only; pair volume is bounded by genuine chunk collisions, the same
-    LSH scaling argument as MinHash banding. Shared by text SimHash and
-    image perceptual hashes (multimodal.image_near_dup_pairs)."""
-    bits_per = 64 // num_bands
-    sh = df.select(id_col, hash_col)
-    mask = (1 << bits_per) - 1
-    banded = sh.select(
-        id_col,
-        hash_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_id"),
-                        F.shiftrightunsigned(hash_col, i * bits_per)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("chunk"),
-                    )
-                    for i in range(num_bands)
-                ]
-            )
-        ).alias("band"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(b, on=[F.col("a.band") == F.col("b.band")])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            hamming64(
-                F.col(f"a.{hash_col}"), F.col(f"b.{hash_col}")
-            ).alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 def simhash_near_dup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -843,11 +793,43 @@ def simhash_near_dup_pairs(
     — the same measured pitfall ``minhash_candidate_pairs`` documents).
     Zero-token docs have no fingerprint row; they banded as NULL chunks
     before, which never satisfy the equality join, so the pair set is
-    identical."""
+    identical.
+
+    The shuffle ships (band chunk, id, fingerprint) only; pair volume is
+    bounded by genuine chunk collisions, the same LSH scaling argument
+    as MinHash banding."""
     sh = simhash_table(df, text_col, id_col, hash_family=hash_family)
     sh = sh.localCheckpoint(eager=True)
-    return hamming_band_pairs(
-        sh, "simhash", id_col, max_hamming=max_hamming, num_bands=num_bands
+    bits_per = 64 // num_bands
+    mask = (1 << bits_per) - 1
+    banded = sh.select(
+        id_col,
+        "simhash",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("band_id"),
+                        F.shiftrightunsigned("simhash", i * bits_per)
+                        .bitwiseAND(F.lit(mask))
+                        .alias("chunk"),
+                    )
+                    for i in range(num_bands)
+                ]
+            )
+        ).alias("band"),
+    )
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(b, on=[F.col("a.band") == F.col("b.band")])
+        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            hamming64(F.col("a.simhash"), F.col("b.simhash")).alias("hamming"),
+        )
+        .dropDuplicates(["id_a", "id_b"])
+        .filter(F.col("hamming") <= max_hamming)
     )
 
 

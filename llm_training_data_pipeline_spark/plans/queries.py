@@ -103,11 +103,6 @@ _CHANGED_IN_ROUND: dict[str, int] = {
     # r6: lsh_bucket fold fusion + explode-based table path (bit-identical
     # by construction, but the plan changed — re-score)
     "ann_lsh_topk": 6,
-    # r6: BMP/WebP added to the image header battery
-    "multimodal_image_meta": 6,
-    # r6 second wave: TIFF in the image battery + format-cycling fixture
-    # (also shifts the byte-histogram features off the same fixture)
-    "multimodal_features": 6,
     # r6 second wave: vocab branch now derives from the shared words
     # subtree (materialize refactor) — logically identical, but the plan
     # changed, so re-score
@@ -260,21 +255,8 @@ _CHANGED_IN_ROUND.update(
     }
 )
 # r13: pq_topk's ADC scan extracted into the shared _adc_scored (plan
-# identical, code moved — re-execute the rerank consumer); GIF frame
-# sampling defaults to disposal-composited RENDERED frames (row values
-# change: logical-screen dims; row count unchanged, rows-only check)
-_CHANGED_IN_ROUND.update(
-    {
-        "pq_topk_reranked": 13,
-        "gif_frame_stats": 13,
-        # r13 third wave: the cross-format battery's TIFF leg now
-        # alternates PackBits strips / LZW+predictor 16x16 tiles, so
-        # tiff_pixel_stats values and image_near_dup payload digests
-        # shift (row counts unchanged, rows-only checks)
-        "tiff_pixel_stats": 13,
-        "image_near_dup": 13,
-    }
-)
+# identical, code moved — re-execute the rerank consumer)
+_CHANGED_IN_ROUND["pq_topk_reranked"] = 13
 # r14: new capped embedding-pair row + its recall audit (VERDICT r13
 # #6); embedding_ann_pairs itself is UNCHANGED (the cap branch is
 # no-op when max_bucket_size is None)
@@ -1862,155 +1844,6 @@ def q_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("multimodal_image_meta", None)
-def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: binary payload columns → header-level metadata
-    via mapInPandas (deterministic synthetic assets; rows-only check)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        decode_image_meta,
-        synthetic_assets,
-    )
-
-    return decode_image_meta(synthetic_assets(spark, n=64))
-
-
-@register("image_pixel_stats", None)
-def q_image_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL pixel decode end to end (VERDICT r10 #4 — BMP exits the
-    is_stub path): uncompressed 24bpp BMPs (padded rows, both row
-    orders, BGR->RGB) decoded by pure row arithmetic, then per-asset
-    channel means + BT.601 luminance in exact integer milli-units.
-    Rows-only check (binary self-contained fixture); every decoded byte
-    and stat value is pinned against an independent per-pixel formula
-    in tests/test_multimodal.py (multimodal.decode_bmp_pixels +
-    image_pixel_stats)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        decode_bmp_pixels,
-        image_pixel_stats,
-        synthetic_bmp_assets,
-    )
-
-    px = decode_bmp_pixels(synthetic_bmp_assets(spark, n=32))
-    return image_pixel_stats(px).orderBy("asset_id")
-
-
-@register("pnm_pixel_stats", None)
-def q_pnm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Second REAL pixel decode (VERDICT r11 next #8): binary PNM P5
-    (grayscale, replicated to r=g=b) and P6 (RGB) decoded by pure header
-    tokenizing + sample-plane arithmetic, then the same exact integer
-    milli-unit stats as image_pixel_stats. Rows-only check (binary
-    self-contained fixture); every decoded byte pinned against an
-    independent per-sample formula in tests/test_multimodal.py
-    (multimodal.decode_pnm_pixels + image_pixel_stats)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        decode_pnm_pixels,
-        image_pixel_stats,
-        synthetic_pnm_assets,
-    )
-
-    px = decode_pnm_pixels(synthetic_pnm_assets(spark, n=32))
-    return image_pixel_stats(px).orderBy("asset_id")
-
-
-@register("png_pixel_stats", None)
-def q_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Third REAL pixel decode and the first COMPRESSED format (r12):
-    PNG via stdlib zlib inflate + scanline unfiltering (all five spec
-    filters incl. Paeth; color types gray/RGB/palette/gray+alpha/RGBA;
-    multi-IDAT), then the same exact integer milli-unit stats as
-    image_pixel_stats. Rows-only check (binary self-contained fixture);
-    the decoder is pinned against an independent FORWARD-direction
-    encoder (_png_build) in tests/test_multimodal.py
-    (multimodal.decode_png_pixels + image_pixel_stats)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        decode_png_pixels,
-        image_pixel_stats,
-        synthetic_png_assets,
-    )
-
-    px = decode_png_pixels(synthetic_png_assets(spark, n=32))
-    return image_pixel_stats(px).orderBy("asset_id")
-
-
-@register("gif_pixel_stats", None)
-def q_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fourth REAL pixel decode, second compressed codec (r12): GIF via
-    pure-Python LZW (variable code widths, early-change rule, CLEAR
-    resets) + global/local color-table lookup + 4-pass de-interlacing,
-    then the same exact integer milli-unit stats as image_pixel_stats.
-    Rows-only check (binary self-contained fixture); the decoder is
-    pinned against an independent FORWARD-direction LZW compressor
-    (_gif_lzw_encode / _gif_build) in tests/test_multimodal.py
-    (multimodal.decode_gif_pixels + image_pixel_stats)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        decode_gif_pixels,
-        image_pixel_stats,
-        synthetic_gif_assets,
-    )
-
-    px = decode_gif_pixels(synthetic_gif_assets(spark, n=32))
-    return image_pixel_stats(px).orderBy("asset_id")
-
-
-@register("tiff_pixel_stats", None)
-def q_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sixth REAL pixel decode (r12): baseline TIFF — first-IFD walk in
-    both byte orders, strip AND tile layouts (tags 322-325, r13),
-    8-bit gray (both photometrics) and RGB, compression none /
-    PackBits / LZW+predictor / deflate — through the sniffing decoder,
-    then the exact integer milli-unit stats. Rows-only check (binary
-    self-contained fixture: the TIFF leg of the cross-format battery —
-    PackBits strips for even patterns, LZW tiled for odd); decoder
-    pinned against the independent forward _tiff_build in
-    tests/test_multimodal.py (multimodal._tiff_pixels +
-    image_pixel_stats)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        decode_image_pixels,
-        image_pixel_stats,
-        synthetic_cross_format_assets,
-    )
-
-    assets = synthetic_cross_format_assets(spark, n_base=6).filter(
-        F.col("mime_type") == "image/tiff"
-    )
-    return image_pixel_stats(decode_image_pixels(assets)).orderBy("asset_id")
-
-
-@register("gif_frame_stats", None)
-def q_gif_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Animated-GIF frame sampling: every-2nd frame of each clip,
-    RENDERED per the GIF89a animation model (r13 — placement,
-    transparency, disposal compositing onto the logical screen;
-    VERDICT r12 #5), each through the real GIF decoder, then
-    per-(clip, frame) exact integer pixel stats via a composite id
-    (asset_id * 1000 + frame_index). Rows-only check (binary
-    self-contained fixture); compositing pinned against an independent
-    in-test compositor in tests/test_multimodal.py
-    (multimodal.sample_gif_frames + image_pixel_stats)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        image_pixel_stats,
-        sample_gif_frames,
-        synthetic_animated_gif_assets,
-    )
-
-    frames = sample_gif_frames(
-        synthetic_animated_gif_assets(spark, n=8), every_n=2
-    )
-    composite = frames.select(
-        (F.col("asset_id") * 1000 + F.col("frame_index")).alias("asset_id"),
-        "width", "height", "channels", "pixels", "is_stub",
-    )
-    stats = image_pixel_stats(composite)
-    return stats.select(
-        (F.col("asset_id") / 1000).cast("long").alias("clip_id"),
-        F.pmod("asset_id", F.lit(1000)).cast("long").alias("frame_index"),
-        "width", "height", "n_pixels",
-        "mean_r_milli", "mean_g_milli", "mean_b_milli",
-        "luminance_milli", "is_stub",
-    ).orderBy("clip_id", "frame_index")
-
-
 @register("subtitle_cues_parse", oracle.subtitle_cues_sql(n_cues=3))
 def q_subtitle_cues_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Subtitle/caption text extraction (r13) — where video corpora
@@ -2071,118 +1904,6 @@ def q_ttml_cues_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return ttml_cues(render_ttml(docs, n_cues=3), text_col="ttml")
-
-
-@register("exif_meta_stats", None)
-def q_exif_meta_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXIF extraction (r13): JPEG APP1 / bare-TIFF IFD walk for
-    camera make/model, orientation, DateTimeOriginal and Exif-IFD
-    dims — the stratify/filter fields of an image-corpus pipeline —
-    then a per-make aggregate (count, orientation spread, has_exif
-    split). Rows-only check (binary self-contained fixture built by
-    the forward _exif_app1/_jpeg_with_exif pair; both byte orders,
-    no-EXIF legs included) — see tests/test_multimodal.py
-    (multimodal.decode_exif_meta)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        decode_exif_meta,
-        synthetic_exif_assets,
-    )
-
-    meta = decode_exif_meta(synthetic_exif_assets(spark, n=24))
-    return (
-        meta.groupBy("make", "has_exif")
-        .agg(
-            F.count("*").alias("n"),
-            F.count("orientation").alias("n_oriented"),
-            F.min("orientation").alias("min_orientation"),
-            F.max("orientation").alias("max_orientation"),
-            F.count("datetime_original").alias("n_dated"),
-            F.sum(F.coalesce("exif_width", F.lit(0))).alias("sum_exif_w"),
-        )
-        .orderBy("make", "has_exif")
-    )
-
-
-@register("image_near_dup", None)
-def q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual image dedup over a MIXED-FORMAT binary corpus (r12):
-    sniffing decode (BMP/PNM/PNG/GIF/TIFF/JPEG by magic) → 64-bit pHash
-    (32x32 DCT low-frequency signs) → the pigeonhole-complete hamming
-    band join text SimHash uses. The fixture encodes each of 6 base
-    patterns as BMP+PNG+GIF+TIFF+JPEG (30 byte-distinct files); the
-    pairs must recover exactly the 6 re-encode clusters — C(5,2)*6 =
-    60 pairs, all hamming 0 at measured fixture separation (within-base
-    0 bits incl. the lossy JPEG, across-base >= 22). Rows-only check;
-    the cluster structure is pinned in tests/test_multimodal.py
-    (multimodal.image_near_dup_pairs)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        image_near_dup_pairs,
-        synthetic_cross_format_assets,
-    )
-
-    pairs = image_near_dup_pairs(
-        synthetic_cross_format_assets(spark, n_base=6)
-    )
-    return pairs.orderBy("id_a", "id_b")
-
-
-@register("jpeg_pixel_stats", None)
-def q_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fifth REAL pixel decode — the last gated image format (r12):
-    baseline JPEG via pure-numpy Huffman entropy decode, dequantize,
-    vectorized 8x8 IDCT, chroma upsampling and YCbCr→RGB, then the same
-    exact integer milli-unit stats as image_pixel_stats. Rows-only
-    check (binary self-contained fixture); because JPEG is lossy the
-    pin is a ±3 reconstruction tolerance against the formula pixels
-    (exact for the DC-only constant case) via an independent
-    FORWARD-direction encoder (_jpeg_build) in tests/test_multimodal.py
-    (multimodal.decode_jpeg_pixels + image_pixel_stats)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        decode_jpeg_pixels,
-        image_pixel_stats,
-        synthetic_jpeg_assets,
-    )
-
-    px = decode_jpeg_pixels(synthetic_jpeg_assets(spark, n=32))
-    return image_pixel_stats(px).orderBy("asset_id")
-
-
-@register("webp_pixel_stats", None)
-def q_webp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The seventh real image decoder (r13): WebP lossless (VP8L) —
-    canonical prefix codes, LZ77 with the 2D distance map, color
-    cache, meta prefix groups, and all four transforms (predictor /
-    color / subtract-green / palette), each exercised by the cycling
-    fixture — then exact integer pixel stats. Rows-only check (binary
-    self-contained fixture); VP8L is lossless, so every decoded byte
-    is pinned against the forward encoder in
-    tests/test_webp_lossless.py (multimodal.decode_webp_pixels +
-    image_pixel_stats)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        decode_webp_pixels,
-        image_pixel_stats,
-        synthetic_webp_assets,
-    )
-
-    px = decode_webp_pixels(synthetic_webp_assets(spark, n=12))
-    return image_pixel_stats(px).orderBy("asset_id")
-
-
-@register("multimodal_features", None)
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-histogram feature extraction over Arrow batches (rows-only
-    check; per-payload semantics pinned in tests/test_multimodal.py)."""
-    from llm_training_data_pipeline_spark.operators.multimodal import (
-        extract_features,
-        synthetic_assets,
-    )
-
-    from pyspark.sql import functions as FF
-
-    feats = extract_features(synthetic_assets(spark, n=64))
-    return feats.select(
-        "asset_id", "modality", FF.round(FF.aggregate("features", FF.lit(0.0), lambda a, x: a + x), 6).alias("feature_sum")
-    )
 
 
 @register("media_exact_dedup", oracle.media_exact_dedup_sql(prefix_chars=40))

@@ -16,7 +16,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     FloatType,
     IntegerType,
@@ -286,17 +285,5 @@ TOKENIZED_SCHEMA = StructType(
         StructField("text", StringType()),
         StructField("tokens", ArrayType(IntegerType())),
         StructField("token_count", IntegerType()),
-    ]
-)
-
-# Image asset row (engine extension; the decoders in operators/multimodal.py
-# are pure Python/numpy, no imaging library needed)
-MULTIMODAL_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("modality", StringType()),  # "image"
-        StructField("payload", BinaryType()),
-        StructField("mime_type", StringType()),
-        StructField("meta", MapType(StringType(), StringType())),
     ]
 )

@@ -110,10 +110,18 @@ def test_simhash_exact_and_near(spark):
         (3, "the quick brown fox jumps over the lazy cat today"),
         (9, "totally different words about spacecraft navigation systems engineering"),
     ]
-    pairs = simhash_near_dup_pairs(_df(spark, rows), max_hamming=12)
-    got = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs.collect()}
-    assert got.get((1, 2)) == 0
-    assert (1, 3) in got and got[(1, 3)] <= 12
+    # Every 16-bit chunk match is also two 8-bit chunk matches, so 8 bands
+    # find a superset of 4 bands' pairs; on this fixture the sets agree.
+    by_bands = {}
+    for num_bands in (4, 8):
+        pairs = simhash_near_dup_pairs(
+            _df(spark, rows), max_hamming=12, num_bands=num_bands
+        )
+        got = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs.collect()}
+        assert got.get((1, 2)) == 0
+        assert (1, 3) in got and got[(1, 3)] <= 12
+        by_bands[num_bands] = got
+    assert by_bands[8] == by_bands[4]
     out = simhash_dedup(_df(spark, rows), max_hamming=12)
     assert sorted(r["doc_id"] for r in out.select("doc_id").collect()) == [1, 9]
 
