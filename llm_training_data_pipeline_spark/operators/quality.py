@@ -15,6 +15,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+# module-level on purpose: with postponed annotations, pandas_udf resolves
+# the ``pd.Series`` hints of ``with_dup_ngram_stats``'s UDF from this
+# module's globals, and a function-local ``pd`` makes it raise
+# UNSUPPORTED_SIGNATURE
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F

@@ -325,7 +325,20 @@ def lang_scores(
 def _lang_cascade(s: dict[str, Column], min_score: float) -> Column:
     """Shared argmax cascade: script languages first (ja > zh > ru on char
     ratio, with within-script refinement per SCRIPT_REFINEMENTS), then the
-    highest stopword rate with tie order STOPWORD_ORDER."""
+    highest stopword rate with tie order STOPWORD_ORDER.
+
+    The stopword argmax is ONE ``greatest`` over
+    ``struct(score AS v, -i AS o, lang AS l)``, i = position in
+    STOPWORD_ORDER. Structs order field by field, so the largest score
+    wins, a tie goes to the larger ``o`` (the earlier language), and a
+    null score sorts below every non-null one; when every score is null
+    ``v`` is null and the row falls through to 'unknown'. This is why it
+    is not one CASE branch per language testing ``score == greatest(...)``:
+    whole-stage codegen does not share subexpressions across CASE
+    branches, so 30 copies of the 30-way ``greatest`` overflow the 64 KB
+    method limit, and Spark retries the failed compile on every execution
+    before falling back to interpreted code.
+    """
     cascade: Column | None = None
     for lang in SCRIPT_ORDER:
         label: Column | str = lang
@@ -347,10 +360,13 @@ def _lang_cascade(s: dict[str, Column], min_score: float) -> Column:
         cond = s[lang] >= F.lit(SCRIPT_MIN_RATIO)
         cascade = F.when(cond, label) if cascade is None else cascade.when(cond, label)
     assert cascade is not None
-    best = F.greatest(*[s[lang] for lang in STOPWORD_ORDER])
-    for lang in STOPWORD_ORDER:  # tie → earlier wins
-        cascade = cascade.when((best >= F.lit(min_score)) & (s[lang] == best), lang)
-    return cascade.otherwise("unknown")
+    best = F.greatest(
+        *[
+            F.struct(s[lang].alias("v"), F.lit(-i).alias("o"), F.lit(lang).alias("l"))
+            for i, lang in enumerate(STOPWORD_ORDER)
+        ]
+    )
+    return cascade.when(best["v"] >= F.lit(min_score), best["l"]).otherwise("unknown")
 
 
 def lang_id(text: Column, min_score: float = 0.01) -> Column:

@@ -19,6 +19,14 @@ Scale design (the part that matters at 100 TB):
   the driver over that dict, exactly how BPE trainers work internally.
   This mirrors the reference's one deliberate global step
   (tokenizer.py:135-155) but distributes the expensive pass.
+- The BPE merge learner (``_learn_merges``, shared by ``bpe`` and
+  ``byte_bpe``) is incremental: pair counts are built once, and each
+  merge rewrites only the words holding the chosen pair, found through a
+  pair → word-index table, with the next pair taken from a lazy max-heap.
+  A merge costs time proportional to the words it touches, not to the
+  table; the index costs memory proportional to the total symbols
+  collected (a few word indices per symbol). WordPiece scoring keeps a
+  full rescan per merge (see its trainer).
 - Encoding is embarrassingly parallel: the trained tokenizer is broadcast
   and applied with an Arrow-batched pandas UDF (tokenizer.py:179-202's
   ``encode_batch`` ≙ one UDF batch), with an LRU word cache per executor.
@@ -26,6 +34,7 @@ Scale design (the part that matters at 100 TB):
 
 from __future__ import annotations
 
+import heapq
 import json
 from dataclasses import dataclass, field
 
@@ -95,6 +104,22 @@ def _apply_merges(symbols: list[str], ranks: dict[tuple[str, str], int]) -> list
     return symbols
 
 
+def _merge_word(word: tuple[str, ...], a: str, b: str) -> tuple[str, ...]:
+    """Apply the merge ``(a, b)`` to one symbol sequence: left to right,
+    non-overlapping (``a a a`` under ``(a, a)`` becomes ``aa a``). The one
+    rewrite rule of every merge trainer."""
+    out: list[str] = []
+    i, n = 0, len(word)
+    while i < n:
+        if i < n - 1 and word[i] == a and word[i + 1] == b:
+            out.append(a + b)
+            i += 2
+        else:
+            out.append(word[i])
+            i += 1
+    return tuple(out)
+
+
 def _learn_merges(
     words: dict[tuple[str, ...], int],
     vocab: dict[str, int],
@@ -102,35 +127,64 @@ def _learn_merges(
     min_frequency: int,
 ) -> list[tuple[str, str]]:
     """Classic BPE merge learning over a symbol-sequence frequency dict.
-    Mutates ``vocab``; ties in pair frequency break lexicographically."""
+    Mutates ``vocab``; ties in pair frequency break lexicographically.
+
+    Incremental: pair counts are built once, and each merge rewrites only
+    the words that hold the chosen pair (found through a pair → word-index
+    table), subtracting each rewritten word's old adjacent pairs and adding
+    its new ones. The next pair comes from a lazy max-heap keyed
+    ``(-count, pair)``; an entry whose count no longer matches the table is
+    stale and skipped. So a merge costs time proportional to the words it
+    touches, not to the whole table, and the index holds O(total symbols)
+    word indices. Stops at ``vocab_size``, when no pair with a positive
+    count is left, or when the best count is below ``min_frequency``.
+    """
+    seqs = list(words)
+    counts = list(words.values())
+    pair_counts: dict[tuple[str, str], int] = {}
+    where: dict[tuple[str, str], set[int]] = {}
+    for idx, word in enumerate(seqs):
+        c = counts[idx]
+        for p in zip(word, word[1:]):
+            pair_counts[p] = pair_counts.get(p, 0) + c
+            where.setdefault(p, set()).add(idx)
+    heap = [(-c, p) for p, c in pair_counts.items() if c > 0]
+    heapq.heapify(heap)
+
     merges: list[tuple[str, str]] = []
     while len(vocab) < vocab_size:
-        pair_counts: dict[tuple[str, str], int] = {}
-        for word, c in words.items():
-            for i in range(len(word) - 1):
-                p = (word[i], word[i + 1])
-                pair_counts[p] = pair_counts.get(p, 0) + c
-        if not pair_counts:
+        while heap and pair_counts.get(heap[0][1]) != -heap[0][0]:
+            heapq.heappop(heap)
+        if not heap or -heap[0][0] < min_frequency:
             break
-        (a, b), cnt = min(pair_counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        if cnt < min_frequency:
-            break
-        merges.append((a, b))
+        a, b = pair = heapq.heappop(heap)[1]
+        merges.append(pair)
         vocab[a + b] = len(vocab)
-        new_words: dict[tuple[str, ...], int] = {}
-        for word, c in words.items():
-            out: list[str] = []
-            i = 0
-            while i < len(word):
-                if i < len(word) - 1 and word[i] == a and word[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
+        # a merged pair never survives its own rewrite, so its index entry
+        # goes; it comes back through the loop below if a later merge
+        # recreates the pair
+        delta: dict[tuple[str, str], int] = {}
+        for idx in where.pop(pair):
+            old = seqs[idx]
+            new = _merge_word(old, a, b)
+            if len(new) == len(old):  # stale entry: the pair left this word
+                continue
+            c = counts[idx]
+            for p in zip(old, old[1:]):
+                delta[p] = delta.get(p, 0) - c
+            for p in zip(new, new[1:]):
+                delta[p] = delta.get(p, 0) + c
+                where.setdefault(p, set()).add(idx)
+            seqs[idx] = new
+        for p, d in delta.items():
+            if d:
+                c = pair_counts.get(p, 0) + d
+                if c:
+                    pair_counts[p] = c
+                    if c > 0:
+                        heapq.heappush(heap, (-c, p))
                 else:
-                    out.append(word[i])
-                    i += 1
-            key = tuple(out)
-            new_words[key] = new_words.get(key, 0) + c
-        words = new_words
+                    del pair_counts[p]
     return merges
 
 
@@ -235,7 +289,8 @@ def train_bpe_from_word_counts(
     words: dict[tuple[str, ...], int] = {}
     for w, c in wc:
         if w:
-            words[tuple(w) + (END_OF_WORD,)] = words.get(tuple(w) + (END_OF_WORD,), 0) + c
+            key = tuple(w) + (END_OF_WORD,)
+            words[key] = words.get(key, 0) + c
 
     alphabet = sorted({s for word in words for s in word})
     vocab: dict[str, int] = {}
@@ -258,6 +313,12 @@ def train_wordpiece_from_word_counts(
     maximizes ``count(ab) / (count(a) * count(b))`` (HF WordPiece scoring)
     rather than raw pair frequency. Returns the same model type — encoding
     is identical merge-rank application.
+
+    Keeps the full rescan per merge (every word's pairs and symbols are
+    recounted): a merge changes ``count(a)`` and ``count(b)`` and so the
+    score of every pair holding ``a`` or ``b``, anywhere in the table,
+    which the words-touched-only update of ``_learn_merges`` cannot see.
+    Words are rewritten with the same ``_merge_word`` rule.
     """
     special_tokens = list(special_tokens or SPECIAL_TOKENS)
     words: dict[tuple[str, ...], int] = {}
@@ -298,16 +359,7 @@ def train_wordpiece_from_word_counts(
         vocab[a + b] = len(vocab)
         new_words: dict[tuple[str, ...], int] = {}
         for word, c in words.items():
-            out: list[str] = []
-            i = 0
-            while i < len(word):
-                if i < len(word) - 1 and word[i] == a and word[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(word[i])
-                    i += 1
-            key = tuple(out)
+            key = _merge_word(word, a, b)
             new_words[key] = new_words.get(key, 0) + c
         words = new_words
     return BpeTokenizer(vocab=vocab, merges=merges, special_tokens=special_tokens)
@@ -715,6 +767,9 @@ def train_tokenizer(
     # but an unbounded max_words would let a 100 TB caller OOM the
     # driver instead of failing loudly. ~50 B/row keeps even the 20M cap
     # around 1 GB of framed rows (spark.driver.maxResultSize territory).
+    # The same cap bounds the BPE learner's pair → word-index table,
+    # which grows with the total symbols of the collected words (a few
+    # word indices per symbol), so it scales with max_words too.
     _MAX_WORDS_CAP = 20_000_000
     if max_words > _MAX_WORDS_CAP:
         raise ValueError(

@@ -789,10 +789,6 @@ def run_pipeline(
         summary["holdout_path"] = holdout_path
     if leakage_ppm is not None:
         summary["holdout_leakage_ppm"] = leakage_ppm
-    for name, m in stage_metrics.items():
-        rows = m.get("rows")
-        if rows:
-            m["throughput_docs_per_sec"] = round(rows / duration, 2)
     if output_dir:
         sinks.write_summary(summary, os.path.join(output_dir, "pipeline_summary.json"))
     return summary

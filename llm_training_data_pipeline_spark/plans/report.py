@@ -2,7 +2,7 @@
 
 Reference: rich-formatted stage table (/root/reference/src/utils/metrics.py:
 172-222). Plain-text rendering here (no rich dependency): stages with
-row counts, filter rates, throughput; then totals.
+row counts and filter rates; then totals.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ def render_report(summary: dict[str, Any]) -> str:
     title = f"Pipeline report — {summary.get('pipeline', '?')}"
     lines.append(title)
     lines.append("=" * len(title))
-    header = f"{'stage':<16} {'rows out':>12} {'filtered':>12} {'filter %':>9} {'docs/s':>10}"
+    header = f"{'stage':<16} {'rows out':>12} {'filtered':>12} {'filter %':>9}"
     lines.append(header)
     lines.append("-" * len(header))
     prev_rows: int | None = None
@@ -37,10 +37,7 @@ def render_report(summary: dict[str, Any]) -> str:
         rows = int(m.get("rows", 0))
         filtered = (prev_rows - rows) if prev_rows is not None else 0
         rate = (filtered / prev_rows * 100) if prev_rows else 0.0
-        thr = m.get("throughput_docs_per_sec", "")
-        lines.append(
-            f"{name:<16} {rows:>12,} {filtered:>12,} {rate:>8.1f}% {thr:>10}"
-        )
+        lines.append(f"{name:<16} {rows:>12,} {filtered:>12,} {rate:>8.1f}%")
         prev_rows = rows
     lines.append("-" * len(header))
     lines.append(f"duration: {summary.get('duration_seconds', '?')}s")

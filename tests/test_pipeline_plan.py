@@ -72,7 +72,7 @@ def test_report_rendering():
         "duration_seconds": 1.5,
         "stages": {
             "ingest": {"rows": 100},
-            "clean": {"rows": 90, "throughput_docs_per_sec": 60.0},
+            "clean": {"rows": 90},
             "quality": {"rows": 80},
         },
         "tokenization": {"algorithm": "bpe", "vocab_size": 99},

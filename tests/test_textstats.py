@@ -76,6 +76,20 @@ def test_lang_id_fixtures(spark):
     rows = with_lang_id(df).select("expected", "detected_lang").collect()
     for r in rows:
         assert r["detected_lang"] == r["expected"], r
+    # again with whole-stage codegen on and its fallback off: the session
+    # runs with codegen off, which hides a cascade that outgrows the 64 KB
+    # method limit (the production session would silently fall back)
+    keys = ("spark.sql.codegen.wholeStage", "spark.sql.codegen.fallback")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.codegen.wholeStage", "true")
+        spark.conf.set("spark.sql.codegen.fallback", "false")
+        rows = with_lang_id(df).select("expected", "detected_lang").collect()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    for r in rows:
+        assert r["detected_lang"] == r["expected"], r
 
 
 def test_script_mix_fixtures(spark):

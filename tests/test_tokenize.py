@@ -55,6 +55,87 @@ def test_deterministic_training():
     assert t1.merges == t2.merges and t1.vocab == t2.vocab
 
 
+def _rescan_learn_merges(words, vocab, vocab_size, min_frequency, stops):
+    """Reference learner: the full-rescan loop (every merge recounts every
+    pair and rebuilds every word). Appends its stop reason to ``stops``."""
+    merges = []
+    while len(vocab) < vocab_size:
+        pair_counts = {}
+        for word, c in words.items():
+            for i in range(len(word) - 1):
+                p = (word[i], word[i + 1])
+                pair_counts[p] = pair_counts.get(p, 0) + c
+        if not pair_counts:
+            stops.append("exhausted")
+            return merges
+        (a, b), cnt = min(pair_counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        if cnt < min_frequency:
+            stops.append("min_frequency")
+            return merges
+        merges.append((a, b))
+        vocab[a + b] = len(vocab)
+        new_words = {}
+        for word, c in words.items():
+            out = []
+            i = 0
+            while i < len(word):
+                if i < len(word) - 1 and word[i] == a and word[i + 1] == b:
+                    out.append(a + b)
+                    i += 2
+                else:
+                    out.append(word[i])
+                    i += 1
+            key = tuple(out)
+            new_words[key] = new_words.get(key, 0) + c
+        words = new_words
+    stops.append("vocab_size")
+    return merges
+
+
+def test_incremental_learner_matches_rescan(monkeypatch):
+    """The incremental merge learner gives the full-rescan loop's merges
+    and vocab on 1,200 seeded tables per trainer (bpe and byte_bpe).
+    Words are built from pieces with runs (``aaaa`` under ``(a, a)``
+    overlaps) and small counts (ties); bpe words may spell the end marker
+    literally, so merges re-create existing vocab keys (``<`` + ``/w>``
+    is ``</w>``, ``b`` + ``</w>`` is ``b</`` + ``w>``). Budgets and
+    thresholds are drawn so every stop rule fires."""
+    import random
+
+    from llm_training_data_pipeline_spark.operators import tokenize as tk
+
+    rng = random.Random(20261017)
+    stops: list[str] = []
+    collisions = 0
+    for t in range(2400):
+        byte_level = t % 2 == 1
+        pieces = ["a", "a", "b", "é", "aaaa"] if byte_level else ["a", "a", "b", "aaaa", "</w>"]
+        wc = [
+            ("".join(rng.choice(pieces) for _ in range(rng.randint(1, 3))), rng.randint(1, 4))
+            for _ in range(rng.randint(1, 8))
+        ]
+        if byte_level:
+            train, base = tk.train_byte_bpe_from_pretoken_counts, len(tk.SPECIAL_TOKENS) + 256
+        else:
+            train = tk.train_bpe_from_word_counts
+            base = len(tk.SPECIAL_TOKENS) + len(set("".join(w for w, _ in wc)) | {tk.END_OF_WORD})
+        vocab_size = base + rng.randint(0, 30)
+        min_frequency = rng.choice([1, 1, 2, 3, 6])
+        got = train(wc, vocab_size, min_frequency)
+        with monkeypatch.context() as m:
+            m.setattr(
+                tk,
+                "_learn_merges",
+                lambda w, v, n, f: _rescan_learn_merges(w, v, n, f, stops),
+            )
+            want = train(wc, vocab_size, min_frequency)
+        assert got.merges == want.merges, (wc, vocab_size, min_frequency)
+        assert got.vocab == want.vocab, (wc, vocab_size, min_frequency)
+        collisions += len(want.vocab) < base + len(want.merges)
+    assert {"exhausted", "min_frequency", "vocab_size"} <= set(stops)
+    assert collisions > 0
+
+
 def test_tokenize_documents_and_stats(spark):
     df = _corpus_df(spark)
     tok = train_bpe(df, vocab_size=300)

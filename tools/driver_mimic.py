@@ -9,6 +9,9 @@ limit-bounded (status GLOBAL_WINDOW — every row crosses one task; the
 r9 judge found three such sites, this check pins the class out), and
 its Exchange count is recorded, so a lost broadcast or a new
 accidental shuffle is visible in the sweep diff round-over-round.
+The session runs with ``spark.sql.codegen.fallback=false``, so a query
+whose whole-stage code fails to compile errors (a red row) instead of
+silently falling back to interpreted execution.
 
 Usage: python tools/driver_mimic.py [sf_dir] [name_filter ...]
 """
@@ -165,7 +168,7 @@ def unbounded_global_windows(jplan, plan_str: str | None = None) -> int:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     name_filter = set(sys.argv[2:])
-    spark = get_spark()
+    spark = get_spark(extra_conf={"spark.sql.codegen.fallback": "false"})
     # Warm MLlib class-loading so it isn't billed to whichever query
     # first touches KMeans (ann_ivf_topk showed 11.7s in the r8 sweep;
     # its warm cost is ~1.5s). Same rule as the JVM warm-up job the
