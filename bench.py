@@ -120,7 +120,6 @@ HEADLINE = [
     "interval_overlap_stats",
     "orders_profile",
     "length_histogram",
-    "embedding_pca_topk",
     "curriculum_phases",
     "embedding_norm_outliers",
     "corpus_diff",

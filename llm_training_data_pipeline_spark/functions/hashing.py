@@ -1,9 +1,10 @@
-"""Hash-family Column helpers: MinHash signatures, SimHash, band keys.
+"""Hash-family Column helpers: MinHash permutation parameters, signature
+Jaccard, LSH band keys, SimHash.
 
-All native ``pyspark.sql.functions`` expressions — the MinHash permutation
-family is the classic ``(a*h + b) mod p`` universal hashing scheme evaluated
-with higher-order array functions, so signatures are computed in the JVM with
-no Python and no shuffle. ANSI-overflow-safe: the family works mod
+All native ``pyspark.sql.functions`` expressions, computed in the JVM with
+no Python. The MinHash permutation family is the classic ``(a*h + b) mod p``
+universal hashing scheme (``dedup._minhash_sig_table`` evaluates it as one
+``min`` aggregate per permutation). ANSI-overflow-safe: the family works mod
 Mersenne-31 (see below), keeping every product under 2^62.
 """
 
@@ -50,52 +51,6 @@ def md5_fold31(s: Column) -> Column:
         term = byte_k * F.lit(pow(256, k, MERSENNE_31))
         expr = term if expr is None else expr + term
     return F.pmod(expr, F.lit(MERSENNE_31))
-
-
-def minhash_signature(
-    shingles: Column, num_perm: int = 128, seed: int = 42
-) -> Column:
-    """ARRAY<BIGINT> MinHash signature of an ARRAY<STRING> shingle set.
-
-    Semantics of /root/reference/src/processing/deduplicator.py:132-148
-    (datasketch MinHash, 128 permutations) re-expressed as pure Spark
-    expressions: h = xxhash64(shingle) folded to [0, 2^31-1), then
-    sig[i] = min over shingles of (a_i * h + b_i) mod 2^31-1.
-    Hash values differ from datasketch (different family); the *set-level*
-    property (Jaccard-similar sets collide) is what tests pin.
-    """
-    a, b = _perm_params(num_perm, seed)
-    # ONE traversal: hash each shingle once, fold all num_perm running
-    # minima simultaneously via aggregate+zip_with. The earlier
-    # per-permutation form (transform(sequence, i -> array_min(transform(
-    # h32, ...)))) re-evaluated the h32 expression — shingle-array build +
-    # xxhash64 per element — once per permutation, because Catalyst inlines
-    # the aliased array into every lambda use-site: measured 26x slower at
-    # 32 perms on the streaming micro-bench (tools/stream_bench.py).
-    ab = F.array(
-        *[
-            F.struct(F.lit(a[i]).alias("a"), F.lit(b[i]).alias("b"))
-            for i in range(num_perm)
-        ]
-    )
-    h32 = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_HASH_FOLD)))
-    # sentinel: every permuted hash is < MERSENNE_31, so M31 == +inf here
-    init = F.array(*[F.lit(MERSENNE_31).cast("long")] * num_perm)
-    folded = F.aggregate(
-        h32,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            ab,
-            lambda m, p: F.least(
-                m, F.pmod(p["a"] * h + p["b"], F.lit(MERSENNE_31))
-            ),
-        ),
-    )
-    # preserve the original empty-set semantics (array_min over an empty
-    # array): all-NULL signature, not all-sentinel
-    nulls = F.array(*[F.lit(None).cast("long")] * num_perm)
-    return F.when(F.size(shingles) == 0, nulls).otherwise(folded)
 
 
 def signature_jaccard(sig_a: Column, sig_b: Column) -> Column:

@@ -64,6 +64,25 @@ def nonspace_count(col: Column | str) -> Column:
     return F.length(F.regexp_replace(c, r"\s", "")).cast("long")
 
 
+def char_ngrams(norm: Column, n: int) -> Column:
+    """Every character n-gram of ``norm`` in position order, duplicates
+    kept (a multiset); a string shorter than ``n`` is its own one gram.
+
+    The one gram builder of the package: ``char_shingles`` dedups its
+    output, and ``dedup._minhash_sig_table`` explodes it as is (``min``
+    is duplicate-insensitive). ``norm`` must be a bound column, not a
+    computed expression — the lambda references it once per gram.
+    ``substr`` walks from the string start to code point ``i``, so one
+    document costs O(len²).
+    """
+    ln = F.length(norm)
+    grams = F.transform(
+        F.sequence(F.lit(1), F.greatest(ln - F.lit(n - 1), F.lit(0))),
+        lambda i: norm.substr(i, F.lit(n)),
+    )
+    return F.when(ln < n, F.array(norm)).otherwise(grams)
+
+
 def char_shingles(
     col: Column | str, n: int = 5, *, pre_normalized: bool = False
 ) -> Column:
@@ -85,12 +104,7 @@ def char_shingles(
     """
     c = F.col(col) if isinstance(col, str) else col
     norm = c if pre_normalized else F.regexp_replace(F.lower(c), r"\s+", " ")
-    ln = F.length(norm)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(ln - F.lit(n - 1), F.lit(0))),
-        lambda i: norm.substr(i, F.lit(n)),
-    )
-    return F.when(ln < n, F.array(norm)).otherwise(F.array_distinct(grams))
+    return F.array_distinct(char_ngrams(norm, n))
 
 
 # sentence-boundary sentinel: the ASCII record separator never appears in

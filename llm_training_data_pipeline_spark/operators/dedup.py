@@ -38,6 +38,7 @@ from llm_training_data_pipeline_spark.functions.hashing import (
     signature_jaccard,
 )
 from llm_training_data_pipeline_spark.functions.text import (
+    char_ngrams,
     char_shingles,
     strip_ws,
     whitespace_tokens,
@@ -150,7 +151,7 @@ def _minhash_sig_table(
     )
 
     a, b = _perm_params(cfg.num_perm, seed=42)
-    # stage the normalized text as a column: char_shingles over a raw text
+    # stage the normalized text as a column: char_ngrams over a raw text
     # expression would re-run the lowercase+collapse regex once per gram
     from llm_training_data_pipeline_spark.operators.scale import ensure_parallelism
 
@@ -161,15 +162,9 @@ def _minhash_sig_table(
     # the shingle explode + per-shingle hash below is the CPU-heavy stage;
     # partitioned on id so the min-aggregate reuses the exchange
     normed = ensure_parallelism(normed, id_col)
-    n = cfg.shingle_size
-    ln = F.length("_norm")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(ln - F.lit(n - 1), F.lit(0))),
-        lambda i: F.col("_norm").substr(i, F.lit(n)),
-    )
     # no array_distinct: min() is duplicate-insensitive, so signatures are
     # identical over the multiset, and the O(len^2) per-doc dedup is saved
-    shingles = F.when(ln < n, F.array(F.col("_norm"))).otherwise(grams)
+    shingles = char_ngrams(F.col("_norm"), cfg.shingle_size)
     from llm_training_data_pipeline_spark.functions.hashing import md5_fold31
 
     sh = normed.select(F.col(id_col), F.explode(shingles).alias("_sh"))

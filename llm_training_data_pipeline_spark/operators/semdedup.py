@@ -14,9 +14,9 @@ dedup; its dedup family is MinHash/SimHash over text, see
 - Centroids are a plain DataFrame ``(cluster, _cv, _cn)``. The default
   ``seed_centroids`` picks the first ``n_clusters`` vectors by id — a
   deterministic, iteration-free choice that a SQL oracle can replay
-  verbatim. Callers with quality needs pass MLlib KMeans centers
-  instead (same shape ``ivf_topk`` uses); every downstream step is
-  centroid-source-agnostic.
+  verbatim. Callers with quality needs pass ``kmeans_refine``'s
+  centroids (or any other ``(cluster, _cv, _cn)`` table) instead; every
+  downstream step is centroid-source-agnostic.
 - Assignment is one broadcast of the k centroids against the vector
   table; the per-vector argmax collapses map-side (``max(struct)``
   partial aggregation), so the only shuffle ships ONE row per vector.
@@ -195,9 +195,9 @@ def kmeans_refine(
     centroids: ``iters`` rounds of (integer-unit mean recompute →
     nearest-centroid reassignment). Every step is oracle-replayable —
     the quality upgrade path between ``seed_centroids`` (iteration-free
-    but arbitrary geometry) and a full MLlib KMeans (non-deterministic
-    init): callers get genuinely data-adapted clusters for SemDeDup /
-    IVF while keeping the bit-replayable correctness story.
+    but arbitrary geometry) and a float-iterative k-means that SQL
+    cannot replay: callers get genuinely data-adapted clusters for
+    SemDeDup / IVF while keeping the bit-replayable correctness story.
 
     Per round: one posexplode aggregate (k·dim rows out) and one
     broadcast-k assignment with the map-side ``max(struct)`` argmax —

@@ -22,7 +22,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from llm_training_data_pipeline_spark.functions.vectors import cosine_similarity, dot_product  # noqa: F401
+from llm_training_data_pipeline_spark.functions.vectors import dot_product
 
 
 def _as_double(vec: Column) -> Column:
@@ -279,113 +279,6 @@ def ann_lsh_topk(
     )
 
 
-def ivf_scaled_k(n: int, floor: int = 16) -> int:
-    """IVF list count that grows with corpus size: ``max(floor,
-    isqrt(n))`` — the classic inverted-file balance (per-query candidate
-    scan ≈ n·n_probe/k and centroid ranking ≈ k meet at k ≈ √n), so the
-    per-query cost is O(√n) instead of the fixed-k O(n)."""
-    import math
-
-    return max(floor, math.isqrt(n))
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_clusters: int | str = "auto",
-    n_probe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    max_iter: int = 20,
-    train_fraction: float | None = None,
-) -> DataFrame:
-    """IVF-style ANN: coarse-quantize the corpus with seeded MLlib KMeans,
-    then search each query only in its ``n_probe`` nearest clusters.
-
-    The inverted-file structure is the cluster-id column: the probe join is
-    an equi-join on cluster id (shuffle bounded by list sizes), and each
-    query scores ~|corpus| * n_probe / n_clusters candidates. Deterministic
-    given ``seed``. Recall grows with n_probe; n_probe == n_clusters
-    degrades gracefully to brute force. ``n_clusters`` defaults to
-    ``"auto"`` = ``ivf_scaled_k(count)`` (the r8 semdedup auto-k
-    discipline: the naive caller gets the √n-balanced list count, the
-    fixed-k curve is opt-in).
-
-    ``train_fraction`` fits the quantizer on a seeded SAMPLE of the
-    corpus and assigns everything — the standard IVF training protocol
-    at scale (FAISS trains coarse quantizers on ~1-10% of vectors; a
-    quantizer only needs the density shape, not every point). Every
-    Lloyd iteration is a full pass over the TRAINING set, so sampling
-    cuts quantizer cost by 1/fraction while the assignment pass —
-    one broadcast argmax over the corpus — is unchanged. ``max_iter``
-    bounds Lloyd rounds (MLlib default 20; quantizer quality plateaus
-    in single digits — recall is governed by n_probe far more than by
-    late-iteration centroid drift, measured in ann_recall_ivf).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    if n_clusters == "auto":
-        n_clusters = ivf_scaled_k(corpus.count())
-
-    vecs = _with_norm(corpus, vec_col, id_col, id_col, "_v", "_n").withColumn(
-        "_fv", array_to_vector("_v")
-    )
-    train = vecs if train_fraction is None else vecs.sample(
-        fraction=train_fraction, seed=seed
-    )
-    km = KMeans(
-        k=n_clusters,
-        seed=seed,
-        maxIter=max_iter,
-        featuresCol="_fv",
-        predictionCol="_cluster",
-    )
-    model = km.fit(train)
-    assigned = model.transform(vecs).select(id_col, "_v", "_n", "_cluster")
-
-    centers = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    spark = corpus.sparkSession
-    centers_df = spark.createDataFrame(centers, "cluster int, center array<double>")
-
-    qs = _with_norm(queries, vec_col, id_col, "q_id", "_qv", "_qn")
-    # rank clusters per query by center cosine; keep n_probe
-    q_clusters = (
-        qs.crossJoin(F.broadcast(centers_df))
-        .select(
-            "q_id",
-            "_qv",
-            "_qn",
-            "cluster",
-            cosine_similarity(F.col("_qv"), F.col("center")).alias("_csim"),
-        )
-        .withColumn(
-            "_crank",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(F.col("_csim").desc(), F.col("cluster"))
-            ),
-        )
-        .filter(F.col("_crank") <= n_probe)
-        .select("q_id", "_qv", "_qn", F.col("cluster").alias("_cluster"))
-    )
-    scored = assigned.join(F.broadcast(q_clusters), on="_cluster").filter(
-        F.col(id_col) != F.col("q_id")
-    ).select(
-        "q_id",
-        F.col(id_col),
-        F.round(_staged_cosine(), 6).alias("cosine"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def ivf_topk_seeded(
     corpus: DataFrame,
     queries: DataFrame,
@@ -395,9 +288,8 @@ def ivf_topk_seeded(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """IVF ANN on the SemDeDup exact coarse quantizer — the
-    oracle-replayable sibling of ``ivf_topk`` (whose MLlib KMeans
-    centroids are float-iterative and can't be replayed in SQL).
+    """IVF ANN on the SemDeDup exact coarse quantizer: every step is
+    oracle-replayable in SQL (no float-iterative centroid fit).
 
     Centroids are the seeded first-k-by-id vectors; corpus assignment is
     the same broadcast argmax as ``semdedup.assign_clusters`` (one row

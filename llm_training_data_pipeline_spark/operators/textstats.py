@@ -590,14 +590,8 @@ def with_fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
     staged = df.withColumn(
         "_fp_norm", F.regexp_replace(F.lower(t), r"\s+", " ")
     )
-    n, k = 5, 8
-    norm = F.col("_fp_norm")
-    ln = F.length(norm)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(ln - F.lit(n - 1), F.lit(0))),
-        lambda i: norm.substr(i, F.lit(n)),
-    )
-    shingles = F.when(ln < n, F.array(norm)).otherwise(F.array_distinct(grams))
+    k = 8
+    shingles = char_shingles(F.col("_fp_norm"), 5, pre_normalized=True)
     digests = F.transform(shingles, lambda s: F.md5(F.encode(s, "UTF-8")))
     return (
         staged.withColumn("fingerprint", doc_fingerprint(t))

@@ -181,12 +181,10 @@ _CHANGED_IN_ROUND.update(
     }
 )
 # r9: ngram_diversity gained the size-gated auto mode (exact at oracle
-# scale — same values — but the dispatching body changed, re-score);
-# ann_ivf_topk now runs maxIter=4 (rows-only, re-execute)
+# scale — same values — but the dispatching body changed, re-score)
 _CHANGED_IN_ROUND.update(
     {
         "ngram_diversity": 9,
-        "ann_ivf_topk": 9,
         # r9: C1 terminal tail (surrogates, UTF-16 interleave, BOM
         # strip) — the fused C1+C2 UDF changed, re-execute
         "clean_documents_full": 9,
@@ -522,7 +520,7 @@ def _md5_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return got
 
 
-# The ANN recall family (ann_recall_report / pq_recall / ann_recall_ivf /
+# The ANN recall family (ann_recall_report / pq_recall /
 # ann_recall_unified) scores against the SAME brute-force top-10 ground
 # truth; compute + materialize it once per (session, sf_dir) — the
 # signature-store discipline applied to recall audits (VERDICT r9 #6).
@@ -968,7 +966,7 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     # ground truth from the session store (shared with pq_recall /
-    # ann_recall_ivf / ann_recall_unified); the bucket index is ONE scan
+    # ann_recall_unified); the bucket index is ONE scan
     # shared by all configs and every method flows through one join /
     # window / aggregate (VERDICT r9 #6 — the per-config ann_lsh_topk
     # composition ran ~20 tiny stages and re-evaluated shared plane
@@ -1131,27 +1129,6 @@ def q_ann_recall_unified(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = row if out is None else out.unionByName(row)
     assert out is not None
     return out
-
-
-@register("ann_recall_ivf", None)
-def q_ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the IVF path vs brute force (rows-only: the KMeans
-    coarse quantizer is iterative and not SQL-replayable; the recall
-    floor is pinned by pytest instead)."""
-    from llm_training_data_pipeline_spark.operators.similarity import (
-        ann_recall,
-        ivf_topk,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = _ann_gt(spark, sf_dir)
-    approx = ivf_topk(emb, queries, k=10, n_clusters=16, n_probe=3).select(
-        "q_id", "vec_id"
-    )
-    return ann_recall(exact, approx).select(
-        F.lit("ivf_c16_p3").alias("method"), "hits", "expected", "recall"
-    )
 
 
 # =====================================================================
@@ -2018,33 +1995,6 @@ def q_wiki_ingestion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from llm_training_data_pipeline_spark.sources.wiki import demo_ingestion
 
     return demo_ingestion(spark)
-
-
-@register("minhash_ml_dedup", None)
-def q_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MLlib MinHashLSH dedup path (HashingTF → approxSimilarityJoin) —
-    independent cross-check of the native signature implementation."""
-    from llm_training_data_pipeline_spark.operators.dedup_ml import minhash_ml_dedup
-
-    return minhash_ml_dedup(
-        _t(spark, sf_dir, "documents"), threshold=0.8, num_hash_tables=8
-    ).select("doc_id", "lang", "source")
-
-
-@register("ann_ivf_topk", None)
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN (seeded KMeans coarse quantizer + n_probe cluster search).
-    max_iter=4 (r8 verdict #4): the row exists to execute the MLlib
-    quantizer path, and Lloyd's marginal centroid drift past a few
-    rounds changes recall less than n_probe's coarse dial — 20 default
-    iterations made this the most expensive sweep row (11.7s) for no
-    checked benefit. The replay-exact sibling ann_ivf_topk_seeded
-    carries the hash-checked contract."""
-    from llm_training_data_pipeline_spark.operators.similarity import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return ivf_topk(emb, queries, k=5, n_clusters=16, n_probe=3, max_iter=4)
 
 
 @register("exact_dedup_against_corpus", oracle.exact_dedup_against_sql(split_id=250))
@@ -3486,18 +3436,6 @@ def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return numeric_histogram(_t(spark, sf_dir, "documents"), "n_chars", 0, 600, 24)
 
 
-@register("embedding_pca_topk", None)
-def q_embedding_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCA over the embeddings table (rows-only: the eigensolver is not
-    SQL-replayable): distributed moments (one mapInPandas scan reducing
-    each partition to a d²-sized row), driver eigh, JVM-literal
-    projection; returns the 20 most extreme docs along PC1. Agreement
-    with full numpy PCA is pinned in tests/test_pca.py."""
-    from llm_training_data_pipeline_spark.operators.pca import pca_topk_query
-
-    return pca_topk_query(_t(spark, sf_dir, "embeddings"))
-
-
 @register("curriculum_phases", oracle.curriculum_phases_sql())
 def q_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curriculum schedule: corpus ranked easy-first by word count and
@@ -3907,8 +3845,8 @@ def q_semdedup_pairs_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs_from_assignment. The whole chain — quantized sums, exact
     half-up floor-division means, vanishing clusters, argmax ties —
     replays bit-identically in the DuckDB oracle; the quality upgrade
-    path between iteration-free seeds and non-deterministic MLlib
-    KMeans, kept oracle-checkable."""
+    path between iteration-free seeds and a float-iterative k-means,
+    kept oracle-checkable."""
     from llm_training_data_pipeline_spark.operators import semdedup
 
     assigned = semdedup.kmeans_refine(_t(spark, sf_dir, "embeddings"), iters=1)

@@ -9,12 +9,23 @@ re-expression fixes both:
   ``dropDuplicatesWithinWatermark``: state is bounded by the watermark TTL
   (a deliberate, documented improvement over the reference's unbounded
   ``self.documents``), distributed by hash partitioning.
-- ``streaming_minhash_dedup`` — near-dup via ``applyInPandasWithState``
-  keyed by LSH band bucket: each bucket holds the signatures seen in that
-  bucket; a doc is emitted only if no bucket already contains a
-  near-matching signature. State TTL via processing-time timeout.
+- ``streaming_copy_number`` — online soft dedup: every arrival annotated
+  with its running duplicate ordinal (one long of operator state per
+  content digest).
+- ``streaming_minhash_dedup_incremental`` — near-dup via ``foreachBatch``:
+  each micro-batch is probed (all-JVM, ``incremental_minhash_dedup_batch``)
+  against a signature store of per-epoch parquet partitions under
+  ``state_dir``.
 - ``windowed_event_counts``  — tumbling/sliding watermark windows over the
   events stream (late data beyond the watermark is dropped).
+
+Near-dup retention is a file-level policy, not an operator-state TTL. The
+store's history is the set of ``epoch=N`` partitions, so bounding it means
+dropping old partitions before a (re)start. That is why there is no
+``GroupState`` near-dup index: keyed by band bucket it pays one Python
+round-trip per touched bucket-group (measured 16-21x slower than the
+``foreachBatch`` path), and its one extra capability, a processing-time
+TTL, has no consumer.
 
 All operators take/return streaming DataFrames, so sources (kafka, file,
 rate) and sinks compose freely.
@@ -29,7 +40,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    BinaryType,
     LongType,
     StringType,
     StructField,
@@ -81,9 +91,9 @@ def streaming_copy_number(
     id)`` exactly (pinned in tests).
 
     State per digest is ONE long; ``state_ttl_ms`` bounds it with a
-    processing-time timeout (same contract as
-    ``streaming_minhash_dedup``: leave None for bounded test runs so
-    ``processAllAvailable`` can quiesce).
+    processing-time timeout. Leave it None for bounded test runs: a
+    registered processing-time timeout keeps the micro-batch engine
+    scheduling work, so ``processAllAvailable`` would never quiesce.
     """
     out_schema = StructType(
         [
@@ -136,292 +146,6 @@ def streaming_copy_number(
     )
 
 
-# the stored signature matrix is ONE little-endian int64 buffer, not a
-# nested ARRAY<ARRAY<BIGINT>>: state round-trips every micro-batch for
-# every touched bucket-group, and the flat buffer avoids per-int boxing
-# and shrinks the state store rows. Throughput at the micro-bench scale
-# is unchanged (per-group Python dispatch dominates —
-# tools/stream_bench.py); the win is state size, which is what grows
-# with corpus, not with batch.
-_NEARDUP_STATE_SCHEMA = StructType([StructField("sigs", BinaryType())])
-
-
-def _make_neardup_fn(threshold: float, num_perm: int, state_ttl_ms: int | None):
-    def dedup_bucket(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (seen,) = state.get if state.exists else (b"",)
-        seen_mat = np.frombuffer(seen or b"", dtype="<i8").reshape(-1, num_perm)
-        out_ids: list[int] = []
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            sig_mat = np.array(
-                [list(s) for s in pdf["minhash_sig"]], dtype=np.int64
-            ).reshape(-1, num_perm)
-            ids = pdf["doc_id"].to_numpy()
-            # phase 1 screens the batch against stored state in one
-            # matrix op; phase 2 resolves within-batch near-dups in
-            # arrival order (shared kernel with the sharded layout)
-            accepted, seen_mat = _accept_greedy(
-                seen_mat, sig_mat, ids, threshold
-            )
-            out_ids.extend(accepted)
-        state.update((np.ascontiguousarray(seen_mat, dtype="<i8").tobytes(),))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)  # TTL bounds state size
-        yield pd.DataFrame({"bucket": [key[0]] * len(out_ids), "doc_id": out_ids})
-
-    return dedup_bucket
-
-
-def _accept_greedy(seen_mat, sig_mat, ids, threshold: float):
-    """Shared first-seen-per-bucket kernel: phase 1 screens the batch
-    against the stored signatures in one matrix op, phase 2 resolves
-    within-batch near-dups among the survivors in arrival order. Returns
-    (accepted ids, updated seen matrix) — identical semantics for the
-    per-bucket and sharded state layouts."""
-    import numpy as np
-
-    out_ids: list[int] = []
-    if seen_mat.shape[0]:
-        sims = (
-            (sig_mat[:, None, :] == seen_mat[None, :, :])
-            .mean(axis=2)
-            .max(axis=1)
-        )
-        survivors = np.flatnonzero(sims < threshold)
-    else:
-        survivors = np.arange(sig_mat.shape[0])
-    new_rows: list = []
-    for i in survivors:
-        sig = sig_mat[i]
-        if new_rows and (
-            (np.stack(new_rows) == sig).mean(axis=1).max() >= threshold
-        ):
-            continue
-        new_rows.append(sig)
-        out_ids.append(int(ids[i]))
-    if new_rows:
-        seen_mat = np.concatenate([seen_mat, np.stack(new_rows)])
-    return out_ids, seen_mat
-
-
-def _encode_shard(store: dict, num_perm: int) -> bytes:
-    """{bucket: (n, num_perm) int64 matrix} → flat little-endian int64
-    blob: [n_buckets, (bucket, n_rows, rows...)*]."""
-    import numpy as np
-
-    parts = [np.array([len(store)], dtype="<i8")]
-    for b, mat in store.items():
-        parts.append(np.array([b, mat.shape[0]], dtype="<i8"))
-        parts.append(np.ascontiguousarray(mat, dtype="<i8").ravel())
-    return np.concatenate(parts).tobytes()
-
-
-def _decode_shard(buf: bytes, num_perm: int) -> dict:
-    import numpy as np
-
-    arr = np.frombuffer(buf or b"", dtype="<i8")
-    if not arr.size:
-        return {}
-    out: dict = {}
-    pos = 1
-    for _ in range(int(arr[0])):
-        b, rows = int(arr[pos]), int(arr[pos + 1])
-        pos += 2
-        out[b] = arr[pos : pos + rows * num_perm].reshape(rows, num_perm)
-        pos += rows * num_perm
-    return out
-
-
-def _make_sharded_neardup_fn(
-    threshold: float, num_perm: int, state_ttl_ms: int | None
-):
-    """Sharded state layout (r12, VERDICT r10 ask #8 / r11 next #7): the
-    per-bucket layout dispatches ONE Python call + state get/put PER
-    BAND BUCKET — ~n_docs x num_bands tiny groups per micro-batch, and
-    that dispatch (not signature compute) bounds throughput (~280
-    rows/s at sf0.1). Keying the state by ``bucket % n_shards`` instead
-    packs ~U/n_shards buckets into one blob, so a micro-batch pays
-    n_shards Python crossings instead of tens of thousands, while the
-    per-bucket greedy semantics (``_accept_greedy``) are unchanged."""
-
-    def dedup_shard(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (blob,) = state.get if state.exists else (b"",)
-        store = _decode_shard(blob, num_perm)
-        out_buckets: list[int] = []
-        out_ids: list[int] = []
-        empty = np.empty((0, num_perm), dtype=np.int64)
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            sig_mat = np.array(
-                [list(s) for s in pdf["minhash_sig"]], dtype=np.int64
-            ).reshape(-1, num_perm)
-            ids = pdf["doc_id"].to_numpy()
-            # first-appearance bucket order == arrival order per bucket
-            for b, idx in pdf.groupby("bucket", sort=False).indices.items():
-                b = int(b)
-                accepted, store[b] = _accept_greedy(
-                    store.get(b, empty), sig_mat[idx], ids[idx], threshold
-                )
-                out_buckets.extend([b] * len(accepted))
-                out_ids.extend(accepted)
-        state.update((_encode_shard(store, num_perm),))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame({"bucket": out_buckets, "doc_id": out_ids})
-
-    return dedup_shard
-
-
-def _banded_stream(
-    stream: DataFrame, text_col: str, id_col: str, cfg: MinHashConfig
-) -> DataFrame:
-    """Shared prep for the stateful near-dup variants: normalize once
-    (staged — char_shingles over a raw column re-runs the
-    lowercase+collapse regex per gram inside the HOF lambda, r9),
-    HOF-path minhash signature, explode to (id, sig, band bucket).
-
-    Contract: the id column is ALWAYS emitted as ``doc_id`` regardless of
-    ``id_col`` — the GroupState processors downstream key on that fixed
-    name, and the public acceptance schema is ``(bucket, doc_id)``
-    (ADVICE r13: a custom ``id_col`` used to KeyError inside the
-    processor)."""
-    from llm_training_data_pipeline_spark.functions.hashing import lsh_bands, minhash_signature
-    from llm_training_data_pipeline_spark.functions.text import char_shingles
-
-    sig = stream.withColumn(
-        "_norm", F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    ).withColumn(
-        "minhash_sig",
-        minhash_signature(
-            char_shingles(F.col("_norm"), cfg.shingle_size, pre_normalized=True),
-            cfg.num_perm,
-        ),
-    ).drop("_norm")
-    return sig.select(
-        F.col(id_col).alias("doc_id"),
-        F.col("minhash_sig"),
-        F.explode(lsh_bands(F.col("minhash_sig"), cfg.num_bands, cfg.rows_per_band)).alias("band"),
-    ).select(
-        F.col("doc_id"),
-        F.col("minhash_sig"),
-        F.xxhash64(F.col("band.band_id"), F.col("band.band_sig")).alias("bucket"),
-    )
-
-
-def streaming_minhash_dedup(
-    stream: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    cfg: MinHashConfig = MinHashConfig(num_perm=32, num_bands=8),
-    state_ttl_ms: int | None = None,
-    state_shards: int | None = None,
-) -> DataFrame:
-    """D6 near-dup variant: stateful per-band-bucket signature index.
-
-    ``state_ttl_ms`` enables a processing-time TTL that evicts idle bucket
-    state (the fix for the reference's unbounded index). Leave None for
-    bounded test runs: a registered processing-time timeout keeps the
-    micro-batch engine scheduling work, so ``processAllAvailable`` would
-    never quiesce.
-
-    Emits (bucket, doc_id) of accepted docs; a doc accepted in EVERY one of
-    its band buckets is globally unique (first-seen semantics per bucket,
-    matching the reference's incremental ``is_duplicate`` probe,
-    deduplicator.py:150-180). Downstream can aggregate acceptances; the
-    common pattern is to treat acceptance in all bands as "insert".
-
-    Note: ``minhash_signatures`` is aggregation-based and not streamable, so the
-    signature here is computed with the HOF expression path on the (small)
-    per-microbatch data — acceptable because each microbatch is bounded.
-
-    ``state_shards`` (r12): key the state store by ``bucket % state_shards``
-    instead of by bucket. The per-bucket layout pays one Python dispatch +
-    state get/put per (doc, band) GROUP — tens of thousands of tiny groups
-    per micro-batch, and that dispatch (not signature compute) is the
-    measured throughput bound (tools/stream_bench.py). Sharding packs many
-    buckets into one state blob: ``state_shards`` crossings per micro-batch,
-    identical per-bucket greedy semantics (the shared ``_accept_greedy``
-    kernel; pinned stream==batch in tests). Size it ~2-4x the executor
-    cores at scale — each shard's state must fit one task's memory.
-    """
-    banded = _banded_stream(stream, text_col, id_col, cfg)
-    out_schema = StructType(
-        [StructField("bucket", LongType()), StructField("doc_id", LongType())]
-    )
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    if state_shards is not None:
-        if state_shards < 1:
-            raise ValueError(f"state_shards must be >= 1: {state_shards}")
-        return (
-            banded.withColumn(
-                "_shard", F.pmod(F.col("bucket"), F.lit(state_shards))
-            )
-            .groupBy("_shard")
-            .applyInPandasWithState(
-                _make_sharded_neardup_fn(
-                    cfg.threshold, cfg.num_perm, state_ttl_ms
-                ),
-                outputStructType=out_schema,
-                stateStructType=_NEARDUP_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=timeout_conf,
-            )
-        )
-    return banded.groupBy("bucket").applyInPandasWithState(
-        _make_neardup_fn(cfg.threshold, cfg.num_perm, state_ttl_ms),
-        outputStructType=out_schema,
-        stateStructType=_NEARDUP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout_conf,
-    )
-
-
-def accepted_in_all_bands(
-    acceptances: DataFrame,
-    num_bands: int,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Collapse ``streaming_minhash_dedup`` per-band acceptances to unique docs.
-
-    ``streaming_minhash_dedup`` emits one (bucket, doc_id) row per band bucket
-    that accepted the doc — a near-duplicate still appears in the buckets
-    where it does NOT collide with its twin. A doc is globally unique only
-    when accepted in ALL ``num_bands`` of its buckets (first-seen semantics
-    per bucket). This helper performs that aggregation; apply it per
-    micro-batch (``foreachBatch``) or over the collected sink table — a
-    post-state streaming aggregate would need its own output-mode handling.
-
-    Each (doc, band) pair emits at most one acceptance row and the bucket id
-    hashes (band_id, band_sig), so a plain count equals the band count.
-    """
-    return (
-        acceptances.groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("_n_accepted"))
-        .filter(F.col("_n_accepted") == num_bands)
-        .select(id_col)
-    )
-
-
 def incremental_minhash_dedup_batch(
     batch: DataFrame,
     history_banded: DataFrame | None,
@@ -435,13 +159,10 @@ def incremental_minhash_dedup_batch(
 
     Returns the accepted rows with their ``minhash_sig`` column attached
     (callers strip it or band-explode it into the history table). Every
-    operation is a DataFrame expression — signature via the streamable
-    HOF path (bit-identical to the batch aggregation path, pinned),
-    bucket join against history, est-Jaccard verify, band self-join
-    within the batch. No Python crossing at all: this is the JVM
-    replacement for the ``applyInPandasWithState`` per-bucket probe,
-    whose per-group Python round-trip floors throughput at ~10² rows/s
-    (r6 verdict watch item #3).
+    operation is a DataFrame expression — signature pass, bucket join
+    against history, est-Jaccard verify, band self-join within the
+    batch. No Python crossing at all, so the per-batch cost is a few
+    JVM joins rather than one Python round-trip per bucket-group.
 
     Semantics: with ``history_banded=None`` and the whole corpus in one
     batch, the accepted set is EXACTLY ``dedup.minhash_dedup`` (min-id
@@ -453,9 +174,8 @@ def incremental_minhash_dedup_batch(
     granularity), so ONE bucket join decides both rejection sources.
 
     Because ``foreachBatch`` hands us a plain batch DataFrame, the
-    signature pass uses the AGGREGATION path (hash distinct shingles
-    only — bit-identical to the streamable HOF expression, pinned, but
-    ~700× less hashing on duplicate-heavy text) and is materialized
+    signature pass is the batch aggregation (``dedup.minhash_signatures``,
+    the same signatures ``dedup.minhash_dedup`` uses) and is materialized
     once with ``localCheckpoint``: the band explode (both join sides)
     and the final anti-join all reference it, and an unmaterialized
     plan would re-run the signature pass per branch (the measured ~3×
@@ -463,26 +183,13 @@ def incremental_minhash_dedup_batch(
     the loser side — the anti-join is duplicate-insensitive, and the
     removed exchange is one fewer stage on the per-micro-batch floor.
     """
-    from llm_training_data_pipeline_spark.functions.hashing import (
-        lsh_bands,
-        signature_jaccard,
-    )
+    from llm_training_data_pipeline_spark.functions.hashing import signature_jaccard
     from llm_training_data_pipeline_spark.operators import dedup as _dedup
 
     sig = _dedup.minhash_signatures(
         batch.select(id_col, text_col), text_col, id_col, cfg
     ).localCheckpoint(eager=True)
-    banded = sig.select(
-        F.col(id_col),
-        F.col("minhash_sig"),
-        F.explode(
-            lsh_bands(F.col("minhash_sig"), cfg.num_bands, cfg.rows_per_band)
-        ).alias("band"),
-    ).select(
-        F.col(id_col),
-        F.col("minhash_sig"),
-        F.xxhash64(F.col("band.band_id"), F.col("band.band_sig")).alias("bucket"),
-    )
+    banded = banded_signatures(sig, cfg, id_col)
     # rivals = smaller-id batch docs ∪ history. History rows keep their
     # TRUE id plus a _hist flag: a history rival beats every batch doc
     # EXCEPT the doc itself (same id) — the self-exclusion that makes an
@@ -546,8 +253,7 @@ def streaming_minhash_dedup_incremental(
     text_col: str = "text",
     id_col: str = "doc_id",
 ):
-    """D6 near-dup on the ``foreachBatch`` + signature-store design: the
-    production-throughput alternative to ``streaming_minhash_dedup``.
+    """D6 near-dup on the ``foreachBatch`` + signature-store design.
 
     Every micro-batch runs ``incremental_minhash_dedup_batch`` (all-JVM)
     against the accumulated banded-signature history, then appends its
@@ -562,11 +268,8 @@ def streaming_minhash_dedup_incremental(
     exist). ``sink(accepted_df,
     epoch_id)`` receives each batch's accepted rows (original columns).
 
-    Why this beats the stateful-operator variant ~10-40×: per-bucket
-    ``applyInPandasWithState`` pays a Python round-trip per touched
-    bucket-group (~40k singleton groups at bench scale); here the per-
-    batch cost is a handful of JVM joins whose width is (id, bucket,
-    sig). The trade: acceptance is decided at batch granularity (the
+    The per-batch cost is a handful of JVM joins whose width is (id,
+    bucket, sig). Acceptance is decided at batch granularity (the
     within-batch rule is min-id, not arrival order) and the history
     lives in a signature store rather than operator state — at 100 TB
     that store is exactly ``persist_minhash_signatures``'s bucketed

@@ -12,14 +12,12 @@ from llm_training_data_pipeline_spark.operators.similarity import (
     ann_lsh_topk,
     ann_recall,
     brute_force_topk,
-    ivf_topk,
 )
 from llm_training_data_pipeline_spark.schemas import load_table
 from tests.conftest import SF_DIR
 
 # Floors hold at both sf0.001 and sf0.01 (the report is fully seeded, so
-# per-sf values are deterministic: p4_t8 measures 0.69 / 0.66, ivf
-# 0.45 / 0.56). The synthetic embeddings are near-random (neighbor
+# per-sf values are deterministic: p4_t8 measures 0.69 / 0.66). The synthetic embeddings are near-random (neighbor
 # angles ~80°) — real embedding corpora cluster far tighter and recall
 # runs much higher at the same config.
 FLOORS = {
@@ -61,18 +59,6 @@ def test_or_amplification_raises_recall(recall_by_method):
         recall_by_method["lsh_p6_t4"]["recall"]
         > recall_by_method["lsh_p6_t1"]["recall"]
     )
-
-
-def test_ivf_recall_floor(spark):
-    emb = load_table(spark, "embeddings", SF_DIR)
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(emb, queries, k=10).select("q_id", "vec_id")
-    approx = ivf_topk(emb, queries, k=10, n_clusters=16, n_probe=3).select(
-        "q_id", "vec_id"
-    )
-    row = ann_recall(exact, approx).collect()[0]
-    assert row["recall"] >= 0.40, row["recall"]
-    assert row["expected"] == 100
 
 
 def test_multi_table_candidates_deduped(spark):
@@ -175,31 +161,6 @@ def test_ivf_seeded_recall_reasonable_at_partial_probe(spark):
     got = {(r["q_id"], r["vec_id"]) for r in ivf.collect()}
     recall = len(truth & got) / len(truth)
     assert recall >= 0.5, recall
-
-
-def test_ivf_sampled_quantizer_still_recalls(spark):
-    """train_fraction fits the coarse quantizer on a seeded corpus
-    sample (the FAISS training protocol — the quantizer needs the
-    density shape, not every vector): assignment still covers the FULL
-    corpus (k results per query from anywhere), determinism holds, and
-    recall stays in the same band as the full-fit quantizer."""
-    emb = load_table(spark, "embeddings", SF_DIR)
-    queries = emb.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(emb, queries, k=10).select("q_id", "vec_id")
-    sampled = ivf_topk(
-        emb, queries, k=10, n_clusters=8, n_probe=3,
-        max_iter=4, train_fraction=0.5,
-    )
-    again = ivf_topk(
-        emb, queries, k=10, n_clusters=8, n_probe=3,
-        max_iter=4, train_fraction=0.5,
-    )
-    a = sorted(map(tuple, sampled.collect()))
-    b = sorted(map(tuple, again.collect()))
-    assert a == b  # seeded sample + seeded kmeans => replayable
-    assert sampled.groupBy("q_id").count().agg({"count": "max"}).collect()[0][0] == 10
-    row = ann_recall(exact, sampled.select("q_id", "vec_id")).collect()[0]
-    assert row["recall"] >= 0.30, row["recall"]
 
 
 def test_pq_seed_vectors_encode_to_own_code(spark):

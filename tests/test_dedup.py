@@ -185,23 +185,6 @@ def test_embedding_ann_pairs_matches_oracle_no_cartesian(spark, ddb):
     assert_df_matches_oracle(out, ddb, embedding_ann_pairs_sql(threshold=0.3))
 
 
-def test_minhash_ml_agrees_with_native(spark):
-    """MLlib MinHashLSH path finds the same exact dup + near dups the
-    native implementation finds on the pinned fixture."""
-    from llm_training_data_pipeline_spark.operators.dedup_ml import (
-        minhash_ml_dedup,
-        minhash_ml_pairs,
-    )
-
-    rows = DOCS + [(3, "The quick brown fox leaps over the lazy dog.")]
-    pairs = minhash_ml_pairs(_df(spark, rows), threshold=0.5, num_hash_tables=8)
-    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
-    assert got.get((1, 2)) == 1.0  # exact dup: jaccard exactly 1
-    assert (1, 3) in got and got[(1, 3)] >= 0.5
-    out = minhash_ml_dedup(_df(spark, rows), threshold=0.5)
-    assert sorted(r["doc_id"] for r in out.select("doc_id").collect()) == [1, 4, 6]
-
-
 def test_minhash_accuracy_vs_exact_jaccard_ground_truth(spark, ddb):
     """MinHash dedup vs DuckDB-computed EXACT all-pairs Jaccard on the real
     documents table: every strongly-similar pair (J >= 0.9) must be caught,

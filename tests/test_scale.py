@@ -76,30 +76,6 @@ def test_asof_join_semantics(spark):
     assert out[4] is None  # user 200 has no purchases
 
 
-def test_ivf_topk_recall_vs_brute_force(spark):
-    from llm_training_data_pipeline_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = brute_force_topk(emb, queries, k=5)
-    approx = ivf_topk(emb, queries, k=5, n_clusters=8, n_probe=3)
-    ex = {}
-    for r in exact.collect():
-        ex.setdefault(r["q_id"], set()).add(r["vec_id"])
-    ap = {}
-    for r in approx.collect():
-        ap.setdefault(r["q_id"], set()).add(r["vec_id"])
-    # decent recall on clustered synthetic embeddings with 3/8 probes
-    recalls = [len(ex[q] & ap.get(q, set())) / 5 for q in ex]
-    assert sum(recalls) / len(recalls) >= 0.5, recalls
-    # determinism
-    ap2 = {(r["q_id"], r["vec_id"]) for r in ivf_topk(emb, queries, k=5, n_clusters=8, n_probe=3).collect()}
-    assert ap2 == {(q, v) for q, vs in ap.items() for v in vs}
-
-
 def test_asof_join_tied_right_timestamps_deterministic(spark):
     left = spark.createDataFrame(
         [(1, 100, _ts(10))], "event_id long, user_id long, ts timestamp"

@@ -1,5 +1,6 @@
 """Streaming tests: file-source micro-batches → memory sink, deterministic
-fixtures exercising exact dedup, near-dup state, and watermark windows."""
+fixtures exercising exact dedup, the near-dup signature store, and
+watermark windows."""
 
 from __future__ import annotations
 
@@ -19,7 +20,6 @@ from pyspark.sql.types import (
 from llm_training_data_pipeline_spark.operators.dedup import MinHashConfig
 from llm_training_data_pipeline_spark.streaming.dedup_stream import (
     streaming_exact_dedup,
-    streaming_minhash_dedup,
     windowed_event_counts,
 )
 
@@ -69,118 +69,6 @@ def test_streaming_exact_dedup(spark, tmp_path, doc_rows):
     got = {r["doc_id"] for r in spark.sql("SELECT doc_id FROM t_exact_dedup").collect()}
     assert len(got) == 2  # one of {1,2,4} + doc 3
     assert 3 in got
-
-
-def test_streaming_minhash_dedup(spark, tmp_path, doc_rows):
-    src = str(tmp_path / "src2")
-    _write_docs(spark, src, doc_rows)
-    stream = spark.readStream.schema(DOC_SCHEMA).parquet(src)
-    cfg = MinHashConfig(num_perm=32, threshold=0.8, shingle_size=5, num_bands=8)
-    accepted = streaming_minhash_dedup(stream, cfg=cfg)
-    q = (
-        accepted.writeStream.format("memory")
-        .queryName("t_minhash_stream")
-        .outputMode("append")
-        .start()
-    )
-    _run_to_completion(q)
-    rows = spark.sql("SELECT bucket, doc_id FROM t_minhash_stream").collect()
-    per_doc = {}
-    for r in rows:
-        per_doc.setdefault(r["doc_id"], 0)
-        per_doc[r["doc_id"]] += 1
-    # doc 1 (or 2) wins all its buckets; the exact dup is accepted in none
-    assert per_doc.get(1, 0) == 8
-    assert per_doc.get(2, 0) == 0
-    assert per_doc.get(3, 0) == 8  # unrelated doc accepted everywhere
-
-    # the all-bands collapse yields exactly the globally-unique docs
-    from llm_training_data_pipeline_spark.streaming.dedup_stream import (
-        accepted_in_all_bands,
-    )
-
-    unique = {
-        r["doc_id"]
-        for r in accepted_in_all_bands(
-            spark.sql("SELECT bucket, doc_id FROM t_minhash_stream"), num_bands=8
-        ).collect()
-    }
-    assert unique == {1, 3}
-
-
-def test_streaming_minhash_dedup_custom_id_col(spark, tmp_path, doc_rows):
-    """ADVICE r13: a non-default id_col used to KeyError inside the stateful
-    processor (it reads pdf['doc_id']); _banded_stream now normalizes the id
-    column to doc_id, so any id_col works and the acceptance schema is the
-    documented fixed (bucket, doc_id)."""
-    src = str(tmp_path / "src_idcol")
-    renamed = [{"page_id": r[0], "text": r[1]} for r in doc_rows]
-    spark.createDataFrame(
-        renamed, "page_id long, text string"
-    ).write.parquet(src)
-    stream = spark.readStream.schema("page_id long, text string").parquet(src)
-    cfg = MinHashConfig(num_perm=32, threshold=0.8, shingle_size=5, num_bands=8)
-    accepted = streaming_minhash_dedup(stream, id_col="page_id", cfg=cfg)
-    q = (
-        accepted.writeStream.format("memory")
-        .queryName("t_minhash_idcol")
-        .outputMode("append")
-        .start()
-    )
-    _run_to_completion(q)
-    per_doc = {}
-    for r in spark.sql("SELECT bucket, doc_id FROM t_minhash_idcol").collect():
-        per_doc[r["doc_id"]] = per_doc.get(r["doc_id"], 0) + 1
-    # docs 1/2/4 are near-dups: exactly one (first arrival per bucket) wins
-    # all 8 bands, the others none; unrelated doc 3 wins everywhere
-    dup_winners = [d for d in (1, 2, 4) if per_doc.get(d, 0) == 8]
-    assert len(dup_winners) == 1
-    assert sum(per_doc.get(d, 0) for d in (1, 2, 4)) == 8
-    assert per_doc.get(3, 0) == 8
-
-
-def test_streaming_minhash_dedup_sharded_matches_per_bucket(
-    spark, tmp_path, doc_rows
-):
-    """r12 sharded state layout: keying state by bucket % n_shards must
-    emit the exact same (bucket, doc_id) acceptance set as the per-bucket
-    layout — the shared _accept_greedy kernel only changed WHERE a
-    bucket's signatures live, never the greedy semantics."""
-    cfg = MinHashConfig(num_perm=32, threshold=0.8, shingle_size=5, num_bands=8)
-    # a second micro-batch with a near-dup of doc 3 and a fresh doc
-    later = [
-        (5, "Python is a great programming language for data!", doc_rows[0][2]),
-        (6, "Entirely new content about distributed stream processing.", doc_rows[0][2]),
-    ]
-    outs = {}
-    for name, shards in (("per_bucket", None), ("sharded", 4)):
-        src = str(tmp_path / f"src_{name}")
-        _write_docs(spark, src, doc_rows)
-        import time as _time
-
-        _time.sleep(1.1)  # distinct mtimes fix micro-batch replay order
-        _write_docs(spark, src, later)
-        stream = (
-            spark.readStream.schema(DOC_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        accepted = streaming_minhash_dedup(stream, cfg=cfg, state_shards=shards)
-        q = (
-            accepted.writeStream.format("memory")
-            .queryName(f"t_shard_eq_{name}")
-            .outputMode("append")
-            .start()
-        )
-        _run_to_completion(q)
-        outs[name] = {
-            (r["bucket"], r["doc_id"])
-            for r in spark.sql(
-                f"SELECT bucket, doc_id FROM t_shard_eq_{name}"
-            ).collect()
-        }
-    assert outs["sharded"] == outs["per_bucket"]
-    assert outs["sharded"]  # non-vacuous
 
 
 def test_windowed_event_counts(spark, tmp_path):
@@ -366,130 +254,6 @@ def test_clean_quality_stream_matches_batch(spark, tmp_path):
     finally:
         q.stop()
     assert got == expected
-
-
-def test_stream_and_batch_minhash_signatures_identical(spark):
-    """The streaming path signs docs with the HOF expression
-    (minhash_signature over char_shingles); batch uses the explode+agg
-    table. Same normalization, same fold, same permutation params -> the
-    signatures must be BIT-IDENTICAL, else stream/batch dedup decisions
-    drift apart silently."""
-    from llm_training_data_pipeline_spark.functions.hashing import minhash_signature
-    from llm_training_data_pipeline_spark.functions.text import char_shingles
-    from llm_training_data_pipeline_spark.operators.dedup import (
-        MinHashConfig,
-        minhash_signatures,
-    )
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text")
-        .limit(100)
-    )
-    cfg = MinHashConfig(num_perm=32, threshold=0.8, shingle_size=5, num_bands=8)
-    hof = {
-        r["doc_id"]: tuple(r["sig"])
-        for r in docs.select(
-            "doc_id",
-            minhash_signature(
-                char_shingles(F.col("text"), cfg.shingle_size), cfg.num_perm
-            ).alias("sig"),
-        ).collect()
-    }
-    agg = {
-        r["doc_id"]: tuple(r["minhash_sig"])
-        for r in minhash_signatures(docs, cfg=cfg).collect()
-    }
-    assert hof == agg
-
-
-def test_streaming_minhash_matches_batch_greedy_replay(spark, tmp_path):
-    """Replay a real corpus slice through streaming_minhash_dedup in two
-    deterministic micro-batches and assert the surviving set equals a
-    batch-computed mirror of the same first-seen-per-bucket semantics
-    built from the SAME signatures. This is the stream<->batch
-    equivalence gate for near-dup dedup."""
-    import time as _time
-    from collections import defaultdict
-
-    from llm_training_data_pipeline_spark.functions.hashing import minhash_signature
-    from llm_training_data_pipeline_spark.functions.text import char_shingles
-    from llm_training_data_pipeline_spark.streaming.dedup_stream import (
-        accepted_in_all_bands,
-    )
-
-    cfg = MinHashConfig(num_perm=32, threshold=0.8, shingle_size=5, num_bands=8)
-    base = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "text")
-        .orderBy("doc_id")
-        .limit(120)
-        .collect()
-    )
-    assert len(base) == 120
-
-    schema = "doc_id long, text string"
-    src = str(tmp_path / "replay")
-    # two micro-batches in doc_id order; distinct mtimes fix replay order
-    for chunk in (base[:60], base[60:]):
-        spark.createDataFrame(
-            [(r["doc_id"], r["text"]) for r in chunk], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(1.1)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    accepted = streaming_minhash_dedup(stream, cfg=cfg)
-    q = (
-        accepted.writeStream.format("memory")
-        .queryName("t_equiv_minhash")
-        .outputMode("append")
-        .start()
-    )
-    _run_to_completion(q)
-    streamed = {
-        r["doc_id"]
-        for r in accepted_in_all_bands(
-            spark.sql("SELECT bucket, doc_id FROM t_equiv_minhash"),
-            num_bands=cfg.num_bands,
-        ).collect()
-    }
-
-    # batch mirror: identical signatures, identical per-bucket first-seen
-    # acceptance in doc_id (arrival) order
-    sigs = {
-        r["doc_id"]: list(r["sig"])
-        for r in spark.createDataFrame(
-            [(r["doc_id"], r["text"]) for r in base], schema
-        )
-        .select(
-            "doc_id",
-            minhash_signature(
-                char_shingles(F.col("text"), cfg.shingle_size), cfg.num_perm
-            ).alias("sig"),
-        )
-        .collect()
-    }
-    rows_per = cfg.rows_per_band
-    state: dict[tuple, list] = defaultdict(list)
-    expected = set()
-    for doc_id in sorted(sigs):
-        sig = sigs[doc_id]
-        n_accepted = 0
-        for band_id in range(cfg.num_bands):
-            bucket = (band_id, tuple(sig[band_id * rows_per : (band_id + 1) * rows_per]))
-            near = any(
-                sum(a == b for a, b in zip(s, sig)) / cfg.num_perm >= cfg.threshold
-                for s in state[bucket]
-            )
-            if not near:
-                state[bucket].append(sig)
-                n_accepted += 1
-        if n_accepted == cfg.num_bands:
-            expected.add(doc_id)
-
-    assert streamed == expected
 
 
 def test_windowed_event_counts_stream_matches_batch(spark, tmp_path):

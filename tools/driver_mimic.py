@@ -169,19 +169,6 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     name_filter = set(sys.argv[2:])
     spark = get_spark(extra_conf={"spark.sql.codegen.fallback": "false"})
-    # Warm MLlib class-loading so it isn't billed to whichever query
-    # first touches KMeans (ann_ivf_topk showed 11.7s in the r8 sweep;
-    # its warm cost is ~1.5s). Same rule as the JVM warm-up job the
-    # bench runs: one-time session costs are not query costs.
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import functions as F
-
-    _warm = spark.createDataFrame(
-        [(float(i), float(i % 3)) for i in range(20)], "x double, y double"
-    ).select(array_to_vector(F.array("x", "y")).alias("_fv"))
-    _wmodel = KMeans(k=2, seed=1, maxIter=1, featuresCol="_fv").fit(_warm)
-    _wmodel.transform(_warm).count()
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")

@@ -43,7 +43,6 @@ def main() -> None:
     from llm_training_data_pipeline_spark.schemas import load_table
     from llm_training_data_pipeline_spark.streaming.dedup_stream import (
         streaming_exact_dedup,
-        streaming_minhash_dedup,
     )
 
     from pyspark.sql import functions as F
@@ -95,29 +94,10 @@ def main() -> None:
         # online soft dedup: every row emitted with its running duplicate
         # ordinal — one long of state per digest, no signature matrix
         "copy_number": run("copy_number", lambda s: streaming_copy_number(s)),
-        "minhash": run(
-            "minhash",
-            lambda s: streaming_minhash_dedup(
-                s, cfg=MinHashConfig(num_perm=32, num_bands=8), state_ttl_ms=None
-            ),
-        ),
-        # r12 sharded state layout: same greedy semantics, state keyed by
-        # bucket % 32 so a micro-batch pays 32 Python crossings instead
-        # of one per band bucket (the measured per-bucket dispatch bound)
-        "minhash_sharded": run(
-            "minhash_sharded",
-            lambda s: streaming_minhash_dedup(
-                s,
-                cfg=MinHashConfig(num_perm=32, num_bands=8),
-                state_ttl_ms=None,
-                state_shards=32,
-            ),
-        ),
     }
 
     # foreachBatch + signature-store incremental near-dup (r7): the
-    # all-JVM production path — same probe semantics at batch
-    # granularity, no per-group Python round-trip
+    # all-JVM near-dup path, no per-group Python round-trip
     from llm_training_data_pipeline_spark.streaming.dedup_stream import (
         streaming_minhash_dedup_incremental,
     )
@@ -283,7 +263,7 @@ def main() -> None:
 
     # per-source admission caps: the stateless-looking stateful counter
     # (one int of state per stratum) — measures the applyInPandasWithState
-    # floor with minimal state, vs minhash's signature-index state
+    # floor with minimal state
     from llm_training_data_pipeline_spark.streaming.cap_stream import (
         streaming_source_cap,
     )
