@@ -1,9 +1,9 @@
 """Hash-family Column helpers: MinHash permutation parameters, signature
-Jaccard, LSH band keys, SimHash.
+Jaccard, LSH band keys, Hamming distance.
 
 All native ``pyspark.sql.functions`` expressions, computed in the JVM with
 no Python. The MinHash permutation family is the classic ``(a*h + b) mod p``
-universal hashing scheme (``dedup._minhash_sig_table`` evaluates it as one
+universal hashing scheme (``dedup.minhash_signatures`` evaluates it as one
 ``min`` aggregate per permutation). ANSI-overflow-safe: the family works mod
 Mersenne-31 (see below), keeping every product under 2^62.
 """
@@ -70,39 +70,6 @@ def lsh_bands(sig: Column, num_bands: int, rows_per_band: int) -> Column:
             j.cast("int").alias("band_id"),
             F.slice(sig, j * rows_per_band + 1, rows_per_band).alias("band_sig"),
         ),
-    )
-
-
-def simhash64(tokens: Column, seed: int = 42) -> Column:
-    """64-bit SimHash of an ARRAY<STRING> token column, as BIGINT.
-
-    Classic Charikar scheme: per bit position, sum +1/-1 over token hashes,
-    sign of the sum sets the bit. Pure higher-order expressions: O(64 * n)
-    JVM ops per row, no Python.
-    """
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t, F.lit(seed)))
-    # bit b contribution: +1 if hash bit set else -1; bit set iff sum > 0
-    bits = F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda b: F.when(
-            F.aggregate(
-                hashes,
-                F.lit(0).cast("long"),
-                lambda acc, h: acc
-                + F.when(F.call_function("shiftright", h, b.cast("int")).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-            )
-            > 0,
-            F.lit(1).cast("long"),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    # assemble via bitwise OR of bit_b << b (no arithmetic overflow possible)
-    indexed = F.zip_with(
-        bits,
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda bit, pos: F.call_function("shiftleft", bit, pos.cast("int")),
-    )
-    return F.aggregate(
-        indexed, F.lit(0).cast("long"), lambda acc, v: acc.bitwiseOR(v)
     )
 
 

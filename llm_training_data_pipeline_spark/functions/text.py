@@ -69,18 +69,48 @@ def char_ngrams(norm: Column, n: int) -> Column:
     kept (a multiset); a string shorter than ``n`` is its own one gram.
 
     The one gram builder of the package: ``char_shingles`` dedups its
-    output, and ``dedup._minhash_sig_table`` explodes it as is (``min``
-    is duplicate-insensitive). ``norm`` must be a bound column, not a
-    computed expression — the lambda references it once per gram.
-    ``substr`` walks from the string start to code point ``i``, so one
-    document costs O(len²).
+    output, and ``dedup.minhash_signatures`` explodes it as is (``min``
+    is duplicate-insensitive).
+
+    One linear regex scan: a zero-width lookahead captures the ``n``
+    code points at every position. After a zero-width match Java's
+    ``Matcher`` steps one UTF-16 unit, so the low-surrogate guard keeps
+    it from starting a gram inside an astral character. (Indexing with
+    ``substr(norm, i, n)`` walks from the string start to code point
+    ``i`` each time: O(len²) per document.)
     """
-    ln = F.length(norm)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(ln - F.lit(n - 1), F.lit(0))),
-        lambda i: norm.substr(i, F.lit(n)),
+    grams = F.regexp_extract_all(
+        norm, F.lit(r"(?s)(?=(?![\x{DC00}-\x{DFFF}])(.{%d}))" % n), 1
     )
-    return F.when(ln < n, F.array(norm)).otherwise(grams)
+    return F.when(F.length(norm) < n, F.array(norm)).otherwise(grams)
+
+
+def word_ngrams_from_tokens(toks: Column, n: int) -> Column:
+    """Distinct word n-grams of a token-array column, space-joined; a
+    document shorter than ``n`` words is its own one gram (same rule as
+    ``oracle._word_ngrams_sql``). The one word-gram builder of the
+    package.
+
+    ``toks`` MUST be a bound column (projected in a prior select /
+    withColumn), not an inline tokenize expression: expressions
+    referenced from inside a HOF lambda are re-evaluated PER ELEMENT in
+    interpreted Generate contexts, so an inline ``split`` re-tokenizes
+    the document once per gram per word — measured 18.7s vs 1.2s for
+    the same n=3 explode at sf1.
+
+    Grams come from O(1) element_at lookups — array_join(slice())
+    allocates a sub-array per gram and runs 10x+ slower in interpreted
+    Generate contexts.
+    """
+    grams = F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))),
+        lambda i: F.concat_ws(
+            " ", *[F.element_at(toks, (i + F.lit(j)).cast("int")) for j in range(n)]
+        ),
+    )
+    return F.when(F.size(toks) < n, F.array(F.array_join(toks, " "))).otherwise(
+        F.array_distinct(grams)
+    )
 
 
 def char_shingles(
@@ -89,18 +119,15 @@ def char_shingles(
     """Distinct character n-grams of the lowercased, space-collapsed text.
 
     Reference semantics: /root/reference/src/processing/deduplicator.py:110-130
-    (lowercase → collapse whitespace → set of char n-grams). Expressed as a
-    higher-order ``transform`` over an index ``sequence`` — stays JVM-side,
-    no explode, no Python.
+    (lowercase → collapse whitespace → set of char n-grams) — stays
+    JVM-side, no explode, no Python.
 
-    Hot-path note: expressions captured by a HOF lambda are re-evaluated
-    PER ELEMENT in interpreted Generate contexts — the internal
-    lowercase+collapse regex runs once per gram position, which is
-    quadratic in document length. On hot paths, project the normalized
-    text to a column first and pass it with ``pre_normalized=True`` so
-    the lambda captures only a bound attribute (O(1) per element); see
-    ``dedup._minhash_sig_table`` for the staged pattern and the r9
-    word_ngrams_from_tokens note for the 15x measurement.
+    Hot-path note: ``char_ngrams`` references the normalized text three
+    times (length, short-string branch, gram scan), so an inline
+    normalization may run its lowercase+collapse regex once per reference.
+    On hot paths, project the normalized text to a column first and
+    pass it with ``pre_normalized=True``; see ``dedup.minhash_signatures``
+    for the staged pattern.
     """
     c = F.col(col) if isinstance(col, str) else col
     norm = c if pre_normalized else F.regexp_replace(F.lower(c), r"\s+", " ")

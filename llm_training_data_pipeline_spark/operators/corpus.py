@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from llm_training_data_pipeline_spark.functions.text import (
     whitespace_tokens,
     word_count,
+    word_ngrams_from_tokens,
 )
 
 # ---------------------------------------------------------------------
@@ -54,19 +55,9 @@ def _lower_words(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 def _count_words(words: DataFrame) -> DataFrame:
     """(word, n) counts over an exploded word table — the single
-    definition both the public model builder and the surprisal scorers
-    share, so the two can never drift."""
+    definition both surprisal scorers share, so the two can never
+    drift."""
     return words.groupBy("word").agg(F.count(F.lit(1)).alias("n"))
-
-
-def unigram_model(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Corpus unigram counts: ``(word, n)``.
-
-    One explode + one hash aggregate (map-side partials first), keyed on
-    the word — the natural high-cardinality key, so it scales linearly
-    and AQE coalesces the tail.
-    """
-    return _count_words(_lower_words(df, text_col, id_col))
 
 
 def unigram_surprisal(
@@ -126,44 +117,6 @@ def unigram_surprisal(
 # ---------------------------------------------------------------------
 # Benchmark contamination check
 # ---------------------------------------------------------------------
-
-
-def word_ngrams_from_tokens(toks: Column, n: int) -> Column:
-    """Distinct word n-grams from a token-array column; documents
-    shorter than ``n`` words contribute their whole text as one gram
-    (same rule as ``dedup.ngram_jaccard_pairs`` /
-    ``oracle._word_ngrams_sql``).
-
-    ``toks`` MUST be a bound column (projected in a prior select /
-    withColumn), not an inline tokenize expression: expressions
-    referenced from inside a HOF lambda are re-evaluated PER ELEMENT in
-    interpreted Generate contexts, so an inline ``split`` re-tokenizes
-    the document once per gram per word — measured 18.7s vs 1.2s for
-    the same n=3 explode at sf1 (r9). ``word_ngram_set`` is the
-    convenience wrapper that keeps the old text-column signature and
-    the perf trap; operators on the hot path project first.
-
-    Grams come from O(1) element_at lookups — array_join(slice())
-    allocates a sub-array per gram and runs 10x+ slower in interpreted
-    Generate contexts (see boilerplate_ngrams).
-    """
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + F.lit(j)).cast("int")) for j in range(n)]
-        ),
-    )
-    return F.when(F.size(toks) < n, F.array(F.array_join(toks, " "))).otherwise(
-        F.array_distinct(grams)
-    )
-
-
-def word_ngram_set(text: Column, n: int) -> Column:
-    """Distinct word n-grams of the lowercased text. Convenience form —
-    inside an explode this re-evaluates the tokenize per element (see
-    word_ngrams_from_tokens); hot-path callers project the token array
-    first and call that variant."""
-    return word_ngrams_from_tokens(whitespace_tokens(F.lower(text)), n)
 
 
 def contamination_pairs(
@@ -823,15 +776,13 @@ def pack_token_ids(
     exactly ``seq_len``. ``pack_sequences`` assigns docs to budgeted
     packs; this emits the packed id arrays a training loader consumes.
 
-    Scale shape: the global token offset per document is a DISTRIBUTED
-    prefix sum — range-partition by id, per-partition running sums via a
-    window over the staged partition id, plus a driver-side cumulative
-    of the per-partition totals (one tiny collect of num-partitions
-    rows, control plane only). The token explode then carries an exact
-    global position, so sequence assignment is independent of
-    partitioning; the per-sequence rebuild groups exactly ``seq_len``
-    rows via sort_array(collect_list(struct)) (order-stable, bounded
-    group size). No global single-partition window anywhere.
+    Scale shape: the global token offset per document is the
+    DISTRIBUTED prefix sum ``_prefix_sum`` of the per-document token
+    counts. The token explode then carries an exact global position, so
+    sequence assignment is independent of partitioning; the
+    per-sequence rebuild groups exactly ``seq_len`` rows via
+    sort_array(collect_list(struct)) (order-stable, bounded group size).
+    No global single-partition window anywhere.
 
     Precondition: ``id_col`` values are unique — the global stream order
     is "ascending id", so duplicate ids would make the relative order of
@@ -840,38 +791,11 @@ def pack_token_ids(
     ids = F.col(ids_col)
     if eos_id is not None:
         ids = F.concat(ids, F.array(F.lit(int(eos_id)).cast("int")))
-    docs = (
-        tokenized.select(F.col(id_col).alias("_id"), ids.alias("_ids"))
-        .repartitionByRange(F.col("_id"))
-        # no sortWithinPartitions: offsets need per-partition SUMS
-        # (contents, not order) and the window re-sorts anyway
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partition ids for the two passes
-    )
-    per_part = (
-        docs.groupBy("_pid").agg(F.sum(F.size("_ids")).alias("_ptot")).collect()
-    )
-    offsets: dict[int, int] = {}
-    running = 0
-    for row in sorted(per_part, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = running
-        running += row["_ptot"] or 0
-    spark = tokenized.sparkSession
-    off_df = spark.createDataFrame(
-        [(p, o) for p, o in offsets.items()] or [(0, 0)], "_pid int, _poff long"
-    )
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy("_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    staged = (
-        docs.join(F.broadcast(off_df), on="_pid", how="left")
-        .withColumn(
-            "_doc_off",
-            F.coalesce(F.col("_poff"), F.lit(0))
-            + F.coalesce(F.sum(F.size("_ids")).over(w), F.lit(0)),
-        )
+    staged, _ = _prefix_sum(
+        tokenized.select(F.col(id_col).alias("_id"), ids.alias("_ids")),
+        [F.col("_id")],
+        F.size("_ids"),
+        "_doc_off",
     )
     toks = staged.select(
         "_doc_off", F.posexplode("_ids").alias("_p", "_tok")
@@ -955,18 +879,6 @@ def _doc_bigrams(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _count_pairs(pairs: DataFrame) -> DataFrame:
-    """(w1, w2, n12) counts over an exploded pair table — shared by the
-    public model builder and ``bigram_surprisal``."""
-    return pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n12"))
-
-
-def bigram_model(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Corpus bigram counts ``(w1, w2, n12)`` — one explode + one hash
-    aggregate on the natural (w1, w2) key, map-side partials first."""
-    return _count_pairs(_doc_bigrams(df, text_col, id_col))
-
-
 def bigram_surprisal(
     df: DataFrame,
     text_col: str = "text",
@@ -1004,7 +916,7 @@ def bigram_surprisal(
     if materialize:
         pairs = pairs.localCheckpoint(eager=True)
         words = words.localCheckpoint(eager=True)
-    bmodel = _count_pairs(pairs)
+    bmodel = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n12"))
     uni = _count_words(words)
     totals = uni.agg(F.sum("n").alias("_total"), F.count(F.lit(1)).alias("_v"))
     scored = (
@@ -1580,44 +1492,81 @@ def curriculum_phases(
     in exact integer arithmetic) — easy-first ordering for curriculum
     training schedules.
 
-    The global rank is the same DISTRIBUTED prefix sum as
-    ``pack_token_ids``: range-partition by the sort key, per-partition
-    row_number, plus a driver-side cumulative of per-partition counts
-    (a num-partitions-row control collect). No single-partition global
-    window — ntile() would funnel the corpus through one task.
+    The global rank is the DISTRIBUTED prefix sum ``_prefix_sum`` of a
+    constant 1 over (score, id). No single-partition global window —
+    ntile() would funnel the corpus through one task.
 
     Returns the input rows plus ``phase`` (0-based BIGINT).
     """
     score = F.col(score_col) if isinstance(score_col, str) else score_col
-    staged = (
-        df.withColumn("_score", score)
-        .repartitionByRange(F.col("_score"), F.col(id_col))
-        # no sortWithinPartitions: offsets need COUNTS, the window re-sorts
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partition ids for the two passes
+    staged, total = _prefix_sum(
+        df.withColumn("_score", score),
+        [F.col("_score"), F.col(id_col)],
+        F.lit(1),
+        "_rn",
     )
-    per_part = staged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n")).collect()
-    offsets: dict[int, int] = {}
-    running = 0
-    for row in sorted(per_part, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = running
-        running += row["_n"]
-    total = running
     if total == 0:
         return df.withColumn("phase", F.lit(0).cast("long"))
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        [(p, o) for p, o in offsets.items()], "_pid int, _off long"
+    return staged.withColumn(
+        "phase", F.expr(f"(_rn * {int(n_phases)}) div {total}").cast("long")
+    ).drop("_rn", "_score")
+
+
+def _prefix_sum(
+    df: DataFrame, order_by: list[Column], weight: Column, out_col: str
+) -> tuple[DataFrame, int]:
+    """``df`` plus ``out_col``: the EXCLUSIVE running sum of ``weight``
+    over the total order ``order_by`` (BIGINT, 0 for the first row),
+    and the sum over all rows. The distributed prefix sum every global
+    rank and offset in this module shares.
+
+    Plan: range-partition by the order keys, stamp the partition id and
+    pin it with an eager ``localCheckpoint`` (the two passes below must
+    see the same placement), collect one weight total per partition to
+    the driver (control plane only: num-partitions rows), broadcast the
+    running partition offsets back, and add the within-partition running
+    sum from ONE window over the staged partition id. No single-
+    partition global window anywhere — a bare window over ``order_by``
+    moves every row through ONE task.
+
+    No sortWithinPartitions before the checkpoint: the offsets need
+    per-partition SUMS (contents, not order), and the window re-sorts
+    within each partition anyway, so a pre-sort would be one wasted
+    corpus-wide sort materialized into the checkpoint.
+
+    ``order_by`` must be a TOTAL order (include a unique tiebreak
+    column) or the sums of tied rows are placement-dependent.
+    """
+    staged = (
+        df.withColumn("_ps_w", weight)
+        .repartitionByRange(*order_by)
+        .withColumn("_ps_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
     )
-    w = Window.partitionBy("_pid").orderBy("_score", id_col)
-    return (
-        staged.join(F.broadcast(off_df), on="_pid")
-        .withColumn("_rn", F.col("_off") + F.row_number().over(w) - 1)
-        .withColumn(
-            "phase", F.expr(f"(_rn * {int(n_phases)}) div {total}").cast("long")
-        )
-        .drop("_pid", "_off", "_rn", "_score")
+    per_part = (
+        staged.groupBy("_ps_pid").agg(F.sum("_ps_w").alias("_ps_tot")).collect()
     )
+    offsets = []
+    total = 0
+    for row in sorted(per_part, key=lambda r: r["_ps_pid"]):
+        offsets.append((row["_ps_pid"], total))
+        total += row["_ps_tot"] or 0
+    off_df = df.sparkSession.createDataFrame(
+        offsets or [(0, 0)], "_ps_pid int, _ps_off long"
+    )
+    w = (
+        Window.partitionBy("_ps_pid")
+        .orderBy(*order_by)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    out = staged.join(F.broadcast(off_df), on="_ps_pid", how="left").withColumn(
+        out_col,
+        (
+            F.coalesce(F.col("_ps_off"), F.lit(0))
+            + F.coalesce(F.sum("_ps_w").over(w), F.lit(0))
+        ).cast("long"),
+    )
+    return out.drop("_ps_w", "_ps_pid", "_ps_off"), total
 
 
 def global_rank(
@@ -1625,53 +1574,18 @@ def global_rank(
     order_by: list[Column],
     rank_col: str = "rank",
 ) -> DataFrame:
-    """Distributed global ``row_number()`` over ``order_by`` — the
-    reusable form of the prefix-sum rank ``curriculum_phases`` /
-    ``pack_token_ids`` / ``shard_plan`` each inline: range-partition by
-    the sort keys, per-partition ``row_number`` over the staged
-    partition id, plus a driver-side cumulative of per-partition counts
-    (one num-partitions-row control collect). Use this wherever the
+    """Distributed global ``row_number()`` over ``order_by``: the
+    ``_prefix_sum`` of a constant 1, plus 1. Use this wherever the
     ranked frame is unbounded (a vocabulary, a corpus) — a bare
     ``row_number().over(Window.orderBy(...))`` moves every row through
     ONE task and is the classic 100-TB scale-killer.
 
     ``order_by`` must be a TOTAL order (include a unique tiebreak
     column) or ranks of tied rows are partition-placement-dependent.
-    Ranks are 1-based, BIGINT. The ``localCheckpoint`` pins partition
-    ids across the two passes; the collect is control-plane only
-    (num-partitions rows).
+    Ranks are 1-based, BIGINT.
     """
-    # range-partition only — no sortWithinPartitions: the offsets need
-    # per-partition COUNTS (contents, not order), and the rank window
-    # re-sorts within each partition anyway, so a pre-sort would be one
-    # wasted corpus-wide sort materialized into the checkpoint
-    staged = (
-        df.repartitionByRange(*order_by)
-        .withColumn("_gr_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partition ids for the two passes
-    )
-    per_part = (
-        staged.groupBy("_gr_pid").agg(F.count(F.lit(1)).alias("_n")).collect()
-    )
-    offsets: dict[int, int] = {}
-    running = 0
-    for row in sorted(per_part, key=lambda r: r["_gr_pid"]):
-        offsets[row["_gr_pid"]] = running
-        running += row["_n"]
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        [(p, o) for p, o in offsets.items()] or [(0, 0)],
-        "_gr_pid int, _gr_off long",
-    )
-    w = Window.partitionBy("_gr_pid").orderBy(*order_by)
-    return (
-        staged.join(F.broadcast(off_df), on="_gr_pid")
-        .withColumn(
-            rank_col,
-            (F.col("_gr_off") + F.row_number().over(w)).cast("long"),
-        )
-        .drop("_gr_pid", "_gr_off")
-    )
+    ranked, _ = _prefix_sum(df, order_by, F.lit(1), rank_col)
+    return ranked.withColumn(rank_col, (F.col(rank_col) + 1).cast("long"))
 
 
 def corpus_diff(
@@ -1991,53 +1905,25 @@ def shard_assignment(
     oracle replays the layout bit-for-bit. ``shard_id =
     floor(running_chars_before_doc / target_chars)``.
 
-    Scale: the running total is a distributed prefix sum — range-
-    partition on the order key, per-partition totals to the driver (one
-    row per partition), broadcast offsets back, ONE within-partition
-    window. No global single-partition sort anywhere (the same pattern
-    as ``pack_sequences``/``curriculum_phases``).
+    Scale: the running total is the distributed prefix sum
+    ``_prefix_sum`` of ``n_chars`` — no global single-partition sort
+    anywhere.
     """
     key = sample_key(F.col(id_col), 1_000_000)
-    docs = (
+    docs, _ = _prefix_sum(
         df.select(
             F.col(id_col),
             F.length(F.col(text_col)).cast("long").alias("n_chars"),
             key.alias("_k"),
-        )
-        .repartitionByRange(F.col("_k"), F.col(id_col))
-        # no sortWithinPartitions: offsets need SUMS, the window re-sorts
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partition ids for the two passes
+        ),
+        [F.col("_k"), F.col(id_col)],
+        F.col("n_chars"),
+        "_off",
     )
-    per_part = docs.groupBy("_pid").agg(F.sum("n_chars").alias("_ptot")).collect()
-    offsets: dict[int, int] = {}
-    running = 0
-    for row in sorted(per_part, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = running
-        running += row["_ptot"] or 0
-    off_df = df.sparkSession.createDataFrame(
-        [(p, o) for p, o in offsets.items()] or [(0, 0)], "_pid int, _poff long"
-    )
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy("_k", id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        docs.join(F.broadcast(off_df), on="_pid", how="left")
-        .select(
-            F.col(id_col),
-            "n_chars",
-            F.floor(
-                (
-                    F.coalesce(F.col("_poff"), F.lit(0))
-                    + F.coalesce(F.sum("n_chars").over(w), F.lit(0))
-                )
-                / F.lit(target_chars)
-            )
-            .cast("long")
-            .alias("shard_id"),
-        )
+    return docs.select(
+        F.col(id_col),
+        "n_chars",
+        F.floor(F.col("_off") / F.lit(target_chars)).cast("long").alias("shard_id"),
     )
 
 
@@ -2652,7 +2538,7 @@ def ngram_diversity(
     Plan (both modes): totals come from token COUNTS alone, all n's side
     by side in ONE scan+aggregate (a scalar per doc per n — no explode);
     distincts run one explode branch per n over the per-doc-distinct
-    gram sets from ``word_ngram_set`` (per-doc distinctness shrinks the
+    gram sets from ``word_ngrams_from_tokens`` (per-doc distinctness shrinks the
     explode for repetitive docs and leaves the corpus-level distinct
     unchanged), unioned and joined to the stacked totals. A struct-tagged
     single-explode variant was measured SLOWER at both sf0.1 and sf1

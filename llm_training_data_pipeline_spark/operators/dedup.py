@@ -42,6 +42,7 @@ from llm_training_data_pipeline_spark.functions.text import (
     char_shingles,
     strip_ws,
     whitespace_tokens,
+    word_ngrams_from_tokens,
 )
 
 
@@ -127,7 +128,7 @@ class MinHashConfig:
         return self.num_perm // self.num_bands
 
 
-def _minhash_sig_table(
+def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -135,7 +136,8 @@ def _minhash_sig_table(
     *,
     sig_col: str = "minhash_sig",
 ) -> DataFrame:
-    """D1+D2: shingle and sign each document.
+    """D1+D2: shingle and sign each document → the (id, signature)
+    table, the reusable artifact of D2.
 
     Shape: explode shingles → xxhash64 each ONCE → one hash-aggregate with
     ``num_perm`` map-side-combinable ``min`` expressions → assemble the
@@ -204,16 +206,23 @@ def _minhash_sig_table(
     return exploded.groupBy(id_col).agg(F.expr(sig_expr).alias(sig_col))
 
 
-def minhash_signatures(
+def _signature_source(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    cfg: MinHashConfig = MinHashConfig(),
-    *,
-    sig_col: str = "minhash_sig",
+    text_col: str,
+    id_col: str,
+    cfg: MinHashConfig,
+    signatures: DataFrame | None,
 ) -> DataFrame:
-    """(id, signature) table — the reusable artifact of D2."""
-    return _minhash_sig_table(df, text_col, id_col, cfg, sig_col=sig_col)
+    """``signatures`` when the caller passes a precomputed, materialized
+    (id, minhash_sig) table, else the signature table of ``df``
+    MATERIALIZED (eager localCheckpoint). Every consumer reads the
+    signatures on several branches (band self-join, join-backs), and a
+    lazy frame re-runs the whole shingle+aggregate pipeline per branch
+    (measured ~9x); lazy persist still lets concurrent branches of one
+    job race and recompute it."""
+    if signatures is not None:
+        return signatures
+    return minhash_signatures(df, text_col, id_col, cfg).localCheckpoint(eager=True)
 
 
 def minhash_candidate_pairs(
@@ -229,10 +238,8 @@ def minhash_candidate_pairs(
     signature-estimated Jaccard.
 
     Plan shape (the scale-critical part):
-    1. signature table MATERIALIZED (eager localCheckpoint) — the band
-       self-join references it twice and downstream joins twice more; lazy
-       persist still lets concurrent branches of one job race and recompute
-       the whole shingle+aggregate pipeline per branch (measured ~9x).
+    1. signature table MATERIALIZED (``_signature_source``) — the band
+       self-join references it twice and downstream joins twice more.
        For repeated runs on a cluster, prefer ``persist_minhash_signatures``
        + ``minhash_candidate_pairs_from_signatures`` — a bucketed table
        survives across jobs and joins by id without an Exchange;
@@ -245,11 +252,7 @@ def minhash_candidate_pairs(
     table (``cached_minhash_signatures`` / ``persist_minhash_signatures``)
     — skips the signature pass entirely; output is bit-identical.
     """
-    sig = (
-        signatures
-        if signatures is not None
-        else minhash_signatures(df, text_col, id_col, cfg).localCheckpoint(eager=True)
-    )
+    sig = _signature_source(df, text_col, id_col, cfg, signatures)
     cand = (
         minhash_band_candidates(sig, id_col, cfg, max_bucket_size)
         if max_bucket_size is not None
@@ -288,7 +291,7 @@ def cached_minhash_signatures(
     key = (spark.sparkContext.applicationId, cache_key, cfg)
     sig = _SIG_CACHE.get(key)
     if sig is None:
-        sig = minhash_signatures(df, text_col, id_col, cfg).localCheckpoint(eager=True)
+        sig = _signature_source(df, text_col, id_col, cfg, None)
         _SIG_CACHE[key] = sig
     return sig
 
@@ -311,10 +314,10 @@ def persist_minhash_signatures(
     same-bucketed table plans WITHOUT an Exchange on this side
     (tests/test_scale.py asserts the no-shuffle plan).
     """
-    from llm_training_data_pipeline_spark.operators.scale import write_bucketed
+    from llm_training_data_pipeline_spark.sources.sinks import write_bucketed
 
     sig = minhash_signatures(df, text_col, id_col, cfg)
-    write_bucketed(sig, table, id_col, num_buckets=num_buckets)
+    write_bucketed(sig, table, id_col, n_buckets=num_buckets, sort_col=id_col)
     return df.sparkSession.table(table)
 
 
@@ -574,51 +577,29 @@ def minhash_dedup(
     now always reaches the root and is removed. The capped PAIR path
     stays what it is good for: pair-emitting consumers (recall audits,
     similarity graphs) where bounded output volume is the point.
-    Uncapped behavior is unchanged (single pair path, bit-identical)."""
-    if max_bucket_size is None:
-        # the loser set reduces pairs to distinct(id_b), so the pair-level
-        # distinct inside the default candidate path is a redundant full
-        # shuffle of the candidate set here (r14; ~1% duplicate pairs on
-        # the bench corpus, collapsed one aggregation later either way —
-        # values identical, one Exchange + pair-sized HashAggregate less)
-        sig = (
-            signatures
-            if signatures is not None
-            else minhash_signatures(df, text_col, id_col, cfg).localCheckpoint(
-                eager=True
-            )
-        )
-        pairs = minhash_candidate_pairs_from_signatures(
-            sig, id_col, cfg,
-            candidates=minhash_band_candidates(
-                sig, id_col, cfg, distinct_pairs=False
-            ),
-        )
-        losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        return df.join(losers, on=id_col, how="left_anti")
-    sig = (
-        signatures
-        if signatures is not None
-        else minhash_signatures(df, text_col, id_col, cfg).localCheckpoint(eager=True)
-    )
-    capped_pairs = minhash_candidate_pairs_from_signatures(
+    Uncapped behavior is unchanged (single pair path, bit-identical).
+
+    Either way the band candidates skip the pair-level distinct
+    (``distinct_pairs=False``): the loser set reduces pairs to
+    distinct(id_b), so it would be a redundant full shuffle of the
+    candidate set (~1% duplicate pairs on the bench corpus)."""
+    sig = _signature_source(df, text_col, id_col, cfg, signatures)
+    pairs = minhash_candidate_pairs_from_signatures(
         sig, id_col, cfg,
         candidates=minhash_band_candidates(
             sig, id_col, cfg, max_bucket_size, distinct_pairs=False
         ),
     )
-    star_pairs = minhash_candidate_pairs_from_signatures(
-        sig, id_col, cfg,
-        candidates=minhash_bucket_stars(
-            df, text_col, id_col, cfg, signatures=sig
-        ),
-    )
-    losers = (
-        capped_pairs.select(F.col("id_b").alias(id_col))
-        .unionByName(star_pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    return df.join(losers, on=id_col, how="left_anti")
+    losers = pairs.select(F.col("id_b").alias(id_col))
+    if max_bucket_size is not None:
+        star_pairs = minhash_candidate_pairs_from_signatures(
+            sig, id_col, cfg,
+            candidates=minhash_bucket_stars(
+                df, text_col, id_col, cfg, signatures=sig
+            ),
+        )
+        losers = losers.unionByName(star_pairs.select(F.col("id_b").alias(id_col)))
+    return df.join(losers.distinct(), on=id_col, how="left_anti")
 
 
 def minhash_dedup_stats(
@@ -846,24 +827,6 @@ def simhash_dedup(
 # --- blocked exact n-gram Jaccard (SQL-expressible correctness anchor) ----
 
 
-def word_ngrams(col: Column, n: int = 2) -> Column:
-    """Distinct word n-grams (space-joined) of lowercased text.
-
-    NOTE: pass an *attribute* (staged column) as ``col`` in hot paths — the
-    tokenization is referenced once per gram, so a raw expression would be
-    re-evaluated per gram (see ``_minhash_sig_table`` for the pattern).
-    """
-    toks = whitespace_tokens(F.lower(col))
-    ln = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(ln - F.lit(n - 1), F.lit(0))),
-        lambda i: F.array_join(F.slice(toks, i, n), " "),
-    )
-    return F.when(ln < n, F.array(F.array_join(toks, " "))).otherwise(
-        F.array_distinct(grams)
-    )
-
-
 def _word_gram_table(
     df: DataFrame,
     text_col: str,
@@ -874,30 +837,16 @@ def _word_gram_table(
     """(id[, _blk], _grams) — distinct word n-grams per document.
 
     Tokens are staged as a column first: the gram builder references the
-    token array once per gram, so the split must not be re-evaluated
-    there (the usual expression-duplication pitfall)."""
+    token array once per gram (see ``word_ngrams_from_tokens``)."""
     staged = df.select(
         F.col(id_col),
         *([F.col(block_col).alias("_blk")] if block_col else []),
         whitespace_tokens(F.lower(F.col(text_col))).alias("_toks"),
     )
-    toks = F.col("_toks")
-    ln = F.size(toks)
-    # per-gram construction from O(1) element_at lookups — array_join
-    # over a slice() allocates a sub-array per gram, which is 10x+
-    # slower when the expression lands in an interpreted Generate
-    grams_expr = F.transform(
-        F.sequence(F.lit(1), F.greatest(ln - F.lit(n - 1), F.lit(0))),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + F.lit(j)).cast("int")) for j in range(n)]
-        ),
-    )
     return staged.select(
         F.col(id_col),
         *([F.col("_blk")] if block_col else []),
-        F.when(ln < n, F.array(F.array_join(toks, " ")))
-        .otherwise(F.array_distinct(grams_expr))
-        .alias("_grams"),
+        word_ngrams_from_tokens(F.col("_toks"), n).alias("_grams"),
     )
 
 
@@ -982,11 +931,7 @@ def ngram_jaccard_pairs_lsh(
     similarity); with ``cfg.hash_family="md5"`` the candidate set and
     the verification are both DuckDB-replayable bit-for-bit.
     """
-    sig = (
-        signatures
-        if signatures is not None
-        else minhash_signatures(df, text_col, id_col, cfg).localCheckpoint(eager=True)
-    )
+    sig = _signature_source(df, text_col, id_col, cfg, signatures)
     cand = minhash_band_candidates(sig, id_col, cfg)
     g = _word_gram_table(df, text_col, id_col, n)
     ga = g.select(F.col(id_col).alias("id_a"), F.col("_grams").alias("_ga"))
@@ -1542,50 +1487,17 @@ def minhash_recall(
     shingle equi-join (never an all-pairs cross join); at 100 TB run
     the audit on a uniform sample — the recall estimate stays unbiased
     because both sides see the same sample.
+
+    This is the uncapped row of ``minhash_cap_recall``.
     """
-    # truth via _shingle_jaccard_truth: the exploded shingle table is
-    # materialized there because it feeds three branches (sizes + both
-    # join sides) in ONE job — unchecked, the explode and corpus scan
-    # run three times (the measured shared-subtree pitfall
-    # minhash_candidate_pairs documents)
-    truth = _shingle_jaccard_truth(df, text_col, id_col, cfg)
-    sig = (
-        signatures
-        if signatures is not None
-        else minhash_signatures(df, text_col, id_col, cfg).localCheckpoint(eager=True)
-    )
-    # the band self-join feeds both the raw-candidate check and the
-    # verified-emission check — run it once
-    band = minhash_band_candidates(sig, id_col, cfg).localCheckpoint(eager=True)
-    emitted = minhash_candidate_pairs_from_signatures(
-        sig, id_col, cfg, candidates=band
-    ).select("id_a", "id_b")
-    tot = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true_pairs"))
-    band_hits = truth.join(band, on=["id_a", "id_b"], how="left_semi").agg(
-        F.count(F.lit(1)).cast("long").alias("n_band_caught")
-    )
-    emit_hits = truth.join(emitted, on=["id_a", "id_b"], how="left_semi").agg(
-        F.count(F.lit(1)).cast("long").alias("n_emitted_caught")
-    )
-
-    def _recall(num: str) -> Column:
-        return (
-            F.when(F.col("n_true_pairs") == 0, F.lit(None).cast("double"))
-            .otherwise(
-                F.round(F.col(num) / F.col("n_true_pairs").cast("double"), 4)
-            )
-        )
-
-    return (
-        tot.crossJoin(band_hits)
-        .crossJoin(emit_hits)
-        .select(
-            "n_true_pairs",
-            "n_band_caught",
-            "n_emitted_caught",
-            _recall("n_band_caught").alias("band_recall"),
-            _recall("n_emitted_caught").alias("emit_recall"),
-        )
+    return minhash_cap_recall(
+        df, text_col, id_col, cfg, caps=(None,), signatures=signatures
+    ).select(
+        "n_true_pairs",
+        "n_band_caught",
+        "n_emitted_caught",
+        "band_recall",
+        "emit_recall",
     )
 
 
@@ -1654,14 +1566,12 @@ def minhash_cap_recall(
     table. Truth and signatures are computed ONCE; each cap re-runs
     only the banded self-join (exactly what the knob changes).
     """
+    # truth via _shingle_jaccard_truth: the exploded shingle table is
+    # materialized there because it feeds three branches (sizes + both
+    # join sides) in ONE job — unchecked, the explode and corpus scan
+    # run three times
     truth = _shingle_jaccard_truth(df, text_col, id_col, cfg)
-    sig = (
-        signatures
-        if signatures is not None
-        else minhash_signatures(df, text_col, id_col, cfg).localCheckpoint(
-            eager=True
-        )
-    )
+    sig = _signature_source(df, text_col, id_col, cfg, signatures)
     out: DataFrame | None = None
     for cap in caps:
         band = minhash_band_candidates(sig, id_col, cfg, cap).localCheckpoint(

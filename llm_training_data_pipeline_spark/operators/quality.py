@@ -205,21 +205,6 @@ def with_quality(
     return out
 
 
-def filter_quality(
-    df: DataFrame,
-    text_col: str = "text",
-    cfg: QualityConfig = QualityConfig(),
-    *,
-    lang_col: str | None = None,
-) -> DataFrame:
-    """Q11 keep-side: rows that pass the battery, score columns dropped."""
-    return (
-        with_quality(df, text_col, cfg, lang_col=lang_col, include_scores=False)
-        .filter(F.col("passed"))
-        .drop("reason", "passed")
-    )
-
-
 def quality_stats(
     df: DataFrame,
     text_col: str = "text",

@@ -7,11 +7,11 @@ These are the knobs a 100 TB deployment turns when AQE alone isn't enough:
   hot keys: the left side gets a per-row salt, the right side is replicated
   once per salt value, and the join key becomes (key, salt). Hot keys fan
   out over ``num_salts`` reducers instead of one.
-- ``write_bucketed`` / ``bucketed_join_ready`` — persist both join sides
-  bucketed+sorted by the join key; Spark then sort-merge-joins bucket files
-  pairwise WITHOUT a shuffle (no Exchange in the plan). The right choice
-  for repeated joins against the same huge table (e.g. doc-id keyed
-  signature tables).
+- ``bucketed_join_ready`` — join two tables written bucketed+sorted by
+  the join key (``sinks.write_bucketed``); Spark then sort-merge-joins
+  bucket files pairwise WITHOUT a shuffle (no Exchange in the plan). The
+  right choice for repeated joins against the same huge table (e.g.
+  doc-id keyed signature tables).
 """
 
 from __future__ import annotations
@@ -66,20 +66,6 @@ def salted_join(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1)).cast("array<int>"))
     )
     return lsalted.join(rsalted, on=[on, "_salt"], how=how).drop("_salt")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 8,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table."""
-    w = df.write.mode(mode).bucketBy(num_buckets, bucket_col)
-    w = w.sortBy(sort_col or bucket_col)
-    w.saveAsTable(table)
 
 
 def bucketed_join_ready(spark: SparkSession, table_a: str, table_b: str, on: str) -> DataFrame:

@@ -279,6 +279,54 @@ def ann_lsh_topk(
     )
 
 
+def _ivf_probe(
+    corpus: DataFrame,
+    queries: DataFrame,
+    n_clusters: int | str,
+    n_probe: int,
+    vec_col: str,
+    id_col: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The seeded IVF coarse step both IVF operators share →
+    ``(cents, assigned, probes)``.
+
+    ``cents``: the seeded first-k-by-id centroids (``semdedup``),
+    MATERIALIZED — the k-row table is consumed by the corpus assignment,
+    the query probe ranking and any residualization, and a lazy frame
+    re-runs its seed top-k corpus scan under each consumer (the r14 plan
+    audit measured 30 corpus scans in the IVF+PQ residual plan).
+    ``assigned``: every corpus vector with its ``cluster`` (the broadcast
+    argmax of ``semdedup.assign_clusters``). ``probes``: per query
+    (``q_id``, ``_qv``, ``_qn``, ``cluster``) for its ``n_probe`` nearest
+    centroids by cosine (broadcast, no shuffle), ties to the smaller
+    cluster id.
+    """
+    from llm_training_data_pipeline_spark.operators.semdedup import (
+        assign_clusters,
+        seed_centroids,
+    )
+
+    cents = seed_centroids(corpus, n_clusters, vec_col, id_col).localCheckpoint(
+        eager=True
+    )
+    assigned = assign_clusters(corpus, cents, vec_col=vec_col, id_col=id_col)
+    qs = _with_norm(queries, vec_col, id_col, "q_id", "_qv", "_qn")
+    probe_cos = F.when(
+        (F.col("_qn") == 0) | (F.col("_cn") == 0), F.lit(0.0)
+    ).otherwise(
+        dot_product(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
+    )
+    wp = Window.partitionBy("q_id").orderBy(F.col("_pc").desc(), F.col("cluster"))
+    probes = (
+        qs.crossJoin(F.broadcast(cents))
+        .select("q_id", "_qv", "_qn", "cluster", probe_cos.alias("_pc"))
+        .withColumn("_prn", F.row_number().over(wp))
+        .filter(F.col("_prn") <= n_probe)
+        .select("q_id", "_qv", "_qn", "cluster")
+    )
+    return cents, assigned, probes
+
+
 def ivf_topk_seeded(
     corpus: DataFrame,
     queries: DataFrame,
@@ -301,31 +349,8 @@ def ivf_topk_seeded(
     ``kmeans_refine``'s output in as better centroids when recall
     matters; seeding alone is the replay-exact baseline.
     """
-    from llm_training_data_pipeline_spark.operators.semdedup import (
-        assign_clusters,
-        seed_centroids,
-    )
-
-    # materialized: the k-row centroid table is consumed by BOTH the
-    # corpus assignment and the query probe ranking — lazy, each
-    # broadcast re-ran the seed top-k corpus scan (r14)
-    cents = seed_centroids(corpus, n_clusters, vec_col, id_col).localCheckpoint(
-        eager=True
-    )
-    assigned = assign_clusters(corpus, cents, vec_col=vec_col, id_col=id_col)
-    qs = _with_norm(queries, vec_col, id_col, "q_id", "_qv", "_qn")
-    probe_cos = F.when(
-        (F.col("_qn") == 0) | (F.col("_cn") == 0), F.lit(0.0)
-    ).otherwise(
-        dot_product(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    )
-    wp = Window.partitionBy("q_id").orderBy(F.col("_pc").desc(), F.col("cluster"))
-    probes = (
-        qs.crossJoin(F.broadcast(cents))
-        .select("q_id", "_qv", "_qn", "cluster", probe_cos.alias("_pc"))
-        .withColumn("_prn", F.row_number().over(wp))
-        .filter(F.col("_prn") <= n_probe)
-        .select("q_id", "_qv", "_qn", "cluster")
+    _, assigned, probes = _ivf_probe(
+        corpus, queries, n_clusters, n_probe, vec_col, id_col
     )
     pair_cos = F.when(
         (F.col("_qn") == 0) | (F.col("_n") == 0), F.lit(0.0)
@@ -1297,26 +1322,14 @@ def ivfpq_topk(
     the residual path has its own oracle. Same integer-unit ADC
     contract either way.
     """
-    from llm_training_data_pipeline_spark.operators.semdedup import (
-        assign_clusters,
-        seed_centroids,
-    )
-
     if codes is not None and by_residual:
         raise ValueError(
             "ivfpq_topk: `codes` reuse is raw-space only — residual codes "
             "are cluster-conditioned and must be built inside this operator"
         )
-    # the k-row centroid table is consumed up to four times (assignment,
-    # residualization, query probing, probe residualization) and a lazy
-    # frame re-runs its seed top-k corpus scan under each consumer — the
-    # r14 plan audit measured 30 corpus scans in the residual plan, most
-    # of them centroid/assignment re-derivations. One tiny eager
-    # checkpoint collapses them; values are bit-identical.
-    cents = seed_centroids(corpus, n_clusters, vec_col, id_col).localCheckpoint(
-        eager=True
+    cents, assigned, probes = _ivf_probe(
+        corpus, queries, n_clusters, n_probe, vec_col, id_col
     )
-    assigned = assign_clusters(corpus, cents, vec_col=vec_col, id_col=id_col)
     if by_residual:
         # residual frame: v - centroid(cluster(v)); codebook seeds are
         # the first-ks RESIDUALS so the whole chain stays replay-exact.
@@ -1370,20 +1383,6 @@ def ivfpq_topk(
         )
         index = enc.join(assigned.select(id_col, "cluster"), on=id_col)
 
-    qs = _with_norm(queries, vec_col, id_col, "q_id", "_qv", "_qn")
-    probe_cos = F.when(
-        (F.col("_qn") == 0) | (F.col("_cn") == 0), F.lit(0.0)
-    ).otherwise(
-        dot_product(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    )
-    wp = Window.partitionBy("q_id").orderBy(F.col("_pc").desc(), F.col("cluster"))
-    probes = (
-        qs.crossJoin(F.broadcast(cents))
-        .select("q_id", "_qv", "cluster", probe_cos.alias("_pc"))
-        .withColumn("_prn", F.row_number().over(wp))
-        .filter(F.col("_prn") <= n_probe)
-        .select("q_id", "_qv", "cluster")
-    )
     if by_residual:
         # the query is ALSO residualized against each probed centroid,
         # so its distance table is conditioned the same way the codes are

@@ -572,20 +572,9 @@ def doc_fingerprint(text: Column) -> Column:
     return F.md5(F.encode(norm, "UTF-8"))
 
 
-def shingle_sketch(text: Column, n: int = 5, k: int = 8) -> Column:
-    """Bottom-k sketch of the char-shingle set: the k lexicographically
-    smallest md5(shingle) digests (ARRAY<STRING>).
-
-    A winnowing-style robust fingerprint: two near-duplicate documents share
-    most of their bottom-k digests. Pure array expressions; SQL-expressible.
-    """
-    digests = F.transform(char_shingles(text, n), lambda s: F.md5(F.encode(s, "UTF-8")))
-    return F.slice(F.array_sort(digests), 1, k)
-
-
 def with_fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Stage the normalized text before shingling — char_shingles over the
-    raw column would re-run the normalize regex once per gram."""
+    raw column would re-run the normalize regex per reference."""
     t = F.col(text_col)
     staged = df.withColumn(
         "_fp_norm", F.regexp_replace(F.lower(t), r"\s+", " ")

@@ -49,6 +49,19 @@ def _ckpt_spread(df: DataFrame) -> DataFrame:
     return df.repartition(dp).localCheckpoint(eager=True)
 
 
+def _minhash_cfg(
+    sec: dict[str, Any], default: dedup.MinHashConfig = dedup.MinHashConfig()
+) -> dedup.MinHashConfig:
+    """``MinHashConfig`` from a yaml section's keys (num_permutations,
+    threshold, shingle_size, num_bands), ``default`` filling the gaps."""
+    return dedup.MinHashConfig(
+        num_perm=int(sec.get("num_permutations", default.num_perm)),
+        threshold=float(sec.get("threshold", default.threshold)),
+        shingle_size=int(sec.get("shingle_size", default.shingle_size)),
+        num_bands=int(sec.get("num_bands", default.num_bands)),
+    )
+
+
 def build_pipeline(
     docs: DataFrame, cfg: PipelineConfig
 ) -> tuple[DataFrame, dict[str, Observation]]:
@@ -60,8 +73,12 @@ def build_pipeline(
     """
     obs: dict[str, Observation] = {}
 
-    obs["ingest"] = Observation("ingest")
-    df = docs.observe(obs["ingest"], F.count(F.lit(1)).alias("rows"))
+    def observe(df: DataFrame, name: str, *metrics) -> DataFrame:
+        """Stage ``name``'s observer: its row count, then ``metrics``."""
+        obs[name] = Observation(name)
+        return df.observe(obs[name], F.count(F.lit(1)).alias("rows"), *metrics)
+
+    df = observe(docs, "ingest")
 
     c = cfg.section("cleaning")
     ccfg = cleaning.CleanerConfig(
@@ -75,12 +92,7 @@ def build_pipeline(
     )
     df = cleaning.clean_documents(df, "text", ccfg)
     df = df.drop("text").withColumnRenamed("cleaned_text", "text")
-    obs["clean"] = Observation("clean")
-    df = df.observe(
-        obs["clean"],
-        F.count(F.lit(1)).alias("rows"),
-        F.sum("chars_removed").alias("chars_removed"),
-    )
+    df = observe(df, "clean", F.sum("chars_removed").alias("chars_removed"))
 
     d = cfg.section("deduplication")
     if d.get("enabled", True):
@@ -96,12 +108,7 @@ def build_pipeline(
         elif algo == "simhash":
             df = dedup.simhash_dedup(df)
         elif algo in ("minhash_lsh", "minhash_keep_best"):
-            mh = dedup.MinHashConfig(
-                num_perm=d.get("num_permutations", 128),
-                threshold=d.get("threshold", 0.8),
-                shingle_size=d.get("shingle_size", 5),
-                num_bands=d.get("num_bands", 16),
-            )
+            mh = _minhash_cfg(d)
             if algo == "minhash_keep_best":
                 # quality-aware winner: keep the best-scoring member of
                 # each near-dup cluster instead of the smallest id
@@ -142,12 +149,7 @@ def build_pipeline(
                 F.expr("1000000 div _n_copies").cast("long"),
             ).drop("_n_copies")
         elif algo == "soft_minhash":
-            mh = dedup.MinHashConfig(
-                num_perm=d.get("num_permutations", 128),
-                threshold=d.get("threshold", 0.8),
-                shingle_size=d.get("shingle_size", 5),
-                num_bands=d.get("num_bands", 16),
-            )
+            mh = _minhash_cfg(d)
             clusters = dedup.dedup_clusters(
                 dedup.minhash_bucket_stars(df, cfg=mh)
             )
@@ -161,15 +163,14 @@ def build_pipeline(
                 "choose from minhash_lsh, minhash_keep_best, exact_hash, "
                 "prefix_hash, simhash, soft_exact, soft_minhash"
             )
-        obs["dedup"] = Observation("dedup")
-        dedup_metrics = [F.count(F.lit(1)).alias("rows")]
+        dedup_metrics = []
         if algo in ("soft_exact", "soft_minhash"):
             # effective corpus mass the mixture planner should budget
             # against (raw rows are unchanged by design in soft modes)
             dedup_metrics.append(
                 F.sum("soft_weight_ppm").alias("effective_docs_ppm")
             )
-        df = df.observe(obs["dedup"], *dedup_metrics)
+        df = observe(df, "dedup", *dedup_metrics)
 
         ss = d.get("soft_sample", {})
         if ss.get("enabled", False):
@@ -189,10 +190,7 @@ def build_pipeline(
                 (F.col("soft_weight_ppm") / F.lit(1_000_000.0)),
                 base_rate=float(ss.get("base_rate", 1.0)),
             )
-            obs["soft_sample"] = Observation("soft_sample")
-            df = df.observe(
-                obs["soft_sample"], F.count(F.lit(1)).alias("rows")
-            )
+            df = observe(df, "soft_sample")
 
     sr = cfg.section("deduplication").get("span_removal", {})
     if sr.get("enabled", False):
@@ -226,8 +224,7 @@ def build_pipeline(
                 .withColumn("text", F.coalesce("clean_text", "text"))
                 .drop("clean_text")
             )
-        obs["span_dedup"] = Observation("span_dedup")
-        df = df.observe(obs["span_dedup"], F.count(F.lit(1)).alias("rows"))
+        df = observe(df, "span_dedup")
 
     pdd = cfg.section("deduplication").get("paragraph_dedup", {})
     if pdd.get("enabled", False):
@@ -247,8 +244,7 @@ def build_pipeline(
         # measured 86s -> ~7s on the c4 preset at 120 docs).
         df = _ckpt_spread(df)
         df = corpus.remove_dup_paragraphs(df, "text").drop("n_paras_removed")
-        obs["paragraph_dedup"] = Observation("paragraph_dedup")
-        df = df.observe(obs["paragraph_dedup"], F.count(F.lit(1)).alias("rows"))
+        df = observe(df, "paragraph_dedup")
 
     sc = cfg.section("sampling").get("source_cap", {})
     if sc.get("enabled", False):
@@ -264,8 +260,7 @@ def build_pipeline(
             stratum_col=sc.get("stratum_col", "source"),
             cap=int(sc.get("max_per_stratum", 10_000)),
         )
-        obs["source_cap"] = Observation("source_cap")
-        df = df.observe(obs["source_cap"], F.count(F.lit(1)).alias("rows"))
+        df = observe(df, "source_cap")
 
     qsec = cfg.section("quality")
     if qsec.get("enabled", True):
@@ -317,8 +312,7 @@ def build_pipeline(
             df = df.drop("passed", "reason")
         else:
             df = df.filter(F.col("passed")).drop("passed", "reason")
-        obs["quality"] = Observation("quality")
-        df = df.observe(obs["quality"], F.count(F.lit(1)).alias("rows"))
+        df = observe(df, "quality")
 
     ef = qsec.get("entropy_filter", {}) if qsec.get("enabled", True) else {}
     if ef.get("enabled", False):
@@ -331,8 +325,7 @@ def build_pipeline(
         df = textstats.with_char_entropy(df, "text").filter(
             F.col("char_entropy") >= float(ef.get("min_entropy", 1.5))
         ).drop("alpha_chars", "char_entropy")
-        obs["entropy"] = Observation("entropy")
-        df = df.observe(obs["entropy"], F.count(F.lit(1)).alias("rows"))
+        df = observe(df, "entropy")
 
     sm = qsec.get("script_mix_filter", {}) if qsec.get("enabled", True) else {}
     if sm.get("enabled", False):
@@ -353,8 +346,7 @@ def build_pipeline(
             )
             .drop("n_scripts", "dominant_script", "dominant_permille", "script_mixed")
         )
-        obs["script_mix"] = Observation("script_mix")
-        df = df.observe(obs["script_mix"], F.count(F.lit(1)).alias("rows"))
+        df = observe(df, "script_mix")
 
     nr = qsec.get("ngram_repetition_filter", {}) if qsec.get("enabled", True) else {}
     if nr.get("enabled", False):
@@ -385,8 +377,7 @@ def build_pipeline(
             .filter(F.col("ngram_repetition_pass"))
             .drop("ngram_repetition_pass", *helper)
         )
-        obs["ngram_repetition"] = Observation("ngram_repetition")
-        df = df.observe(obs["ngram_repetition"], F.count(F.lit(1)).alias("rows"))
+        df = observe(df, "ngram_repetition")
 
     cm = qsec.get("chat_marker_filter", {}) if qsec.get("enabled", True) else {}
     if cm.get("enabled", False):
@@ -404,8 +395,7 @@ def build_pipeline(
             c = F.contains(F.col("text"), F.lit(m))
             hit = c if hit is None else (hit | c)
         df = df.filter(~hit)
-        obs["chat_marker"] = Observation("chat_marker")
-        df = df.observe(obs["chat_marker"], F.count(F.lit(1)).alias("rows"))
+        df = observe(df, "chat_marker")
 
     pf = qsec.get("perplexity_filter", {}) if qsec.get("enabled", True) else {}
     if pf.get("enabled", False):
@@ -444,8 +434,7 @@ def build_pipeline(
             )
             .drop("avg_surprisal")
         )
-        obs["perplexity"] = Observation("perplexity")
-        df = df.observe(obs["perplexity"], F.count(F.lit(1)).alias("rows"))
+        df = observe(df, "perplexity")
 
     dc = cfg.section("decontamination")
     if dc.get("enabled", False) and dc.get("benchmark_path"):
@@ -459,8 +448,7 @@ def build_pipeline(
             min_shared=dc.get("min_shared", 1),
         ).select(F.col("corpus_id").alias("doc_id")).distinct()
         df = df.join(hits, on="doc_id", how="left_anti")
-        obs["decontaminate"] = Observation("decontaminate")
-        df = df.observe(obs["decontaminate"], F.count(F.lit(1)).alias("rows"))
+        df = observe(df, "decontaminate")
 
     psec = cfg.section("pii")
     if psec.get("enabled", False):
@@ -473,8 +461,7 @@ def build_pipeline(
             )
         else:
             df = pii.redact_pii(df, "text")
-        obs["pii"] = Observation("pii")
-        df = df.observe(obs["pii"], F.count(F.lit(1)).alias("rows"))
+        df = observe(df, "pii")
 
     ssec = cfg.section("sampling")
     if ssec.get("enabled", False) and ssec.get("rates"):
@@ -486,8 +473,7 @@ def build_pipeline(
             {str(k): float(v) for k, v in ssec["rates"].items()},
             default_rate=float(ssec.get("default_rate", 1.0)),
         )
-        obs["sample"] = Observation("sample")
-        df = df.observe(obs["sample"], F.count(F.lit(1)).alias("rows"))
+        df = observe(df, "sample")
 
     dsec = cfg.section("dsir")
     if dsec.get("enabled", False):
@@ -531,8 +517,7 @@ def build_pipeline(
         # post-join observe reported. Firing it on the keep checkpoint
         # keeps it to exactly one execution even though downstream
         # stages (holdout) consume the joined frame on two branches.
-        obs["dsir"] = Observation("dsir")
-        keep = keep.observe(obs["dsir"], F.count(F.lit(1)).alias("rows"))
+        keep = observe(keep, "dsir")
         keep = keep.localCheckpoint(eager=True)
         df = df.join(keep, on="doc_id", how="left_semi")
 
@@ -557,10 +542,9 @@ def build_pipeline(
         df = corpus.eval_holdout(
             df, per_source=int(hsec.get("per_source", 50))
         )
-        obs["holdout"] = Observation("holdout")
-        df = df.observe(
-            obs["holdout"],
-            F.count(F.lit(1)).alias("rows"),
+        df = observe(
+            df,
+            "holdout",
             F.sum(F.when(F.col("split") == "eval", 1).otherwise(0)).alias(
                 "eval_rows"
             ),
@@ -602,17 +586,12 @@ def run_pipeline(
     hsec0 = cfg.section("holdout")
     max_ppm = hsec0.get("max_leakage_ppm")
     if hsec0.get("enabled", False) and max_ppm is not None:
-        from llm_training_data_pipeline_spark.operators import dedup as _dd
-
-        lm = hsec0.get("leakage_minhash", {})
-        mh = _dd.MinHashConfig(
-            num_perm=int(lm.get("num_permutations", 16)),
-            threshold=float(lm.get("threshold", 0.5)),
-            shingle_size=int(lm.get("shingle_size", 5)),
-            num_bands=int(lm.get("num_bands", 4)),
+        mh = _minhash_cfg(
+            hsec0.get("leakage_minhash", {}),
+            dedup.MinHashConfig(num_perm=16, threshold=0.5, num_bands=4),
         )
-        pairs = _dd.minhash_candidate_pairs(df, cfg=mh)
-        row = _dd.eval_leakage_ppm(
+        pairs = dedup.minhash_candidate_pairs(df, cfg=mh)
+        row = dedup.eval_leakage_ppm(
             pairs, df.select("doc_id", "split")
         ).collect()[0]
         leakage_ppm = int(row["leakage_ppm"])

@@ -1098,28 +1098,30 @@ def q_ann_recall_unified(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     ]
-    # materialize each family's tiny candidate set (<= k x Q rows)
-    # eagerly AND concurrently: the unioned 8-family plan otherwise
-    # re-derives every family's full chain inside ONE job (86 Exchanges
-    # at sf0.01, the most expensive sweep row — VERDICT r10 #2/#3); as
-    # concurrent small jobs the shared checkpointed GT/encode are
-    # reused, the final union reads 8 one-row scans, and the wall clock
-    # is the slowest family instead of the sum
+    # materialize each family's one-row recall result eagerly AND
+    # concurrently: the unioned 8-family plan otherwise re-derives every
+    # family's full chain inside ONE job (86 Exchanges at sf0.01, the
+    # most expensive sweep row — VERDICT r10 #2/#3); as concurrent small
+    # jobs the shared checkpointed GT/encode are reused, the final union
+    # reads 8 one-row scans with no shuffle, and the wall clock is the
+    # slowest family instead of the sum. Checkpointing the recall row,
+    # not just the candidate set, keeps the eight ann_recall joins out of
+    # the final plan, whose join shapes AQE would otherwise pick by
+    # which leg's stages finish first.
     from concurrent.futures import ThreadPoolExecutor
 
     def build(leg) -> DataFrame:
         method, budget, approx = leg
-        cand = (
-            approx.select("q_id", "vec_id")
-            if method == "brute"
-            else approx.select("q_id", "vec_id").localCheckpoint(eager=True)
-        )
-        return ann_recall(exact, cand).select(
-            F.lit(method).alias("method"),
-            F.lit(budget).alias("budget"),
-            "hits",
-            "expected",
-            "recall",
+        return (
+            ann_recall(exact, approx.select("q_id", "vec_id"))
+            .select(
+                F.lit(method).alias("method"),
+                F.lit(budget).alias("budget"),
+                "hits",
+                "expected",
+                "recall",
+            )
+            .localCheckpoint(eager=True)
         )
 
     with ThreadPoolExecutor(max_workers=8) as ex:

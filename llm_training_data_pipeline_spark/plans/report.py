@@ -1,4 +1,4 @@
-"""Metrics report printer (SURVEY.md §2.6 O5-O6).
+"""Metrics report renderer (SURVEY.md §2.6 O5).
 
 Reference: rich-formatted stage table (/root/reference/src/utils/metrics.py:
 172-222). Plain-text rendering here (no rich dependency): stages with
@@ -7,7 +7,6 @@ row counts and filter rates; then totals.
 
 from __future__ import annotations
 
-import json
 from typing import Any
 
 STAGE_ORDER = [
@@ -48,12 +47,3 @@ def render_report(summary: dict[str, Any]) -> str:
         lines.append(f"output: {summary['output_path']}")
     return "\n".join(lines)
 
-
-def print_report(summary: dict[str, Any]) -> None:
-    print(render_report(summary))
-
-
-def save_metrics(summary: dict[str, Any], path: str) -> None:
-    """O6: persist metrics as JSON (metrics.py:153-170)."""
-    with open(path, "w") as f:
-        json.dump(summary, f, indent=2, default=str)

@@ -251,10 +251,6 @@ def load_table(
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {name: load_table(spark, name, sf_dir) for name in TABLE_NAMES}
-
-
 # --- pipeline row types (reference parity) ---
 
 # WikiArticle: /root/reference/src/ingestion/wiki_parser.py:21-44

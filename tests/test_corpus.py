@@ -259,17 +259,23 @@ def test_gram_builders_short_and_empty_docs(spark):
     """Docs shorter than n words take the whole-text-gram branch; the
     element_at-based gram construction must never evaluate its (ANSI-
     throwing) out-of-bounds lookups for them."""
+    from llm_training_data_pipeline_spark.functions.text import (
+        whitespace_tokens,
+        word_ngrams_from_tokens,
+    )
     from llm_training_data_pipeline_spark.operators.corpus import (
         boilerplate_ngrams,
-        word_ngram_set,
     )
 
     rows = [(1, "single"), (2, ""), (3, "two words"), (4, "three word doc")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    staged = df.select(
+        "doc_id", whitespace_tokens(F.lower(F.col("text"))).alias("_toks")
+    )
     got = {
         r["doc_id"]: sorted(r["g"])
-        for r in df.select(
-            "doc_id", word_ngram_set(F.col("text"), 2).alias("g")
+        for r in staged.select(
+            "doc_id", word_ngrams_from_tokens(F.col("_toks"), 2).alias("g")
         ).collect()
     }
     assert got[1] == ["single"]
@@ -1537,6 +1543,35 @@ def test_global_rank_matches_window_row_number(spark):
     }
     assert got == want
     assert sorted(got.values()) == list(range(1, 258))
+
+    # the weighted prefix sum under it: the exclusive running sum of a
+    # non-constant weight equals a single-partition window's, at any
+    # input partitioning, and its total is the plain sum
+    order = [F.col("grp").desc(), F.col("id").asc()]
+    want_sum = {
+        r["id"]: r["s"]
+        for r in df.withColumn(
+            "s",
+            F.coalesce(
+                F.sum(F.col("id") % 13).over(
+                    Window.orderBy(*order).rowsBetween(
+                        Window.unboundedPreceding, -1
+                    )
+                ),
+                F.lit(0),
+            ),
+        ).collect()
+    }
+    for n_parts in (1, 7, 16):
+        out, total = corpus._prefix_sum(
+            df.repartition(n_parts), order, F.col("id") % 13, "s"
+        )
+        assert {r["id"]: r["s"] for r in out.collect()} == want_sum
+        assert total == sum(i % 13 for i in range(257))
+    empty, total = corpus._prefix_sum(
+        spark.createDataFrame([], "id long, grp long"), order, F.lit(1), "s"
+    )
+    assert empty.count() == 0 and total == 0 and "s" in empty.columns
 
 
 def test_global_rank_empty_frame(spark):

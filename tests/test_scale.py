@@ -12,8 +12,8 @@ from llm_training_data_pipeline_spark.operators.asof import asof_join
 from llm_training_data_pipeline_spark.operators.scale import (
     bucketed_join_ready,
     salted_join,
-    write_bucketed,
 )
+from llm_training_data_pipeline_spark.sources.sinks import write_bucketed
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -35,8 +35,8 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
     a = spark.range(0, 1000).select(F.col("id").alias("k"), (F.col("id") * 2).alias("va"))
     b = spark.range(0, 1000).select(F.col("id").alias("k"), (F.col("id") * 3).alias("vb"))
-    write_bucketed(a, "t_buck_a", "k", num_buckets=4)
-    write_bucketed(b, "t_buck_b", "k", num_buckets=4)
+    write_bucketed(a, "t_buck_a", "k", n_buckets=4, sort_col="k")
+    write_bucketed(b, "t_buck_b", "k", n_buckets=4, sort_col="k")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -112,9 +112,10 @@ def test_bucketed_minhash_signature_table_joins_without_exchange(spark):
     cfg = MinHashConfig(num_perm=32, threshold=0.8, shingle_size=5, num_bands=8)
     sig = persist_minhash_signatures(docs, "t_sig_bucketed", cfg=cfg, num_buckets=4)
 
-    from llm_training_data_pipeline_spark.operators.scale import write_bucketed
-
-    write_bucketed(docs.select("doc_id", "lang"), "t_docs_bucketed", "doc_id", num_buckets=4)
+    write_bucketed(
+        docs.select("doc_id", "lang"), "t_docs_bucketed", "doc_id",
+        n_buckets=4, sort_col="doc_id",
+    )
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

@@ -55,9 +55,21 @@ def main() -> None:
         F.timestamp_seconds(F.lit(1700000000) + F.col("doc_id")).alias("ts"),
     )
     n_docs = docs.count()
+
+    def write_source(df, path):
+        """N files → N micro-batches with maxFilesPerTrigger=1. The files
+        are written concurrently and the file stream replays them in
+        modification-time order, so their mtimes are set in part-number
+        order: every run replays the same batches in the same order (the
+        exact row's watermark drops the same late rows each run)."""
+        df.repartition(args.batches).write.mode("overwrite").parquet(path)
+        parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
+        t0 = int(time.time()) - len(parts)
+        for i, f in enumerate(parts):
+            os.utime(os.path.join(path, f), (t0 + i, t0 + i))
+
     src = tempfile.mkdtemp(prefix="stream_bench_")
-    # N files → N micro-batches with maxFilesPerTrigger=1
-    docs.repartition(args.batches).write.mode("overwrite").parquet(src)
+    write_source(docs, src)
     schema = docs.schema
 
     def run(name, build, src_dir=None, src_schema=None):
@@ -71,7 +83,7 @@ def main() -> None:
         q = (
             out.writeStream.format("memory")
             .queryName(f"bench_{name}")
-            .outputMode("append" if name != "exact" else "append")
+            .outputMode("append")
             .start()
         )
         q.processAllAvailable()
@@ -272,7 +284,7 @@ def main() -> None:
         "source", F.concat(F.lit("s"), (F.col("doc_id") % 20).cast("string"))
     )
     src_cap = tempfile.mkdtemp(prefix="stream_bench_cap_")
-    capped_src.repartition(args.batches).write.mode("overwrite").parquet(src_cap)
+    write_source(capped_src, src_cap)
     results["source_cap"] = run(
         "cap",
         lambda s: streaming_source_cap(s, cap=max(n_docs // 40, 1)),
@@ -294,7 +306,7 @@ def main() -> None:
     n_emb = emb.count()
     lit_cb = collect_pq_codebook(pq_codebook(emb, m=8, ks=16))
     src_pq = tempfile.mkdtemp(prefix="stream_bench_pq_")
-    emb.repartition(args.batches).write.mode("overwrite").parquet(src_pq)
+    write_source(emb, src_pq)
     pq_res = run(
         "pq_encode",
         lambda s: s.select(
