@@ -54,7 +54,7 @@ def main() -> None:
     print("== 2. classifier gate (seed = doc_id % 5 != 0)")
     seed = docs.filter(F.col("doc_id") % 5 != 0)
     rest = docs.filter(F.col("doc_id") % 5 == 0)
-    preds = nb_classify(seed, rest, label_col="lang", materialize=True)
+    preds = nb_classify(seed, rest, label_col="lang")
     confident = preds.filter(F.col("margin") >= 0.5)
     n_scored, n_kept = preds.count(), confident.count()
     print(f"scored {n_scored}, kept {n_kept} above the margin gate")

@@ -58,7 +58,7 @@ def main() -> None:
     print(f"paragraph occurrences removed corpus-wide: {removed}")
 
     print("== 3. heavy hitters under a saturated CMS (width=8) ==")
-    heavy_hitters_report(docs, width=8, materialize=True).orderBy(
+    heavy_hitters_report(docs, width=8).orderBy(
         F.desc("exact_cnt")
     ).show(5)
 

@@ -45,11 +45,11 @@ def main() -> None:
     print(f"entropy gate (H >= 2.0 nats): {gated.count()} docs kept")
 
     print("top collocations of the kept corpus:")
-    for r in pmi_collocations(gated, k=5, min_count=3, materialize=True).collect():
+    for r in pmi_collocations(gated, k=5, min_count=3).collect():
         print(f"  {r['rank']:>2}  {r['w1']} {r['w2']}  (n={r['pair_count']}, pmi={r['pmi']})")
 
     emb = load_table(spark, "embeddings", sf_dir)
-    row = semdedup_stats(emb, threshold=0.35, n_clusters=16, materialize=True).collect()[0]
+    row = semdedup_stats(emb, threshold=0.35, n_clusters=16).collect()[0]
     print(
         "semdedup: "
         f"{row['n_vectors']} vectors, {row['n_dup_pairs']} in-cluster dup pairs, "
@@ -58,7 +58,7 @@ def main() -> None:
 
     from llm_training_data_pipeline_spark.operators.semdedup import semdedup_recall
 
-    rec = semdedup_recall(emb, threshold=0.35, n_clusters=16, materialize=True).collect()[0]
+    rec = semdedup_recall(emb, threshold=0.35, n_clusters=16).collect()[0]
     print(
         "semdedup recall audit: "
         f"{rec['n_caught']}/{rec['n_true_pairs']} true pairs caught "
@@ -73,7 +73,7 @@ def main() -> None:
         dsir_sample,
     )
 
-    lr = dsir_log_ratios_within(gated, F.col("lang") == "en", materialize=True)
+    lr = dsir_log_ratios_within(gated, F.col("lang") == "en")
     k = max(1, gated.count() // 2)
     picked = dsir_sample(gated, lr, k=k)
     n_en = (

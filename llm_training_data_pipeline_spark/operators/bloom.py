@@ -207,7 +207,6 @@ def bloom_incremental_new_docs(
     key_col: str = "digest",
     bloom: BloomFilter | None = None,
     num_bits: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Incremental dedup of a new batch against a historical corpus:
     keep exactly the new rows whose ``key_col`` is absent from the
@@ -217,10 +216,10 @@ def bloom_incremental_new_docs(
     reused across batches — the intended production shape) or let one
     be built at 1% FPR.
 
-    The flagged frame feeds two union branches; without ``materialize``
-    the batch scan and the k-hash probe would run twice (Spark has no
-    common-subexpression reuse across union branches), defeating the
-    point of the pre-filter — so the default checkpoints it once.
+    The flagged frame feeds two union branches; lazy, the batch scan and
+    the k-hash probe would run twice (Spark has no common-subexpression
+    reuse across union branches), defeating the point of the pre-filter
+    — so it is checkpointed once.
     """
     if bloom is None:
         n = corpus.count()
@@ -231,7 +230,7 @@ def bloom_incremental_new_docs(
     # streaming frames cannot checkpoint (and the microbatch engine
     # already materializes each batch once) — the lazy composition is
     # the only valid shape there
-    if materialize and not new_docs.isStreaming:
+    if not new_docs.isStreaming:
         flagged = flagged.localCheckpoint(eager=True)
     definitely_new = flagged.filter(~F.col("maybe_dup")).drop("maybe_dup")
     maybe = flagged.filter(F.col("maybe_dup")).drop("maybe_dup")

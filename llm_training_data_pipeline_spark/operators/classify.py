@@ -58,7 +58,6 @@ def nb_train(
     text_col: str = "text",
     label_col: str = "source",
     id_col: str = "doc_id",
-    materialize: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Fit the model; returns ``(model, classes)``.
 
@@ -67,26 +66,22 @@ def nb_train(
     ``classes``: (_label, prior_u, miss_u) — log prior and unseen-word
     log-likelihood, exact 1e-8 units. C rows; broadcast it at scoring.
 
-    The lazy plan re-reads the training corpus once per model branch
-    (word×class counts + class doc counts). ``materialize=True``
-    checkpoints the (word, class) count table once — the right call at
-    100 TB where the scan dominates; output is bit-identical (the repo's
-    multi-branch ``materialize`` convention, cf. ``bigram_surprisal``).
+    The (word, class) count table, the C-row class counts and the
+    classes table each feed two branches, so each is checkpointed once
+    and the training corpus is scanned once per aggregate.
     """
     words = _label_words(train, text_col, label_col)
     wc = words.groupBy("word", "_label").agg(F.count(F.lit(1)).alias("_nwc"))
-    if materialize:
-        wc = wc.localCheckpoint(eager=True)
+    wc = wc.localCheckpoint(eager=True)
     tc = wc.groupBy("_label").agg(F.sum("_nwc").alias("_tc"))
     vocab = wc.select("word").distinct().agg(F.count(F.lit(1)).alias("_v"))
+    # C rows, two consumers (the classes rows and, via the sum below,
+    # the doc total): checkpoint so the train-corpus class aggregate
+    # runs once
     tcounts = train.groupBy(F.col(label_col).alias("_label")).agg(
         F.count(F.lit(1)).alias("_nc")
     )
-    if materialize:
-        # C rows, two consumers (the classes rows and, via the sum
-        # below, the doc total): checkpoint so the train-corpus class
-        # aggregate runs once (r14)
-        tcounts = tcounts.localCheckpoint(eager=True)
+    tcounts = tcounts.localCheckpoint(eager=True)
     # n_docs = Σ_c n_c exactly (every train row lands in one label
     # group, NULL included) — derived from the C-row class-count table
     # instead of a second full train scan (r14)
@@ -121,13 +116,10 @@ def nb_train(
             .alias("miss_u"),
         )
     )
-    if materialize:
-        # `classes` is C rows but has TWO consumers (the model projection
-        # below and the scoring crossJoin) — lazy, each consumer re-runs
-        # the train-corpus class/doc aggregates under itself (the r14
-        # shared-small-table rule: materialize tiny multi-consumer
-        # intermediates; bit-identical output)
-        classes = classes.localCheckpoint(eager=True)
+    # `classes` is C rows but has TWO consumers (the model projection
+    # below and the scoring crossJoin) — lazy, each consumer would re-run
+    # the train-corpus class/doc aggregates under itself
+    classes = classes.localCheckpoint(eager=True)
     model = (
         wc.join(F.broadcast(classes.select("_label", "_tc", "_v", "miss_u")), on="_label")
         .select(
@@ -154,21 +146,16 @@ def nb_scores(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = False,
 ) -> DataFrame:
     """Per-(doc, class) log-score in exact 1e-8 units: (id, _label,
     score_u). One word-keyed join + two doc-keyed aggregates.
 
-    ``materialize=True`` checkpoints the slim (id, word, n) table —
-    it has two consumers (the doc totals and the model join), so lazy
-    it re-runs the test-corpus explode per branch; at 100 TB the scan
-    dominates and one slim write is strictly cheaper (bit-identical,
-    same convention as the train-side ``wc``)."""
+    The (id, word, n) table stays lazy although it has two consumers:
+    it is token-volume-sized, and checkpointing it cost more than the
+    duplicated explode it saves (measured +0.4 s at sf0.1)."""
     words = df.select(
         F.col(id_col), F.explode(whitespace_tokens(F.lower(F.col(text_col)))).alias("word")
     ).groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("_n"))
-    if materialize:
-        words = words.localCheckpoint(eager=True)
     doc_totals = words.groupBy(id_col).agg(F.sum("_n").alias("_total"))
     deltas = (
         words.join(model, on="word")
@@ -196,17 +183,12 @@ def nb_classify(
     text_col: str = "text",
     label_col: str = "source",
     id_col: str = "doc_id",
-    materialize: bool = False,
 ) -> DataFrame:
     """Train on ``train``, predict ``test``: (id, pred_label, score,
     margin). ``score`` is the winning log-likelihood and ``margin`` the
     gap to the runner-up class, both rounded 6dp from exact units.
     Ties break deterministically (score DESC, label ASC)."""
-    # nb_scores' materialize is NOT forwarded: the per-(id, word) table
-    # is token-volume-sized, and at bench scale checkpointing it costs
-    # more than the duplicated explode it saves (measured r14: +0.4s at
-    # sf0.1); a 100-TB caller whose scan dominates can pass it directly.
-    model, classes = nb_train(train, text_col, label_col, id_col, materialize)
+    model, classes = nb_train(train, text_col, label_col, id_col)
     scores = nb_scores(model, classes, test, text_col, id_col)
     w = Window.partitionBy(id_col).orderBy(F.desc("score_u"), F.asc("_label"))
     ranked = scores.select(

@@ -81,6 +81,10 @@ def unigram_surprisal(
     skewed ("the" alone is percents of the corpus) — the vocab side has
     ONE row per key, so AQE's skew-join split handles the hot partitions
     without replication (enabled in ``session.get_spark``).
+
+    ``materialize`` stays a parameter because callers disagree: the
+    pipeline's perplexity filter runs lazily, ``surprisal_terciles``
+    checkpoints the word table.
     """
     words = _lower_words(df, text_col, id_col)
     if materialize:
@@ -687,13 +691,12 @@ def remove_duplicated_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     window: int = 8,
-    keep_first_doc: bool = True,
 ) -> DataFrame:
     """Surgical exact-substring removal (the second half of Lee et al.
     2021): delete every token covered by a ``window``-token span that
     appears verbatim in >= 2 distinct documents, keeping the copy in the
-    smallest doc id when ``keep_first_doc`` (so shared text survives
-    exactly once in the corpus, deterministically).
+    smallest doc id (so shared text survives exactly once in the corpus,
+    deterministically).
 
     Output is whitespace-normalized (tokens re-joined with single
     spaces) — span surgery is inherently token-level; callers needing
@@ -721,13 +724,11 @@ def remove_duplicated_spans(
             F.encode(F.array_join(F.slice("_toks", F.col("_i"), w), " "), "UTF-8")
         ).alias("_wh"),
     )
-    agg = [F.count_distinct(F.col(id_col)).alias("_nd")]
-    if keep_first_doc:
-        agg.append(F.min(F.col(id_col)).alias("_keeper"))
-    dup = spans.groupBy("_wh").agg(*agg).filter(F.col("_nd") >= 2)
-    flagged = spans.join(dup, on="_wh")
-    if keep_first_doc:
-        flagged = flagged.filter(F.col(id_col) != F.col("_keeper"))
+    dup = spans.groupBy("_wh").agg(
+        F.count_distinct(F.col(id_col)).alias("_nd"),
+        F.min(F.col(id_col)).alias("_keeper"),
+    ).filter(F.col("_nd") >= 2)
+    flagged = spans.join(dup, on="_wh").filter(F.col(id_col) != F.col("_keeper"))
     covered = flagged.select(
         F.col(id_col),
         F.explode(F.sequence(F.col("_i"), F.col("_i") + F.lit(w - 1))).alias("_pos"),
@@ -883,7 +884,6 @@ def bigram_surprisal(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = False,
 ) -> DataFrame:
     """Per-document average surprisal under an interpolated corpus bigram
     LM: ``avg over adjacent pairs of -ln(0.75·c12/c1 + 0.25·(c2+1)/(N+V))``
@@ -903,19 +903,9 @@ def bigram_surprisal(
     skew split handles hot partitions without replication. Per-pair ln
     values are truncated to exact 1e-8 units and summed as longs — no
     float-sum order dependence.
-
-    The lazy plan reads the corpus once per model branch (pairs, bigram
-    model, two unigram joins — up to 5 scans). ``materialize=True``
-    checkpoints the exploded pair and word tables once, cutting it to 2
-    corpus scans — the right call at 100 TB where the scan dominates;
-    output is bit-identical (pinned in tests). Default stays lazy so
-    the oracle-replayed query remains a pure expression tree.
     """
     pairs = _doc_bigrams(df, text_col, id_col)
     words = _lower_words(df, text_col, id_col)
-    if materialize:
-        pairs = pairs.localCheckpoint(eager=True)
-        words = words.localCheckpoint(eager=True)
     bmodel = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n12"))
     uni = _count_words(words)
     totals = uni.agg(F.sum("n").alias("_total"), F.count(F.lit(1)).alias("_v"))
@@ -1061,7 +1051,6 @@ def tfidf_top_terms(
     k: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = False,
 ) -> DataFrame:
     """Top-k characteristic terms per document by TF-IDF — the standard
     corpus-keyword signal (topic tagging, mixture diagnostics, building
@@ -1082,10 +1071,6 @@ def tfidf_top_terms(
         .groupBy(id_col, "word")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
-    if materialize:
-        # tf feeds three branches (docfreq, doc count, the score join) —
-        # checkpoint it once and the corpus is scanned once, not thrice
-        tf = tf.localCheckpoint(eager=True)
     docfreq = tf.groupBy("word").agg(
         F.count(F.lit(1)).cast("long").alias("df_docs")
     )
@@ -1194,15 +1179,12 @@ def apply_mixture_plan(
     text_col: str = "text",
     id_col: str = "doc_id",
     source_col: str = "source",
-    materialize: bool = False,
 ) -> DataFrame:
     """Doc-level application of ``mixture_epoch_plan``: every document
     gets ``floor(epochs)`` copies plus one more for a deterministic
     ``frac(epochs)`` share of ids (the pure-arithmetic ``sample_key`` in
     1e-4 buckets) — so each source's expected token contribution matches
-    its target. Returns (id, source, n_copies) with n_copies > 0;
-    ``materialize=True`` explodes to one row per copy with a ``copy``
-    index (the actual training-input shape).
+    its target. Returns (id, source, n_copies) with n_copies > 0.
 
     The plan side is tiny (one row per source) and broadcast — the doc
     side is a single scan with no shuffle.
@@ -1216,7 +1198,7 @@ def apply_mixture_plan(
         whole
         + F.when(sample_key(F.col(id_col), 10_000) < frac_units, 1).otherwise(0)
     ).cast("long")
-    out = (
+    return (
         df.join(F.broadcast(plan), on=source_col)
         .select(
             F.col(id_col),
@@ -1225,13 +1207,6 @@ def apply_mixture_plan(
         )
         .filter(F.col("n_copies") > 0)
     )
-    if materialize:
-        return out.select(
-            id_col,
-            source_col,
-            F.explode(F.expr("sequence(1L, n_copies)")).alias("copy"),
-        )
-    return out
 
 
 # ---------------------------------------------------------------------
@@ -1433,7 +1408,6 @@ def source_vocab_overlap(
     df: DataFrame,
     text_col: str = "text",
     source_col: str = "source",
-    materialize: bool = False,
 ) -> DataFrame:
     """Pairwise vocabulary Jaccard between sources — the quick answer to
     "are these two crawls basically the same corpus?" before any
@@ -1454,9 +1428,6 @@ def source_vocab_overlap(
         )
         .distinct()
     )
-    if materialize:
-        # sv feeds sizes + both join sides — checkpoint for one scan
-        sv = sv.localCheckpoint(eager=True)
     sizes = sv.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("vocab"))
     a = sv.select(F.col("src").alias("src_a"), "word")
     b = sv.select(F.col("src").alias("src_b"), "word")
@@ -1705,7 +1676,6 @@ def pmi_collocations(
     k: int = 50,
     min_count: int = 5,
     text_col: str = "text",
-    materialize: bool = False,
 ) -> DataFrame:
     """Top-k adjacent-word collocations by pointwise mutual information —
     the standard multi-word-expression signal (tokenizer vocab design,
@@ -1727,14 +1697,11 @@ def pmi_collocations(
     """
     toks = df.select(whitespace_tokens(F.lower(F.col(text_col))).alias("_ws"))
     uni = toks.select(F.explode("_ws").alias("w"))
+    # uc feeds three branches (nu, both word joins) and bc feeds two
+    # (nb, the scored join) — checkpoint the two count tables once so
+    # the corpus is scanned + tokenized twice total, not five times
     uc = uni.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    if materialize:
-        # uc feeds three branches (nu, both word joins) and bc feeds two
-        # (nb, the scored join) — checkpoint the two count tables once so
-        # the corpus is scanned + tokenized twice total, not five times
-        # (same opt-in contract as tfidf_top_terms/unigram_surprisal;
-        # bit-identical output, pinned in tests)
-        uc = uc.localCheckpoint(eager=True)
+    uc = uc.localCheckpoint(eager=True)
     nu = uc.agg(F.sum("c").cast("long").alias("_nu"))
     pairs = toks.select(
         F.explode(
@@ -1749,9 +1716,8 @@ def pmi_collocations(
         pairs.select("p.w1", "p.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("long").alias("c_ab"))
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        bc = bc.localCheckpoint(eager=True)
     nb = bc.agg(F.sum("c_ab").cast("long").alias("_nb"))
     a = uc.select(F.col("w").alias("w1"), F.col("c").alias("_ca"))
     b = uc.select(F.col("w").alias("w2"), F.col("c").alias("_cb"))
@@ -1957,7 +1923,6 @@ def surprisal_terciles(
     by: str = "lang",
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = False,
 ) -> DataFrame:
     """CCNet's head/middle/tail split (Wenzek et al. 2020): bucket each
     document by which per-``by``-group tercile its LM surprisal falls
@@ -1977,7 +1942,7 @@ def surprisal_terciles(
     per-group boundary row broadcasts back. Zero-word docs carry no LM
     evidence and are excluded, as in ``unigram_surprisal``.
     """
-    s = unigram_surprisal(df, text_col, id_col, materialize=materialize)
+    s = unigram_surprisal(df, text_col, id_col, materialize=True)
     scored = s.join(df.select(F.col(id_col), F.col(by)), on=id_col)
     bounds = scored.groupBy(by).agg(
         F.percentile("avg_surprisal", F.lit(1.0 / 3)).alias("_t1"),
@@ -2201,7 +2166,6 @@ def dsir_doc_bucket_counts(
     text_col: str = "text",
     id_col: str = "doc_id",
     num_buckets: int = 10_000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Shared DSIR feature table: ``(id, _t, bucket, n)`` — per-document
     hashed-feature counts with the target flag, ONE tokenize+md5 pass.
@@ -2238,7 +2202,7 @@ def dsir_doc_bucket_counts(
             )
         ).alias("f"),
     ).filter(F.col("f").isNotNull())
-    counts = (
+    return (
         feats.select(
             id_col,
             "_t",
@@ -2246,10 +2210,8 @@ def dsir_doc_bucket_counts(
         )
         .groupBy(id_col, "_t", "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        counts = counts.localCheckpoint(eager=True)
-    return counts
 
 
 def dsir_log_ratios_within(
@@ -2258,7 +2220,6 @@ def dsir_log_ratios_within(
     text_col: str = "text",
     id_col: str = "doc_id",
     num_buckets: int = 10_000,
-    materialize: bool = False,
     doc_counts: DataFrame | None = None,
 ) -> DataFrame:
     """``dsir_log_ratios`` for the common case where the target corpus
@@ -2326,13 +2287,11 @@ def dsir_log_ratios_within(
                 .alias("c_t"),
             )
         )
-    if materialize:
-        # counts (≤num_buckets rows) feeds BOTH the totals scalar and the
-        # ratio select, and the downstream broadcast boundary blocks
-        # exchange reuse — checkpoint once so the feature-hash pass (the
-        # dominant cost) runs once, not per branch (bit-identical output,
-        # same opt-in contract as unigram_surprisal/pmi_collocations)
-        counts = counts.localCheckpoint(eager=True)
+    # counts (≤num_buckets rows) feeds BOTH the totals scalar and the
+    # ratio select, and the downstream broadcast boundary blocks
+    # exchange reuse — checkpoint once so the feature-hash pass (the
+    # dominant cost) runs once, not per branch
+    counts = counts.localCheckpoint(eager=True)
     tot = counts.agg(
         F.sum("c_r").cast("long").alias("_nr"), F.sum("c_t").cast("long").alias("_nt")
     )
@@ -2927,7 +2886,6 @@ def bm25_topk(
     b_hundredths: int = 75,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = False,
 ) -> DataFrame:
     """Top-k documents for a keyword query by Okapi BM25 — the standard
     retrieval-curation primitive (pull the docs most *about* a topic out
@@ -2990,9 +2948,7 @@ def bm25_topk(
             .alias(f"_tf_{i}")
             for i, t in enumerate(term_list)
         ],
-    )
-    if materialize:
-        doc_tf = doc_tf.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     corpus_stats = doc_tf.agg(
         F.count(F.lit(1)).cast("long").alias("_n"),
         F.sum("dl").cast("long").alias("_t"),
@@ -3079,7 +3035,6 @@ def source_unigram_kl(
     text_col: str = "text",
     id_col: str = "doc_id",
     source_col: str = "source",
-    materialize: bool = False,
 ) -> DataFrame:
     """Per-source KL divergence from the corpus-wide unigram
     distribution — the standard "how far does this source's vocabulary
@@ -3105,15 +3060,13 @@ def source_unigram_kl(
         F.col(source_col).alias("source"),
         F.explode(whitespace_tokens(F.lower(F.col(text_col)))).alias("word"),
     )
+    # csw (slim (source, word, count) rows) feeds THREE consumers —
+    # cw, the grand total via cw, and the per_word join — each of which
+    # would otherwise inline the corpus explode + aggregate under itself
     csw = words.groupBy("source", "word").agg(
         F.count(F.lit(1)).cast("long").alias("c_sw")
     )
-    if materialize:
-        # csw (slim (source, word, count) rows) feeds THREE consumers —
-        # cw, the grand total via cw, and the per_word join — each of
-        # which otherwise inlines the corpus explode + aggregate under
-        # itself (r14 shared-table rule; bit-identical output)
-        csw = csw.localCheckpoint(eager=True)
+    csw = csw.localCheckpoint(eager=True)
     cw = csw.groupBy("word").agg(F.sum("c_sw").cast("long").alias("c_w"))
     tot = cw.agg(F.sum("c_w").cast("long").alias("_t"))
 
@@ -3229,7 +3182,6 @@ def doremi_mixture_step(
     clip_nats_milli: int = 2000,
     strata_col: str = "source",
     text_col: str = "text",
-    materialize: bool = False,
 ) -> DataFrame:
     """One DoReMi-style exponentiated-gradient step over per-source
     excess surprisal (Xie et al. 2023, Domain Reweighting with Minimax
@@ -3278,13 +3230,10 @@ def doremi_mixture_step(
     docs = df.groupBy(F.col(strata_col).alias("stratum")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
-    per_src = per_src.join(docs, on="stratum")
-    if materialize:
-        # per_src is ONE slim row per stratum but has two consumers (the
-        # corpus-total aggregate and the crossJoin below) — lazy, each
-        # consumer re-runs the corpus explode + vocab join under itself
-        # (r14 shared-small-table rule; bit-identical output)
-        per_src = per_src.localCheckpoint(eager=True)
+    # per_src is ONE slim row per stratum but has two consumers (the
+    # corpus-total aggregate and the crossJoin below) — lazy, each
+    # consumer would re-run the corpus explode + vocab join under itself
+    per_src = per_src.join(docs, on="stratum").localCheckpoint(eager=True)
     corp = per_src.agg(
         F.sum("n_words").cast("decimal(38,0)").alias("_nc"),
         F.sum("_sln").cast("decimal(38,0)").alias("_sc"),

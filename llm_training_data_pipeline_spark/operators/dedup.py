@@ -966,7 +966,6 @@ def embedding_near_dup_pairs(
     dim: int = 64,
     seed: int = 42,
     num_tables: int = 1,
-    allow_cross_join: bool = False,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Cosine near-dup pairs over an embedding column.
@@ -984,9 +983,7 @@ def embedding_near_dup_pairs(
     carry identical rounded cosines and collapse via DISTINCT.
 
     With ``block_col``: blocked equi-join (quadratic within a block —
-    the oracle-parity anchor). ``allow_cross_join=True`` restores the
-    exhaustive all-pairs form for tiny inputs; without it, an unblocked
-    call never plans a CartesianProduct.
+    the oracle-parity anchor). No call plans a CartesianProduct.
 
     ``max_bucket_size`` (VERDICT r13 #6 — the minhash band-cap
     treatment): deterministically keep only the ``max_bucket_size``
@@ -999,8 +996,8 @@ def embedding_near_dup_pairs(
     ``embedding_cap_recall`` measures exactly this). Rank-filter form
     so Spark plans WindowGroupLimit (no single-task funnel on a hot
     bucket; pinned in test_plan_shape). Only applies to the LSH-bucket
-    path (ignored under ``block_col``/``allow_cross_join``, which exist
-    for oracle parity on tiny inputs).
+    path (ignored under ``block_col``, which exists for oracle parity on
+    tiny inputs).
 
     Vectors are cast to DOUBLE before arithmetic so results are
     bit-stable across engines, and norms are STAGED per row before the
@@ -1016,7 +1013,7 @@ def embedding_near_dup_pairs(
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
     ).withColumn("_n", l2_norm(F.col("_v")))
     multi_table = False
-    if block_col is None and not allow_cross_join:
+    if block_col is None:
         from llm_training_data_pipeline_spark.operators.similarity import (
             _hyperplanes,
             lsh_bucket,
@@ -1063,8 +1060,6 @@ def embedding_near_dup_pairs(
     a, b = vecs.alias("a"), vecs.alias("b")
     if block_col:
         joined = a.join(b, on=[F.col(f"a.{block_col}") == F.col(f"b.{block_col}")])
-    elif allow_cross_join:
-        joined = a.crossJoin(b)
     elif multi_table:
         joined = a.join(
             b,

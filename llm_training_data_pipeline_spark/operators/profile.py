@@ -7,12 +7,10 @@ cluster-day. Both operators here are single-aggregate plans:
 
 - ``profile_table``: ONE aggregate pass computes rows / non-null /
   distinct / min / max for every requested column, then a ``stack``
-  rotates the 1-row result to one row per column. Exact ``countDistinct``
-  over k columns makes Catalyst expand the input k-fold before the
-  shuffle (the standard multi-distinct plan); ``exact=False`` swaps in
-  ``approx_count_distinct`` (HLL), which keeps the scan single-pass with
-  no expand — the right default at 100 TB, while the exact form is what
-  the DuckDB oracle replays.
+  rotates the 1-row result to one row per column. The distinct counts
+  are exact ``countDistinct`` — the form the DuckDB oracle replays;
+  over k columns Catalyst expands the input k-fold before the shuffle
+  (the standard multi-distinct plan).
 - ``numeric_histogram``: clamped equal-width bucketing — one hash
   aggregate on ≤ num_buckets keys, share computed against a broadcast
   1-row total with the repo's exact half-up 6dp integer rounding.
@@ -30,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def profile_table(df: DataFrame, cols: list[str], exact: bool = True) -> DataFrame:
+def profile_table(df: DataFrame, cols: list[str]) -> DataFrame:
     """Per-column profile: (column, n_rows, n_nonnull, n_distinct,
     min_value, max_value) — one aggregate pass over the table."""
     import re
@@ -41,12 +39,11 @@ def profile_table(df: DataFrame, cols: list[str], exact: bool = True) -> DataFra
                 f"profile_table: column name {c!r} is not a plain "
                 "identifier; alias it first (names reach a SQL expr)"
             )
-    nd = F.countDistinct if exact else F.approx_count_distinct
     aggs = [F.count(F.lit(1)).alias("_rows")]
     for c in cols:
         aggs += [
             F.count(F.col(c)).alias(f"_nn_{c}"),
-            nd(F.col(c)).alias(f"_nd_{c}"),
+            F.countDistinct(F.col(c)).alias(f"_nd_{c}"),
             F.min(F.col(c)).cast("string").alias(f"_min_{c}"),
             F.max(F.col(c)).cast("string").alias(f"_max_{c}"),
         ]

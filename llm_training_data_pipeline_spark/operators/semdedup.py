@@ -109,6 +109,10 @@ def assign_clusters(
     ``max(struct(cos, -cluster, ...))`` aggregate whose partials
     collapse map-side, so the shuffle is one row per vector — NOT the
     k-per-vector window a row_number ranking would ship.
+
+    ``materialize`` stays a parameter because callers disagree: the pair
+    scans read the assignment on both join sides and checkpoint it, while
+    ``kmeans_refine``'s intermediate rounds have one consumer and stay lazy.
     """
     if centroids is None:
         centroids = seed_centroids(df, n_clusters, vec_col, id_col)
@@ -130,12 +134,8 @@ def assign_clusters(
         F.col("_m.n").alias("_n"),
     )
     if materialize:
-        # the pair scan consumes `assigned` on BOTH join sides (and the
-        # stats query adds a third branch) — checkpoint once so the
-        # expensive step (k-way broadcast expansion + per-vector argmax
-        # over every embedding) runs once, not per branch (same opt-in
-        # contract as tfidf_top_terms/pmi_collocations; bit-identical
-        # output, pinned in tests)
+        # the k-way broadcast expansion + per-vector argmax over every
+        # embedding then runs once, not once per consuming branch
         assigned = assigned.localCheckpoint(eager=True)
     return assigned
 
@@ -232,7 +232,6 @@ def semdedup_pairs(
     n_clusters: int | str = "auto",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    materialize: bool = False,
 ) -> DataFrame:
     """Within-cluster near-duplicate pairs: ``(cluster, a_id, b_id,
     cosine)`` with ``a_id < b_id`` and rounded cosine >= threshold.
@@ -244,7 +243,7 @@ def semdedup_pairs(
     makes; raise n_clusters for cost, lower it for recall).
     """
     assigned = assign_clusters(
-        df, centroids, n_clusters, vec_col, id_col, materialize=materialize
+        df, centroids, n_clusters, vec_col, id_col, materialize=True
     )
     return pairs_from_assignment(assigned, threshold, id_col)
 
@@ -293,7 +292,6 @@ def semdedup_stats(
     n_clusters: int | str = "auto",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    materialize: bool = False,
 ) -> DataFrame:
     """One-row retention report of the min-id-winner SemDeDup policy.
 
@@ -302,9 +300,7 @@ def semdedup_stats(
     the exact/MinHash dedups use); ``retention`` is the exact integer
     ratio rounded to 4 decimals.
     """
-    pairs = semdedup_pairs(
-        df, threshold, centroids, n_clusters, vec_col, id_col, materialize=materialize
-    )
+    pairs = semdedup_pairs(df, threshold, centroids, n_clusters, vec_col, id_col)
     total = df.agg(F.count(F.lit(1)).cast("long").alias("n_vectors"))
     dropped = pairs.agg(
         F.count(F.lit(1)).cast("long").alias("n_dup_pairs"),
@@ -335,7 +331,6 @@ def semdedup_recall(
     n_clusters: int | str = "auto",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    materialize: bool = False,
 ) -> DataFrame:
     """One-row recall audit of the within-cluster approximation: what
     fraction of ALL pairs with cosine >= threshold does the clustered
@@ -370,7 +365,7 @@ def semdedup_recall(
         .localCheckpoint(eager=True)
     )
     caught = semdedup_pairs(
-        df, threshold, centroids, n_clusters, vec_col, id_col, materialize=materialize
+        df, threshold, centroids, n_clusters, vec_col, id_col
     ).select("a_id", "b_id")
     joined = truth.join(caught, on=["a_id", "b_id"], how="left_semi")
     totals = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true_pairs"))
@@ -394,7 +389,6 @@ def semdedup_against(
     n_clusters: int | str = "auto",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    materialize: bool = False,
 ) -> DataFrame:
     """Incremental semantic dedup: keep the ``new`` vectors that are NOT
     within ``threshold`` cosine of any ``corpus`` vector sharing their
@@ -411,14 +405,15 @@ def semdedup_against(
     Returns ``(id, cluster)`` for surviving new vectors.
     """
     if centroids is None:
+        # the k-row centroid table feeds BOTH assignment broadcasts;
+        # lazy, each broadcast build would re-run the seed sort-limit
+        # over the corpus
         centroids = seed_centroids(corpus, n_clusters, vec_col, id_col)
-        if materialize:
-            # the k-row centroid table feeds BOTH assignment broadcasts;
-            # lazy, each broadcast build re-runs the seed sort-limit over
-            # the corpus (r14 shared-small-table rule; bit-identical)
-            centroids = centroids.localCheckpoint(eager=True)
-    an = assign_clusters(new, centroids, n_clusters, vec_col, id_col, materialize)
-    ac = assign_clusters(corpus, centroids, n_clusters, vec_col, id_col, materialize)
+        centroids = centroids.localCheckpoint(eager=True)
+    an = assign_clusters(new, centroids, n_clusters, vec_col, id_col, materialize=True)
+    ac = assign_clusters(
+        corpus, centroids, n_clusters, vec_col, id_col, materialize=True
+    )
     n_side = an.select(
         "cluster",
         F.col(id_col).alias("_nid"),
@@ -456,7 +451,6 @@ def cluster_balanced_sample(
     n_clusters: int | str = "auto",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    materialize: bool = False,
 ) -> DataFrame:
     """Cluster-balanced diversity sampling: cap each embedding cluster
     at ``max(1, floor(sqrt(|cluster|)))`` members, keeping the vectors
@@ -480,8 +474,7 @@ def cluster_balanced_sample(
     Σ sqrt(|c|) ≤ sqrt(k·n) — sublinear in the corpus.
     """
     centroids = seed_centroids(df, n_clusters, vec_col, id_col)
-    assigned = assign_clusters(df, centroids, vec_col=vec_col, id_col=id_col,
-                               materialize=materialize)
+    assigned = assign_clusters(df, centroids, vec_col=vec_col, id_col=id_col)
     cs = F.when((F.col("_n") == 0) | (F.col("_cn") == 0), F.lit(0.0)).otherwise(
         dot_product(F.col("_v"), F.col("_cv")) / (F.col("_n") * F.col("_cn"))
     )
@@ -566,7 +559,6 @@ def semdedup_threshold_sweep(
     n_clusters: int | str = "auto",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    materialize: bool = False,
 ) -> DataFrame:
     """Retention-vs-threshold sensitivity in ONE pair pass: the
     within-cluster pairs are computed once at the loosest threshold and
@@ -576,8 +568,8 @@ def semdedup_threshold_sweep(
     first thing a curation run does; paying Σ|cluster|² once matters.
     """
     ts = sorted(set(float(t) for t in thresholds))
-    pairs = semdedup_pairs(
-        df, min(ts), centroids, n_clusters, vec_col, id_col, materialize=materialize
+    pairs = pairs_from_assignment(
+        assign_clusters(df, centroids, n_clusters, vec_col, id_col), min(ts), id_col
     )
     th = pairs.sparkSession.range(1).select(
         F.explode(F.array(*[F.lit(t) for t in ts])).alias("threshold")

@@ -681,7 +681,7 @@ def hybrid_rrf_topk(
     """
     from llm_training_data_pipeline_spark.operators.corpus import bm25_topk
 
-    text = bm25_topk(docs, terms=terms, k=k_each, materialize=True).select(
+    text = bm25_topk(docs, terms=terms, k=k_each).select(
         F.col("doc_id").alias("id"), F.col("rank").alias("text_rank")
     )
     qs = emb.filter(F.col("vec_id") == query_id)

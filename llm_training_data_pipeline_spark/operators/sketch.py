@@ -95,20 +95,12 @@ def heavy_hitters_report(
     top_k: int = 20,
     depth: int = 4,
     width: int = 1024,
-    materialize: bool = False,
 ) -> DataFrame:
     """The falsifiable-accuracy report: exact top-k words vs their CMS
     estimates, with the never-undercount + bounded-overcount contract as
     a hash-checked boolean. ``(word, exact_cnt, est_cnt,
-    overestimate_cnt, bound_ok)``.
-
-    ``materialize=True`` checkpoints the count table once — it feeds
-    three branches (sketch, top-k, total), so the lazy plan scans +
-    tokenizes the corpus three times (same opt-in contract as
-    pmi_collocations/tfidf_top_terms; bit-identical output)."""
+    overestimate_cnt, bound_ok)``."""
     counts = word_counts(df, text_col)
-    if materialize:
-        counts = counts.localCheckpoint(eager=True)
     sketch = cms_sketch(counts, depth, width)
     topk = counts.orderBy(F.desc("cnt"), F.asc("word")).limit(top_k)
     est = cms_estimate(

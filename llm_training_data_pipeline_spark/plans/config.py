@@ -21,7 +21,6 @@ DEFAULT_CONFIG: dict[str, Any] = {
     },
     "ingestion": {"source": "simplewiki", "max_articles": None},
     "cleaning": {
-        "remove_wiki_markup": True,
         "remove_urls": True,
         "remove_emails": True,
         "remove_citations": True,

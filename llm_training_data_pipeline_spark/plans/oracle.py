@@ -2865,7 +2865,7 @@ def duplicated_span_stats_sql(window: int = 8) -> str:
 
 
 def remove_duplicated_spans_sql(window: int = 8) -> str:
-    """Mirror of corpus.remove_duplicated_spans (keep_first_doc=True):
+    """Mirror of corpus.remove_duplicated_spans:
     tokens covered by a cross-document duplicated window are deleted
     everywhere except in the smallest doc id; rebuild is order-stable
     (list(... ORDER BY pos) ↔ sort_array(collect_list(struct)))."""

@@ -498,11 +498,7 @@ def build_pipeline(
         cond = F.col("lang") == target_lang
         counts = corpus.dsir_doc_bucket_counts(df, cond, num_buckets=buckets)
         lr = corpus.dsir_log_ratios_within(
-            df,
-            cond,
-            num_buckets=buckets,
-            materialize=True,
-            doc_counts=counts,
+            df, cond, num_buckets=buckets, doc_counts=counts
         )
         k = max(1, int(df.count() * frac))
         keep = corpus.dsir_sample(

@@ -2086,9 +2086,7 @@ def q_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with the former per-pass unigram/bigram union branches)
     cond = F.col("lang") == "en"
     counts = corpus.dsir_doc_bucket_counts(docs, cond)
-    lr = corpus.dsir_log_ratios_within(
-        docs, cond, materialize=True, doc_counts=counts
-    )
+    lr = corpus.dsir_log_ratios_within(docs, cond, doc_counts=counts)
     return corpus.with_dsir_score(docs, lr, doc_counts=counts)
 
 
@@ -2104,9 +2102,7 @@ def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared feature pass, as in dsir_scores (r14)
     cond = F.col("lang") == "en"
     counts = corpus.dsir_doc_bucket_counts(docs, cond)
-    lr = corpus.dsir_log_ratios_within(
-        docs, cond, materialize=True, doc_counts=counts
-    )
+    lr = corpus.dsir_log_ratios_within(docs, cond, doc_counts=counts)
     return corpus.dsir_sample(docs, lr, k=docs.count() // 4, doc_counts=counts)
 
 
@@ -3360,7 +3356,7 @@ def q_nb_classify_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     train = docs.filter(F.col("doc_id") % 5 != 0)
     test = docs.filter(F.col("doc_id") % 5 == 0)
-    return nb_classify(train, test, label_col="lang", materialize=True)
+    return nb_classify(train, test, label_col="lang")
 
 
 @register("interval_overlap_stats", oracle.interval_overlap_sql())
@@ -3813,9 +3809,7 @@ def q_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     so this default-config query IS the 100-TB configuration."""
     from llm_training_data_pipeline_spark.operators import semdedup
 
-    return semdedup.semdedup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.35, materialize=True
-    )
+    return semdedup.semdedup_pairs(_t(spark, sf_dir, "embeddings"), threshold=0.35)
 
 
 @register("semdedup_pairs_scaled", oracle.semdedup_pairs_scaled_sql(threshold=0.35))
@@ -3832,9 +3826,7 @@ def q_semdedup_pairs_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     k = semdedup.scaled_k(emb.count())
-    return semdedup.semdedup_pairs(
-        emb, threshold=0.35, n_clusters=k, materialize=True
-    )
+    return semdedup.semdedup_pairs(emb, threshold=0.35, n_clusters=k)
 
 
 @register(
@@ -3862,9 +3854,7 @@ def q_semdedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     r8 auto-k default (k = scaled_k(count))."""
     from llm_training_data_pipeline_spark.operators import semdedup
 
-    return semdedup.semdedup_stats(
-        _t(spark, sf_dir, "embeddings"), threshold=0.35, materialize=True
-    )
+    return semdedup.semdedup_stats(_t(spark, sf_dir, "embeddings"), threshold=0.35)
 
 
 @register("pmi_collocations", oracle.pmi_collocations_sql(k=50, min_count=5))
@@ -3875,9 +3865,7 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking on 1e-6 truncated units so order never drifts."""
     from llm_training_data_pipeline_spark.operators.corpus import pmi_collocations
 
-    return pmi_collocations(
-        _t(spark, sf_dir, "documents"), k=50, min_count=5, materialize=True
-    )
+    return pmi_collocations(_t(spark, sf_dir, "documents"), k=50, min_count=5)
 
 
 @register("char_entropy_stats", oracle.char_entropy_sql())
@@ -3915,9 +3903,7 @@ def q_semdedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     r8 auto-k default (recall trades against the linear-cost k ∝ n)."""
     from llm_training_data_pipeline_spark.operators import semdedup
 
-    return semdedup.semdedup_recall(
-        _t(spark, sf_dir, "embeddings"), threshold=0.35, materialize=True
-    )
+    return semdedup.semdedup_recall(_t(spark, sf_dir, "embeddings"), threshold=0.35)
 
 
 @register(
@@ -3968,7 +3954,6 @@ def q_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") >= 250),
         emb.filter(F.col("vec_id") < 250),
         threshold=0.35,
-        materialize=True,
     )
 
 
@@ -3979,9 +3964,7 @@ def q_surprisal_terciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-thirds' curation split, on the engine's unigram surprisal."""
     from llm_training_data_pipeline_spark.operators.corpus import surprisal_terciles
 
-    return surprisal_terciles(
-        _t(spark, sf_dir, "documents"), by="lang", materialize=True
-    )
+    return surprisal_terciles(_t(spark, sf_dir, "documents"), by="lang")
 
 
 @register("span_corrupt_sample", oracle.span_corrupt_sql(rate=0.5, span_len=10))
@@ -4502,7 +4485,6 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         terms=["vector", "stream", "window"],
         k=10,
-        materialize=True,
     )
 
 
@@ -4528,7 +4510,7 @@ def q_source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly in decimal(38,0) (corpus.source_unigram_kl)."""
     from llm_training_data_pipeline_spark.operators.corpus import source_unigram_kl
 
-    return source_unigram_kl(_t(spark, sf_dir, "documents"), materialize=True)
+    return source_unigram_kl(_t(spark, sf_dir, "documents"))
 
 
 @register("wet_ingestion_demo", None)
@@ -4975,7 +4957,7 @@ def q_doremi_mixture_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         doremi_mixture_step,
     )
 
-    return doremi_mixture_step(_t(spark, sf_dir, "documents"), materialize=True)
+    return doremi_mixture_step(_t(spark, sf_dir, "documents"))
 
 
 @register("pack_boundaries", oracle.pack_boundaries_sql(budget_tokens=256))

@@ -204,9 +204,7 @@ def read_wiki_dump(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def parse_articles(
-    raw: DataFrame, *, remove_markup: bool = True, min_chars: int = MIN_ARTICLE_CHARS
-) -> DataFrame:
+def parse_articles(raw: DataFrame, *, min_chars: int = MIN_ARTICLE_CHARS) -> DataFrame:
     """S5 projection + filters → WikiArticle-shaped DataFrame.
 
     Output schema: title, text, page_id, ns, redirect (+word_count,
@@ -229,8 +227,7 @@ def parse_articles(
                 text_field = "revision.text._VALUE"
         except Exception:
             pass
-    raw_text = F.col(text_field).cast("string")
-    text = strip_wiki_markup(raw_text) if remove_markup else raw_text
+    text = strip_wiki_markup(F.col(text_field).cast("string"))
 
     out = (
         raw.select(
@@ -251,14 +248,14 @@ def parse_articles(
 
 
 def parse_wikipedia(
-    spark: SparkSession, path: str, max_articles: int | None = None, remove_markup: bool = True
+    spark: SparkSession, path: str, max_articles: int | None = None
 ) -> DataFrame:
     """Convenience wrapper mirroring parse_wikipedia (wiki_parser.py:296-311).
 
     ``max_articles`` maps to ``limit`` (O2) — Catalyst short-circuits the
     scan instead of the reference's generator break (wiki_parser.py:122-124).
     """
-    df = parse_articles(read_wiki_dump(spark, path), remove_markup=remove_markup)
+    df = parse_articles(read_wiki_dump(spark, path))
     return df.limit(max_articles) if max_articles else df
 
 

@@ -593,9 +593,6 @@ def test_apply_mixture_plan_copies_and_materialize(spark):
     # 250 budget / 100 available = 2.5 epochs → expected total copies 50
     total = sum(copies.values())
     assert 45 <= total <= 55
-    mat = corpus.apply_mixture_plan(df, {}, 250, materialize=True)
-    assert mat.count() == total
-    assert mat.filter(F.col("copy") > 3).count() == 0
 
 
 def test_apply_mixture_plan_deterministic(spark):
@@ -670,34 +667,17 @@ def test_source_vocab_overlap_identical_sources(spark):
     assert r["jaccard"] == 1.0
 
 
-def test_bigram_surprisal_materialized_bit_identical(spark):
-    from tests.conftest import SF_DIR
-
-    from llm_training_data_pipeline_spark.schemas import load_table
-
-    docs = load_table(spark, "documents", SF_DIR)
-    lazy = sorted(map(tuple, corpus.bigram_surprisal(docs).collect()))
-    mat = sorted(map(tuple, corpus.bigram_surprisal(docs, materialize=True).collect()))
-    assert lazy == mat
-
-
 def test_materialize_options_bit_identical(spark):
-    """materialize=True must never change a result — only the scan
-    count (unigram surprisal, TF-IDF, vocab overlap)."""
+    """unigram_surprisal's materialize=True (the surprisal_terciles path)
+    must never change a result — only the scan count."""
     from tests.conftest import SF_DIR
 
     from llm_training_data_pipeline_spark.schemas import load_table
 
     docs = load_table(spark, "documents", SF_DIR)
-    for fn, kw in (
-        (corpus.unigram_surprisal, {}),
-        (corpus.tfidf_top_terms, {"k": 2}),
-        (corpus.source_vocab_overlap, {}),
-        (corpus.pmi_collocations, {"k": 10, "min_count": 2}),
-    ):
-        lazy = sorted(map(tuple, fn(docs, **kw).collect()))
-        mat = sorted(map(tuple, fn(docs, materialize=True, **kw).collect()))
-        assert lazy == mat, fn.__name__
+    lazy = sorted(map(tuple, corpus.unigram_surprisal(docs).collect()))
+    mat = sorted(map(tuple, corpus.unigram_surprisal(docs, materialize=True).collect()))
+    assert lazy == mat
 
 
 def test_shard_assignment_balance_and_partition_invariance(spark):
@@ -903,7 +883,7 @@ def test_pmi_collocations_matches_oracle(spark, ddb):
     from tests.conftest import SF_DIR, assert_df_matches_oracle
 
     docs = load_table(spark, "documents", SF_DIR)
-    got = corpus.pmi_collocations(docs, k=50, min_count=5, materialize=True)
+    got = corpus.pmi_collocations(docs, k=50, min_count=5)
     assert_df_matches_oracle(got, ddb, oracle.pmi_collocations_sql(k=50, min_count=5))
 
 
@@ -1083,7 +1063,7 @@ def test_dsir_within_equals_two_corpus_ratios(spark):
     docs = load_table(spark, "documents", SF_DIR).filter(F.col("doc_id") < 200)
     cond = F.col("lang") == "en"
     two = corpus.dsir_log_ratios(docs, docs.filter(cond))
-    one = corpus.dsir_log_ratios_within(docs, cond, materialize=True)
+    one = corpus.dsir_log_ratios_within(docs, cond)
     assert sorted(map(tuple, one.collect())) == sorted(map(tuple, two.collect()))
 
 
@@ -1097,7 +1077,7 @@ def test_dsir_scores_favor_target_distribution(spark):
     from tests.conftest import SF_DIR
 
     docs = load_table(spark, "documents", SF_DIR)
-    lr = corpus.dsir_log_ratios_within(docs, F.col("lang") == "en", materialize=True)
+    lr = corpus.dsir_log_ratios_within(docs, F.col("lang") == "en")
     scored = corpus.with_dsir_score(docs, lr).join(
         docs.select("doc_id", "lang"), on="doc_id"
     )
@@ -1121,7 +1101,7 @@ def test_dsir_sample_is_deterministic_and_sized(spark):
     from tests.conftest import SF_DIR
 
     docs = load_table(spark, "documents", SF_DIR)
-    lr = corpus.dsir_log_ratios_within(docs, F.col("lang") == "en", materialize=True)
+    lr = corpus.dsir_log_ratios_within(docs, F.col("lang") == "en")
     a = corpus.dsir_sample(docs, lr, k=50).collect()
     b = corpus.dsir_sample(docs, lr, k=50).collect()
     assert len(a) == 50 and sorted(map(tuple, a)) == sorted(map(tuple, b))

@@ -22,6 +22,11 @@ def test_config_dot_paths(tmp_path):
     assert cfg2.get("quality.min_words") == 5
     assert cfg2.get("cleaning.min_length_chars") == 10
     assert cfg2.get("tokenization.vocab_size") == 32_000  # defaults survive
+    # a key the engine no longer reads still loads (and changes nothing)
+    p.write_text("cleaning:\n  remove_wiki_markup: false\n")
+    cfg3 = PipelineConfig.load(str(p))
+    assert cfg3.get("cleaning.remove_wiki_markup") is False
+    assert cfg3.get("cleaning.min_length_chars") == 100
 
 
 def test_run_pipeline_end_to_end(spark, tmp_path):

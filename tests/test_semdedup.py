@@ -95,12 +95,17 @@ def test_custom_centroids_df(spark):
 
 
 def test_pair_join_is_equi_join_no_cartesian(spark):
+    # read every execution: the centroid fan-out runs inside the eager
+    # assignment checkpoint, the pair scan in the final collect
+    from tools.driver_mimic import last_execution_id, plan_nodes_since
+
     emb = load_table(spark, "embeddings", SF_DIR)
-    df = semdedup.semdedup_pairs(emb)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
+    before = last_execution_id(spark)
+    semdedup.semdedup_pairs(emb).collect()
+    nodes = plan_nodes_since(spark, before)
+    assert not any(d.startswith("CartesianProduct") for d in nodes)
     # centroid fan-out is a broadcast, the pair scan an equi hash join
-    assert "Broadcast" in plan
+    assert any(d.startswith("Broadcast") for d in nodes)
 
 
 def test_stats_empty_corpus_yields_null_retention(spark):
@@ -109,13 +114,6 @@ def test_stats_empty_corpus_yields_null_retention(spark):
     emb = _emb(spark, []).filter("vec_id IS NOT NULL")
     row = semdedup.semdedup_stats(emb).collect()[0]
     assert row["n_vectors"] == 0 and row["retention"] is None
-
-
-def test_materialize_bit_identical(spark):
-    emb = load_table(spark, "embeddings", SF_DIR)
-    lazy = sorted(map(tuple, semdedup.semdedup_pairs(emb).collect()))
-    mat = sorted(map(tuple, semdedup.semdedup_pairs(emb, materialize=True).collect()))
-    assert lazy == mat
 
 
 def test_recall_matches_oracle_and_floors(spark, ddb):

@@ -2,13 +2,15 @@
 at sf0.01 against its DuckDB oracle, canonicalizing with pandas sort_values
 (the exact step that failed on raw ARRAY columns in round 1).
 
-Also a global plan audit: every query's executed plan is checked for
-CartesianProduct (status CARTESIAN — a scale bug, even if values match)
-and for WindowExec nodes with an EMPTY partitionSpec whose input is not
-limit-bounded (status GLOBAL_WINDOW — every row crosses one task; the
-r9 judge found three such sites, this check pins the class out), and
-its Exchange count is recorded, so a lost broadcast or a new
-accidental shuffle is visible in the sweep diff round-over-round.
+Also a global plan audit: every SQL execution a query starts — the eager
+localCheckpoints run while its frame is built as well as the final
+collect — is checked for CartesianProduct (status CARTESIAN — a scale
+bug, even if values match), and the shuffle Exchanges of all of them are
+counted, so a lost broadcast or a new accidental shuffle is visible in
+the sweep diff round-over-round even behind a checkpoint. The final
+plan is also checked for WindowExec nodes with an EMPTY partitionSpec
+whose input is not limit-bounded (status GLOBAL_WINDOW — every row
+crosses one task; this check pins that class out).
 The session runs with ``spark.sql.codegen.fallback=false``, so a query
 whose whole-stage code fails to compile errors (a red row) instead of
 silently falling back to interpreted execution.
@@ -165,6 +167,64 @@ def unbounded_global_windows(jplan, plan_str: str | None = None) -> int:
     return hits
 
 
+# All-executions plan audit ----------------------------------------
+#
+# Work an eager localCheckpoint ran is gone from the final plan (it
+# reads the checkpointed RDD), so the audit reads the plan graph of
+# every SQL execution from the session's status store instead. The
+# graph holds AQE's final plan once per node (a reused exchange is an
+# edge, not a node); ``physicalPlanDescription`` would list the initial
+# and the final plan and count every node twice.
+
+_SHUFFLE_EXCHANGE = re.compile(r"Exchange (hash|range|Single)")
+
+
+def _drained_status_store(spark):
+    # the store is fed by the async listener bus; drain it first
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore()
+
+
+def last_execution_id(spark) -> int:
+    """Id of the newest SQL execution of the session (-1 if none) — take
+    it before building a query, then pass it to ``plan_nodes_since``."""
+    store = _drained_status_store(spark)
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+
+def plan_nodes_since(spark, after_id: int) -> list[str]:
+    """``desc()`` of every plan node of every SQL execution newer than
+    ``after_id``, e.g. ``Exchange hashpartitioning(k#1L, 8), …`` or
+    ``CartesianProduct``."""
+    store = _drained_status_store(spark)
+    n = store.executionsCount()
+    # executionsList is ordered by id and the store drops its oldest
+    # entries, so read a growing window off the tail until it reaches
+    # back past after_id
+    m = 16
+    while True:
+        tail = store.executionsList(max(0, n - m), m)
+        ids = [tail.apply(i).executionId() for i in range(tail.size())]
+        if not ids or ids[0] <= after_id or m >= n:
+            break
+        m *= 4
+    descs: list[str] = []
+    for eid in ids:
+        if eid > after_id:
+            nodes = store.planGraph(eid).allNodes()
+            descs += [nodes.apply(j).desc() for j in range(nodes.size())]
+    return descs
+
+
+def plan_node_counts(nodes: list[str]) -> tuple[int, int]:
+    """(CartesianProduct nodes, shuffle Exchange nodes) in ``nodes``.
+    Broadcast exchanges are not shuffles and are not counted."""
+    cartesians = sum(d.startswith("CartesianProduct") for d in nodes)
+    exchanges = sum(bool(_SHUFFLE_EXCHANGE.match(d)) for d in nodes)
+    return cartesians, exchanges
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     name_filter = set(sys.argv[2:])
@@ -198,23 +258,22 @@ def main() -> int:
             sql = overrides[name]
         t0 = time.time()
         try:
+            before = last_execution_id(spark)
             df = fn(spark, sf_dir)
             sp = df.toPandas()
-            # global plan audit, captured AFTER execution so AQE's FINAL
-            # adaptive plan is what gets audited (the pre-execution string
-            # is the static estimate — a runtime broadcast demotion would
-            # be invisible in it). A CartesianProduct anywhere in the
+            # global plan audit over every execution the query started,
+            # read AFTER execution so AQE's FINAL adaptive plans are what
+            # gets audited (a runtime broadcast demotion is invisible in
+            # the static estimate). A CartesianProduct anywhere in the
             # suite is a scale bug (broadcast-scalar cross joins compile
             # to BroadcastNestedLoopJoin, which is fine); exchanges counts
-            # SHUFFLE exchanges only (hash/range/single partitioning), not
-            # BroadcastExchange/ReusedExchange, so the number is the
-            # round-over-round shuffle signal.
+            # SHUFFLE exchanges only, so the number is the round-over-round
+            # shuffle signal.
+            cartesians, exchanges = plan_node_counts(
+                plan_nodes_since(spark, before)
+            )
             jplan = df._jdf.queryExecution().executedPlan()
             plan = jplan.toString()
-            cartesians = plan.count("CartesianProduct")
-            exchanges = len(
-                re.findall(r"\bExchange (hash|range|Single)", plan)
-            )
             if cartesians:
                 results[name] = {"status": "CARTESIAN", "cartesians": cartesians,
                                  "sec": round(time.time() - t0, 1)}
